@@ -39,8 +39,9 @@ object ShuffleBytes {
     * bus. Retried stage attempts would double-count the attempt-0
     * writes; in local mode attempt 0 is the only one that runs to
     * completion. Extracted r16: this block had been hand-copied into
-    * each pricing tool (IvfPrice/BpePrice/PqDev) and the copies had
-    * already drifted once (the r15 median fix) — one copy, one fix. */
+    * each pricing tool (IvfPrice/BpePrice and the since-removed PqDev)
+    * and the copies had already drifted once (the r15 median fix) — one
+    * copy, one fix. */
   def measureStages(spark: org.apache.spark.sql.SparkSession)(
       thunk: => Unit): StageTotals = {
     // Quiesce BEFORE attaching: the async bus may still hold stage

@@ -1437,7 +1437,7 @@ object Dedup {
     // arrays are already sort_array'd (the prefix slice needs the global
     // order), so the count needs no hashing and no materialized
     // intersection array. Result-identical to size(array_intersect) on
-    // sorted distinct inputs (pinned in StringsSpec); a DevProbe stage
+    // sorted distinct inputs (pinned in DedupSpec); a DevProbe stage
     // breakdown attributed ~2.5 s of this query's 4.4 s to
     // array_intersect alone (verify joins with arrays attached but no
     // intersect: 1.08 s; with array_intersect: 3.65 s).

@@ -152,7 +152,7 @@ object Similarity {
   /** Prepare a query batch — any (vec_id, embedding) frame — into the
     * (q_id, q_emb, q_norm) shape every search core consumes. This is
     * the EXTERNAL-queries seam ([[bruteForceTopKFor]],
-    * [[pqIndexSearchFor]]): production searches arrive as query
+    * [[ivfSearch]]): production searches arrive as query
     * vectors, not corpus ids; the internal audit draw ([[queries]]) is
     * just this applied to the QueryK lowest-hash corpus rows. The
     * q_id keyspace is shared with vec_id, and every search excludes
@@ -181,7 +181,7 @@ object Similarity {
     bruteForceCore(base, None, None)
 
   /** FILTERED exact top-k — the ground truth for predicate-constrained
-    * vector search ([[pqIndexSearchWhere]]): rank only candidates whose
+    * vector search ([[ivfSearch]]): rank only candidates whose
     * vec_id appears in `allowed`, with the query draw UNCHANGED (the
     * predicate constrains what may be retrieved, never who asks). The
     * filter is applied BEFORE ranking (pre-filter semantics — true
@@ -192,7 +192,7 @@ object Similarity {
     bruteForceCore(base, Some(allowed), None)
 
   /** Exact top-k for an EXTERNAL query batch (see [[prepQueries]]) —
-    * the serving-shape ground truth [[pqIndexSearchFor]] is spec'd
+    * the serving-shape ground truth [[ivfSearch]] is spec'd
     * against. */
   def bruteForceTopKFor(base: DataFrame, queryVecs: DataFrame,
                         allowed: Option[DataFrame] = None): DataFrame =
@@ -804,7 +804,7 @@ object Similarity {
       |    AS shift
       |FROM g ORDER BY dim""".stripMargin
 
-  // -- product quantization (PQ) ------------------------------------------
+  // -- compressed ANN: product (PQ) and scalar (SQ8) quantization ----------
 
   /** PQ parameters. `PqSub` subspaces split the embedding coordinate-wise;
     * each subspace gets a `1 << PqBits`-entry codebook. At the test dim
@@ -862,7 +862,7 @@ object Similarity {
       // one explode, one hash aggregate over ≤ sub·codes groups
       val entries = books.zipWithIndex.map { case (book, m) =>
         val x = expr(s"slice(embedding, ${m * subDim + 1}, $subDim)")
-        val dists = transform(bookCol(book), c =>
+        val dists = transform(matrixLit(book), c =>
           call_function("vec_dot", c, c) -
             lit(2.0) * call_function("vec_dot", c, x))
         struct(lit(m).as("m"),
@@ -913,82 +913,354 @@ object Similarity {
     }.toArray
   }
 
-  /** Literal array<array<double>> column for one subspace's codebook. */
-  private def bookCol(book: Array[Array[Double]]): Column =
-    array(book.map(c => array(c.map(lit): _*)): _*)
+  /** Literal array<array<double>> column for a centroid set or one
+    * subspace's codebook. */
+  private def matrixLit(m: Array[Array[Double]]): Column =
+    array(m.map(c => array(c.map(lit): _*)): _*)
 
-  /** Encode vectors to PQ codes: per subspace, the 1-based index of the
-    * nearest codebook entry (same `c·c − 2x·c` argmin algebra and
-    * first-minimum tie-break as IVF assignment). Emits (vec_id, codes,
-    * recon_norm): subspaces are coordinate-disjoint, so the
-    * reconstruction's squared norm is exactly the SUM of the chosen
-    * entries' squared norms — computed here once per row from the
-    * codebook literals, never from the decoded vector.
-    *
-    * This is the compression: downstream the corpus is `sub` small codes
-    * + one double per vector instead of `dim` doubles — at (64-dim, 8
-    * subspaces) an 8× in-plan reduction, and a production sink packs the
-    * 4-bit codes 2-per-byte for 128×. The scoring join below ships THIS
-    * frame, not the embeddings. */
-  def pqEncode(e: DataFrame, books: Array[Array[Array[Double]]],
-               dim: Int): DataFrame = {
-    val sub = books.length
-    val subDim = dim / sub
-    val codeCols = books.zipWithIndex.map { case (book, m) =>
-      val x = expr(s"slice(embedding, ${m * subDim + 1}, $subDim)")
-      val dists = transform(bookCol(book), c =>
-        call_function("vec_dot", c, c) -
-          lit(2.0) * call_function("vec_dot", c, x))
-      array_position(dists, array_min(dists)).cast(IntegerType)
-    }
-    val normsq = books.zipWithIndex.map { case (book, m) =>
-      element_at(
-        array(book.map(c => lit(c.map(x => x * x).sum)): _*),
-        codeCols(m))
-    }.reduce(_ + _)
-    e.select(col("vec_id"), array(codeCols: _*).as("codes"),
-      sqrt(normsq).as("recon_norm"))
+  /** Pack 4-bit PQ codes two per byte — the STORED form of the coded
+    * corpus frame (the 64×-compression arithmetic in docs/SCALE.md
+    * assumes it): `sub` codes in [1, 16] become `sub/2` tinyints, high
+    * nibble first. Plain column algebra, parquet-storable, exactly
+    * invertible by [[pqUnpackCodes]] (round-trip spec through a real
+    * parquet write). */
+  def pqPackCodes(codes: Column, sub: Int = PqSub): Column = {
+    require(sub % 2 == 0, s"packing needs an even subspace count ($sub)")
+    transform(sequence(lit(0), lit(sub / 2 - 1)), i =>
+      ((element_at(codes, i * 2 + 1) - 1) * 16 +
+        (element_at(codes, i * 2 + 2) - 1) - 128).cast(ByteType))
   }
 
-  /** PQ ANN via asymmetric distance computation (ADC): queries keep their
-    * exact embedding; each corpus vector is scored against a query
-    * through a per-query lookup table — lut[m][code] = q_m · c — so a
-    * (query, vector) pair costs a `sub`-term table sum instead of a
-    * `dim`-term dot, over a corpus frame `dim/sub`× smaller. Approximate
-    * cosine = Σ lut[m][codes[m]] / (q_norm · recon_norm), exact on any
-    * vector whose subvectors coincide with codebook entries
-    * (spec-planted).
+  /** Inverse of [[pqPackCodes]]: `sub/2` tinyints back to `sub` 1-based
+    * codes. The stored byte is biased by −128 so the full 8-bit range
+    * fits the SIGNED tinyint parquet stores; unbias before the nibble
+    * split. */
+  def pqUnpackCodes(packed: Column, sub: Int = PqSub): Column =
+    transform(sequence(lit(1), lit(sub)), m => {
+      // integer ops only: >>1 is the floor-div byte index, >>4 / &15
+      // the nibble split (Spark's `/` on ints would go fractional)
+      val b = element_at(packed, shiftright(m + 1, 1))
+        .cast(IntegerType) + 128
+      when(pmod(m, lit(2)) === 1, shiftright(b, 4) + 1)
+        .otherwise(b.bitwiseAND(lit(15)) + 1)
+    })
+
+  // -- codecs: the per-family half of every compressed index ---------------
+
+  /** What a compressed index trains: PQ at a subspace count, or SQ8.
+    * Training runs on the bounded sample a build hands in — raw vectors
+    * for the flat top-k, residuals x − c_list for an IVF index. PQ codes
+    * pack two per byte, so an odd subspace count fails here, before any
+    * build work. `rotationSub` is the subspace count an OPQ pre-rotation
+    * balances variance across (SQ8 has no subspaces and takes the PQ
+    * default: the rotation is orthogonal, so it is valid for any codec). */
+  sealed trait Codec {
+    def train(sample: DataFrame, dim: Int): VectorCodec
+    private[operators] def rotationSub: Int
+  }
+  final case class Pq(subspaces: Int = PqSub) extends Codec {
+    require(subspaces % 2 == 0,
+      s"graft: PQ needs an even subspaces count (codes pack two per " +
+        s"byte), got $subspaces")
+    def train(sample: DataFrame, dim: Int): VectorCodec =
+      PqCodec(pqCodebooks(sample, dim, sub = subspaces))
+    private[operators] def rotationSub: Int = subspaces
+  }
+  case object Sq8 extends Codec {
+    /** Per-dimension grid from the bounded training sample: for each
+      * dimension, (lo, step) with 256 uniform levels spanning the
+      * sample's [min, max] — x̂_d = lo_d + code_d·step_d, code ∈
+      * [0, 255]. Values outside the sample's range CLAMP to the end
+      * levels (the standard trained-scalar-quantizer contract; FAISS
+      * ScalarQuantizer QT_8bit trains the same way). A constant dimension
+      * gets step 1 so the algebra stays finite (every value then codes
+      * to 0 and reconstructs at lo exactly). One bounded-sample
+      * aggregate, 2·dim doubles collected. */
+    def train(sample: DataFrame, dim: Int): VectorCodec = {
+      val rows = sample
+        .select(posexplode(col("embedding").cast(ArrayType(DoubleType))))
+        .toDF("pos", "v")
+        .groupBy("pos").agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
+        .collect()
+      require(rows.length == dim,
+        s"graft: SQ8 training saw ${rows.length} dimensions, expected $dim")
+      val lo = new Array[Double](dim)
+      val step = new Array[Double](dim)
+      rows.foreach { r =>
+        val d = r.getInt(0)
+        lo(d) = r.getDouble(1)
+        val span = r.getDouble(2) - r.getDouble(1)
+        step(d) = if (span > 0.0) span / 255.0 else 1.0
+      }
+      Sq8Codec(lo, step)
+    }
+    private[operators] def rotationSub: Int = PqSub
+  }
+
+  /** A trained codec — the ONLY family-specific code of the compressed
+    * indexes: how a vector (or residual) is coded, how a (query, coded
+    * row) pair is ADC-scored, and how the trained artifacts and codes
+    * are stored. Everything else — the flat top-k, IVF build, search,
+    * persistence, append, compaction and audits — runs once, over this
+    * interface.
+    *
+    * ADC shapes: PQ scores through a per-query lookup table —
+    * lut[m][code] = q_m · entry — so a pair costs a `sub`-term table sum
+    * over a corpus frame `dim/sub`× smaller; SQ8 reconstructs x̂ once
+    * per coded row BEFORE the query join and takes one dim-term dot (SQ8
+    * compresses storage and shuffle, not multiplies — FAISS's SQ
+    * contract). Under IVF, x̂ = c_list + decode(codes): PQ adds the
+    * centroid term q·c_list on the query side (`qc`), SQ8 folds c_list
+    * into x̂ on the coded side. */
+  sealed trait VectorCodec {
+    /** The `family` tag persisted in an index's `meta/`. */
+    def family: String
+    /** Codes of an array<double>-compatible vector column. */
+    private[operators] def codes(x: Column): Column
+    /** codes → the reconstruction x̂ (array<double>). */
+    private[operators] def decode(codes: Column): Column
+    /** ‖decode(codes)‖², in the codec's canonical fold order. */
+    protected def reconNormSq(codes: Column): Column =
+      aggregate(decode(codes), lit(0.0), (a, v) => a + v * v)
+    /** Encode a (vec_id, embedding) frame to (vec_id, codes, recon_norm)
+      * — the flat coded corpus; recon_norm is computed from the codes at
+      * encode time, so the ADC cosine is exact on any vector the codec
+      * reconstructs exactly (spec-planted). */
+    def encode(e: DataFrame): DataFrame =
+      e.select(col("vec_id"), codes(col("embedding")).as("codes"))
+        .withColumn("recon_norm", sqrt(reconNormSq(col("codes"))))
+    /** Query-side ADC columns; `centroid` is the probed list's centroid
+      * under IVF, None for the flat top-k. */
+    private[operators] def queryColumns(centroid: Option[Column]): Seq[Column]
+    /** Coded-side ADC columns; `centroid` is the row's list centroid under
+      * IVF, None for the flat top-k. */
+    private[operators] def codedColumns(centroid: Option[Column]): Seq[Column]
+    /** q · x̂ on a joined (query, coded) row. */
+    private[operators] def adcDot(ivf: Boolean): Column
+    /** The persisted codes column: its name, and the in-memory ↔ stored
+      * forms (both array<tinyint> on disk). */
+    private[operators] def storedCol: String
+    private[operators] def storeCodes(codes: Column): Column
+    private[operators] def loadCodes(stored: Column): Column
+    /** Codec integers the index `meta/` row carries after `dim`. */
+    private[operators] def metaInts: Seq[(String, Int)]
+    /** Persist the trained artifacts under the index path. */
+    private[operators] def write(spark: SparkSession, indexPath: String): Unit
+  }
+
+  /** PQ: `books` is [sub][code][subdim]; artifacts under `codebooks/`
+    * (m, code, entry), codes packed two per byte. */
+  final case class PqCodec(books: Array[Array[Array[Double]]])
+      extends VectorCodec {
+    def family: String = PqCodec.Family
+    private def sub = books.length
+    private def subDim = books(0)(0).length
+    private[operators] def codes(x: Column): Column =
+      array(books.zipWithIndex.map { case (book, m) =>
+        val xm = slice(x, m * subDim + 1, subDim)
+        val dists = transform(matrixLit(book), c =>
+          call_function("vec_dot", c, c) -
+            lit(2.0) * call_function("vec_dot", c, xm))
+        array_position(dists, array_min(dists)).cast(IntegerType)
+      }: _*)
+    private[operators] def decode(codes: Column): Column =
+      concat(books.zipWithIndex.map { case (book, m) =>
+        element_at(matrixLit(book), element_at(codes, m + 1))
+      }: _*)
+    // subspaces are coordinate-disjoint, so ‖x̂‖² is exactly the SUM of
+    // the chosen entries' squared norms — literals, never a decode
+    override protected def reconNormSq(codes: Column): Column =
+      books.zipWithIndex.map { case (book, m) =>
+        element_at(array(book.map(c => lit(c.map(x => x * x).sum)): _*),
+          element_at(codes, m + 1))
+      }.reduce(_ + _)
+    private[operators] def queryColumns(
+        centroid: Option[Column]): Seq[Column] =
+      array(books.zipWithIndex.map { case (book, m) =>
+        val qm = slice(col("q_emb"), m * subDim + 1, subDim)
+        array(book.map(c =>
+          call_function("vec_dot", qm, array(c.map(lit): _*))): _*)
+      }: _*).as("lut") +:
+        centroid.map(c => call_function("vec_dot", c, col("q_emb")).as("qc"))
+          .toSeq
+    private[operators] def codedColumns(
+        centroid: Option[Column]): Seq[Column] = Nil
+    private[operators] def adcDot(ivf: Boolean): Column = {
+      val terms = (1 to sub).map(m =>
+        element_at(element_at(col("lut"), m), element_at(col("codes"), m)))
+      if (ivf) terms.foldLeft(col("qc"))(_ + _) else terms.reduce(_ + _)
+    }
+    private[operators] def storedCol: String = "packed"
+    private[operators] def storeCodes(codes: Column): Column =
+      pqPackCodes(codes, sub)
+    private[operators] def loadCodes(stored: Column): Column =
+      pqUnpackCodes(stored, sub)
+    private[operators] def metaInts: Seq[(String, Int)] = Seq("sub" -> sub)
+    private[operators] def write(spark: SparkSession,
+                                 indexPath: String): Unit = {
+      import spark.implicits._
+      (for (m <- books.indices; c <- books(m).indices)
+        yield (m, c, books(m)(c).toSeq)).toSeq
+        .toDF("m", "code", "entry")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
+    }
+  }
+  object PqCodec {
+    val Family = "ivfadc"
+    private[operators] def read(spark: SparkSession, indexPath: String,
+                                sub: Int): PqCodec = {
+      val books = Array.ofDim[Array[Double]](sub, 1 << PqBits)
+      spark.read.parquet(s"$indexPath/codebooks").collect().foreach { r =>
+        books(r.getAs[Int]("m"))(r.getAs[Int]("code")) =
+          r.getAs[scala.collection.Seq[Double]]("entry").toArray
+      }
+      require(books.forall(_.forall(_ != null)),
+        s"graft: index at $indexPath is missing codebook entries")
+      PqCodec(books)
+    }
+  }
+
+  /** SQ8: a per-dimension (lo, step) grid; artifacts under `bounds/`
+    * (pos, lo, step), codes one biased byte (code − 128, the
+    * [[pqPackCodes]] storage idiom) per dimension, stored as they are. */
+  final case class Sq8Codec(lo: Array[Double], step: Array[Double])
+      extends VectorCodec {
+    def family: String = Sq8Codec.Family
+    private[operators] def codes(x: Column): Column = {
+      val loCol = array(lo.map(lit): _*)
+      val stepCol = array(step.map(lit): _*)
+      transform(sequence(lit(1), lit(lo.length)), i =>
+        (least(lit(255L), greatest(lit(0L),
+          floor((element_at(x, i) - element_at(loCol, i)) /
+            element_at(stepCol, i) + lit(0.5)))) - 128L).cast(ByteType))
+    }
+    private[operators] def decode(codes: Column): Column =
+      transform(codes, (c, i) =>
+        element_at(array(lo.map(lit): _*), i + 1) +
+          (c.cast(DoubleType) + lit(128.0)) *
+            element_at(array(step.map(lit): _*), i + 1))
+    private[operators] def queryColumns(
+        centroid: Option[Column]): Seq[Column] = Nil
+    private[operators] def codedColumns(
+        centroid: Option[Column]): Seq[Column] = {
+      val dec = decode(col("codes"))
+      Seq(centroid.fold(dec)(c => zip_with(c, dec, (a, b) => a + b))
+        .as("xhat"))
+    }
+    private[operators] def adcDot(ivf: Boolean): Column =
+      call_function("vec_dot", col("q_emb"), col("xhat"))
+    private[operators] def storedCol: String = "codes"
+    private[operators] def storeCodes(codes: Column): Column = codes
+    private[operators] def loadCodes(stored: Column): Column = stored
+    private[operators] def metaInts: Seq[(String, Int)] = Nil
+    private[operators] def write(spark: SparkSession,
+                                 indexPath: String): Unit = {
+      import spark.implicits._
+      lo.indices.map(d => (d, lo(d), step(d)))
+        .toDF("pos", "lo", "step")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/bounds")
+    }
+  }
+  object Sq8Codec {
+    val Family = "ivf_sq8"
+    private[operators] def read(spark: SparkSession, indexPath: String,
+                                dim: Int): Sq8Codec = {
+      val rows = spark.read.parquet(s"$indexPath/bounds").collect()
+      require(rows.length == dim &&
+          rows.map(_.getAs[Int]("pos")).toSet == (0 until dim).toSet,
+        s"graft: index at $indexPath has malformed bounds " +
+          s"(${rows.length} rows for dim $dim)")
+      val lo = new Array[Double](dim)
+      val step = new Array[Double](dim)
+      rows.foreach { r =>
+        val d = r.getAs[Int]("pos")
+        lo(d) = r.getAs[Double]("lo")
+        step(d) = r.getAs[Double]("step")
+      }
+      Sq8Codec(lo, step)
+    }
+  }
+
+  /** OPQ pre-rotation of a compressed index or flat top-k: none, the
+    * parametric eigenvalue allocation ([[opqRotation]]), or the
+    * non-parametric alternation ([[opqRotationNP]], which starts from
+    * the parametric one). */
+  sealed trait Rotation
+  object Rotation {
+    case object Off extends Rotation
+    case object Parametric extends Rotation
+    case object NonParametric extends Rotation
+  }
+
+  /** Train the requested rotation on the lowest-hash sample of the RAW
+    * corpus (None for [[Rotation.Off]]). */
+  private def trainRotation(base: DataFrame, dim: Int, codec: Codec,
+                            rotate: Rotation)
+      : Option[Array[Array[Double]]] = {
+    def sample = ivfTrainingSample(base, pqSampleK(1 << PqBits))
+    rotate match {
+      case Rotation.Off => None
+      case Rotation.Parametric =>
+        Some(opqRotation(sample, dim, codec.rotationSub))
+      case Rotation.NonParametric =>
+        Some(opqRotationNP(sample, dim, codec.rotationSub))
+    }
+  }
+
+  private def rotated(df: DataFrame,
+                      rotation: Option[Array[Array[Double]]]): DataFrame =
+    rotation.fold(df)(opqRotate(df, _))
+
+  /** Flat compressed ANN: every corpus vector coded, every (query, coded
+    * row) pair ADC-scored — queries keep their exact embedding (the
+    * asymmetry), the corpus frame carries codes + one double. Approximate
+    * cosine = q·x̂ / (q_norm · recon_norm). The codec is trained on the
+    * bounded lowest-hash sample; with a rotation the whole corpus is
+    * rotated first (codebooks/grid train on and codes quantize rotated
+    * vectors; orthogonality keeps every cosine).
     *
     * `rerank` > 0 re-scores the top `rerank` ADC candidates per query
-    * with the TRUE embeddings (one bounded equi-join back to the corpus —
-    * queries·rerank rows, never the corpus) and returns the exact-cosine
-    * top-k of that set — the standard PQ+rerank deployment shape.
-    * `rerank` = 0 returns pure-ADC ranks. The default 10·K width is
-    * measured, not guessed: recall@10 0.975 at sf0.01 (vs 0.800 at 4·K,
-    * 0.460 pure-ADC) for queries·100 exactly-rescored rows per sweep —
-    * see the PqDev knob table in the PqSub scaladoc.
-    *
-    * Scale shape: same two-stage skew-proof top-k as [[bruteForceTopK]];
-    * the broadcast query side carries the sub·codes-entry LUT built once
-    * per query row. Whole chain bit-deterministic (LCG sample, literal
-    * codebooks, first-minimum argmins, fixed-order LUT sum) — the spec's
-    * driver-side replica matches it EXACTLY, not approximately. */
-  def pqTopK(spark: SparkSession, dir: String,
-             rerank: Int = 10 * K, subspaces: Int = PqSub): DataFrame =
-    pqTopKOf(Tables.embeddings(spark, dir), rerank, subspaces)
+    * with the TRUE embeddings (one bounded equi-join back to the normed
+    * corpus — queries·rerank rows, never the corpus) and returns the
+    * exact-cosine top-k of that set; `rerank` = 0 returns pure-ADC ranks.
+    * The default 10·K width is measured, not guessed: PQ recall@10 0.975
+    * at sf0.01 (vs 0.800 at 4·K, 0.460 pure-ADC) — see the PqDev knob
+    * table in the PqSub scaladoc. Like [[bruteForceTopK]] this scores
+    * corpus × queries, so it serves corpora small enough to scan
+    * unpruned; at scale the list-pruned [[ivfSearch]] is the family's
+    * serving path. Whole chain bit-deterministic (LCG sample, literal
+    * artifacts, first-minimum argmins, fixed-order sums) — the spec's
+    * driver-side replicas match it EXACTLY. */
+  def flatTopKOf(base: DataFrame, codec: Codec = Pq(),
+                 rerank: Int = 10 * K,
+                 rotate: Rotation = Rotation.Off): DataFrame = {
+    val dim = dimOf(base)
+    val rb = rotated(base, trainRotation(base, dim, codec, rotate))
+    val e = withNorm(rb, dim).localCheckpoint(true)
+    val samp = ivfTrainingSample(e, pqSampleK(1 << PqBits))
+      .localCheckpoint(eager = true)
+    val vc = codec.train(samp, dim)
+    val coded = vc.encode(e)
+    val qs = queries(rb, dim)
+    val scored = coded.select(col("*") +: vc.codedColumns(None): _*)
+      .crossJoin(broadcast(qs.select(col("*") +: vc.queryColumns(None): _*)))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos_adc",
+        round(vc.adcDot(ivf = false) / (col("q_norm") * col("recon_norm")),
+          6))
+    topKWithRerank(scored, rerank, cand =>
+      score(cand.join(
+        e.select(col("vec_id"), col("embedding"), col("norm")), "vec_id")))
+  }
 
   /** The ONE two-stage skew-proof ADC top-width + bounded-exact-rerank
-    * block every compressed-ANN family runs (PQ flat, IVFADC search,
-    * SQ8 flat, IVF-SQ8 — r18 ADVICE: the window machinery was inlined
-    * per family, so a tie-break or width fix in one could silently
-    * miss the others). `scored` is the family's ADC-scored candidate
-    * frame — (q_id, q_emb, q_norm, vec_id, cos_adc, …) — and
-    * `rerankScore` maps the bounded ADC-top candidate set
-    * (queries×width rows of (q_id, q_emb, q_norm, vec_id)) to an
-    * exactly-scored frame (adds `cos`): each family supplies its own
-    * corpus view there — the flat families join their normed
-    * checkpoint; the IVF searches join the RAW corpus and rotate +
-    * norm only the bounded survivors. Stage shape: per-(query,
+    * block every compressed search runs (flat and IVF, either codec).
+    * `scored` is the ADC-scored candidate frame — (q_id, q_emb, q_norm,
+    * vec_id, cos_adc, …) — and `rerankScore` maps the bounded ADC-top
+    * candidate set (queries×width rows of (q_id, q_emb, q_norm, vec_id))
+    * to an exactly-scored frame (adds `cos`): the flat top-k joins its
+    * normed checkpoint; the IVF search joins the RAW corpus and rotates +
+    * norms only the bounded survivors. Stage shape: per-(query,
     * partition) heads first, so the global per-query sort sees
     * ≤ width·P rows, never n; with rerank ≤ 0 the ADC ranking IS the
     * answer (cos_adc published as cos); otherwise the exact rerank
@@ -1023,155 +1295,57 @@ object Similarity {
     ranked.orderBy("q_id", "rank")
   }
 
-  /** [[pqTopK]] over any (vec_id, embedding) frame — the `*Of` seam
-    * [[opqTopKOf]] composes with a rotated corpus and the specs plant
-    * against. */
-  def pqTopKOf(base: DataFrame,
-               rerank: Int = 10 * K, subspaces: Int = PqSub): DataFrame = {
-    val dim = dimOf(base)
-    val e = withNorm(base, dim).localCheckpoint(true)
-    val samp = ivfTrainingSample(e, pqSampleK(1 << PqBits))
-      .localCheckpoint(eager = true)
-    val books = pqCodebooks(samp, dim, sub = subspaces)
-    val sub = books.length
-    val subDim = dim / sub
-    val coded = pqEncode(e, books, dim)
-    // per-query LUT: lut[m][code] = dot(q subvector m, codebook entry)
-    val lutCol = array(books.zipWithIndex.map { case (book, m) =>
-      val qm = expr(s"slice(q_emb, ${m * subDim + 1}, $subDim)")
-      array(book.map(c =>
-        call_function("vec_dot", qm, array(c.map(lit): _*))): _*)
-    }: _*)
-    val qs = queries(base, dim).withColumn("lut", lutCol)
-    val adcDot = (1 to sub).map(m =>
-      element_at(element_at(col("lut"), m), element_at(col("codes"), m)))
-      .reduce(_ + _)
-    val scored = coded.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_adc",
-        round(adcDot / (col("q_norm") * col("recon_norm")), 6))
-    // exact re-score of the bounded candidate set: queries·width rows
-    // join back to the corpus ON vec_id — never a second corpus scan
-    // of pair width
-    topKWithRerank(scored, rerank, cand =>
-      score(cand.join(
-        e.select(col("vec_id"), col("embedding"), col("norm")), "vec_id")))
-  }
+  // -- IVF × codec: one index lifecycle (FAISS IVFADC / IVFScalarQuantizer)
 
-  /** Pack 4-bit PQ codes two per byte — the STORED form of the coded
-    * corpus frame (the 64×-compression arithmetic in docs/SCALE.md
-    * assumes it): `sub` codes in [1, 16] become `sub/2` tinyints, high
-    * nibble first. Plain column algebra, parquet-storable, exactly
-    * invertible by [[pqUnpackCodes]] (round-trip spec through a real
-    * parquet write). Production sinks this + `list_id` as the ANN
-    * index and unpacks at scan time. */
-  def pqPackCodes(codes: Column, sub: Int = PqSub): Column = {
-    require(sub % 2 == 0, s"packing needs an even subspace count ($sub)")
-    transform(sequence(lit(0), lit(sub / 2 - 1)), i =>
-      ((element_at(codes, i * 2 + 1) - 1) * 16 +
-        (element_at(codes, i * 2 + 2) - 1) - 128).cast(ByteType))
-  }
-
-  /** Inverse of [[pqPackCodes]]: `sub/2` tinyints back to `sub` 1-based
-    * codes. The stored byte is biased by −128 so the full 8-bit range
-    * fits the SIGNED tinyint parquet stores; unbias before the nibble
-    * split. */
-  def pqUnpackCodes(packed: Column, sub: Int = PqSub): Column =
-    transform(sequence(lit(1), lit(sub)), m => {
-      // integer ops only: >>1 is the floor-div byte index, >>4 / &15
-      // the nibble split (Spark's `/` on ints would go fractional)
-      val b = element_at(packed, shiftright(m + 1, 1))
-        .cast(IntegerType) + 128
-      when(pmod(m, lit(2)) === 1, shiftright(b, 4) + 1)
-        .otherwise(b.bitwiseAND(lit(15)) + 1)
-    })
-
-  /** IVF-PQ (the FAISS IVFADC composition — both halves already exist
-    * and are audited separately; this is the production 100 TB shape):
-    * the coarse quantizer PRUNES (a query ADC-scores only its probed
-    * lists' members, probes/lists → 0 under the √n laws), PQ COMPRESSES
-    * (the scored frame carries codes + one double, never embeddings),
-    * and a bounded exact rerank recovers ranking fidelity.
+  /** A built IVF index over a codec — everything a search needs EXCEPT the
+    * raw corpus (which only the exact-rerank join touches): the derived
+    * list count, the coarse centroids and the trained codec (bounded
+    * driver-side artifacts, the model-coefficient family), and the coded
+    * corpus frame (vec_id, list_id, codes, recon_norm — never
+    * embeddings). [[ivfBuild]] produces it in memory;
+    * [[indexBuild]]/[[indexLoad]] round-trip it through parquet so a
+    * deployment builds ONCE and searches MANY times without retraining.
     *
-    * PQ codebooks train on RESIDUALS (x − its centroid), the standard
-    * IVFADC refinement: residuals concentrate near 0 with far less
-    * structure than raw vectors, so a 16-entry codebook resolves them
-    * better. ADC algebra: x̂ = c_list + decode(codes), so
-    * dot(q, x̂) = dot(q, c_list) + Σ_m lut[m][code_m] — the centroid
-    * term comes from a per-query lists-length table, the residual term
-    * from the same per-query LUT as [[pqTopK]]; ‖x̂‖ is computed EXACTLY
-    * at encode time (decode + centroid add, one double per row), so the
-    * approximate cosine is exact whenever the residual lands on a
-    * codebook entry.
+    * `rotation` (present when built with a [[Rotation]]) is the OPQ
+    * pre-transform the WHOLE index lives behind — FAISS's
+    * `OPQMatrix,IVF…,PQ…` composition: the coarse quantizer, the codec
+    * and every stored code are in ROTATED coordinates, so the rotation
+    * travels with the index and [[ivfSearch]] applies it to queries and
+    * to the rerank corpus view. */
+  final case class IvfIndex(dim: Int, numLists: Int,
+                            centroids: Array[Array[Double]],
+                            codec: VectorCodec,
+                            coded: DataFrame,
+                            rotation: Option[Array[Array[Double]]] = None)
+
+  /** IVF × codec top-k: [[ivfBuild]] + [[ivfSearch]] over the corpus at
+    * `dir` — the coarse quantizer PRUNES (a query scores only its probed
+    * lists' members, probes/lists → 0 under the √n laws), the codec
+    * COMPRESSES (the scored frame carries codes + one double), and a
+    * bounded exact rerank recovers ranking fidelity. The cheap argument
+    * checks fail BEFORE the build trains anything.
     *
-    * Structural invariant (spec-asserted, mirroring [[ivfTopK]]'s):
-    * probing EVERY list with corpus-wide rerank reproduces
-    * [[bruteForceTopK]] ROW-FOR-ROW — assignment, coding, ADC ranking
-    * and rerank may lose candidates only through probe pruning and
-    * rerank truncation. Candidate pairs are structurally unique (one
-    * list per vector, distinct probed lists per query), so no
-    * defensive distinct — at probes·n/lists candidates per query the
-    * dedup shuffle [[ivfTopK]] pays would be the costlier stage here. */
-  def ivfPqTopK(spark: SparkSession, dir: String,
-                rerank: Int = 10 * K,
-                probesOverride: Option[Int] = None,
-                subspaces: Int = PqSub): DataFrame = {
-    // fail fast on the cheap argument checks BEFORE the build trains
-    // quantizer + codebooks and encodes the corpus (the search half
-    // re-validates, including the ≤ numLists bound only the built
-    // index knows)
-    require(rerank >= 1, s"IVFADC without rerank is not served (got $rerank)")
+    * Structural invariant (spec-asserted for both codecs, mirroring
+    * [[ivfTopK]]'s): probing EVERY list with corpus-wide rerank
+    * reproduces [[bruteForceTopK]] ROW-FOR-ROW — assignment, coding, ADC
+    * ranking and rerank may lose candidates only through probe pruning
+    * and rerank truncation. Candidate pairs are structurally unique (one
+    * list per vector, distinct probed lists per query), so no defensive
+    * distinct — at probes·n/lists candidates per query the dedup shuffle
+    * [[ivfTopK]] pays would be the costlier stage here. */
+  def ivfAdcTopK(spark: SparkSession, dir: String, codec: Codec = Pq(),
+                 rerank: Int = 10 * K,
+                 probesOverride: Option[Int] = None): DataFrame = {
+    require(rerank >= 1, s"graft: IVF search without rerank is not served " +
+      s"(got $rerank)")
     probesOverride.foreach(p =>
       require(p >= 1, s"probes must be >= 1 (got $p)"))
-    ivfPqSearch(spark, dir, ivfPqBuild(spark, dir, subspaces),
+    ivfSearch(Tables.embeddings(spark, dir), ivfBuild(spark, dir, codec),
       rerank, probesOverride)
   }
 
-  /** A built IVFADC index — everything a search needs EXCEPT the raw
-    * corpus (which only the exact-rerank join back to the source table
-    * touches): the derived parameters, the trained coarse centroids and
-    * residual codebooks (bounded driver-side artifacts, the model-
-    * coefficient family), and the coded corpus frame
-    * (vec_id, list_id, codes, recon_norm — `sub` small ints + one
-    * double per vector, never embeddings). [[ivfPqBuild]] produces it
-    * in memory; [[pqIndexBuild]]/[[pqIndexLoad]] round-trip it through
-    * parquet so a deployment builds ONCE and searches MANY times
-    * without retraining (the serving split [[pqIndexSearch]] runs).
-    *
-    * `rotation` (present when built with `rotate = true`) is the OPQ
-    * pre-transform the WHOLE index lives behind — FAISS's
-    * `OPQMatrix,IVF…,PQ…` composition: the coarse quantizer, the
-    * residual codebooks and every stored code are in ROTATED
-    * coordinates, so the rotation must travel with the index and be
-    * applied to queries (and the rerank corpus view) at search time —
-    * searching a rotated index with unrotated queries would score
-    * against the wrong grid everywhere. */
-  case class PqIndex(dim: Int, sub: Int, numLists: Int,
-                     centroids: Array[Array[Double]],
-                     books: Array[Array[Array[Double]]],
-                     coded: DataFrame,
-                     rotation: Option[Array[Array[Double]]] = None)
-
-  /** The training/encode half of [[ivfPqTopK]] (the build-once side of
-    * the serving split): derive the √n list count, train the coarse
-    * quantizer and the residual PQ codebooks on the one bounded
-    * lowest-hash sample, and encode the corpus — assignment, residual
-    * codes, EXACT reconstruction norm. Bit-deterministic end to end
-    * (LCG sample, literal codebooks, first-minimum argmins), so two
-    * builds over the same corpus produce identical artifacts and the
-    * row-for-row spec invariants gate the split exactly as they gated
-    * the fused form.
-    *
-    * `rotate = true` trains an [[opqRotation]] on the raw sample first
-    * and builds the ENTIRE index in rotated coordinates (coarse
-    * quantizer, residuals, codebooks, codes) — the FAISS
-    * OPQ-pretransform composition; the rotation rides in the returned
-    * index so the search half can rotate queries to match. */
   /** Nearest-centroid assignment — the ONE cents/argmin/cvec block
-    * every IVF build/encode path runs (extracted in the r19
-    * self-review: four inline copies meant a tie-break or cast fix
-    * applied to one could silently desynchronize a family's grid
-    * training from its corpus encode): adds (cents, dists, list_id,
+    * every IVF build/encode path runs: adds (cents, dists, list_id,
     * cvec) to a frame with an `embedding` column — first-minimum
     * argmin, 1-based LongType list_id. */
   private def assignToLists(df: DataFrame, cents: Column): DataFrame = df
@@ -1183,283 +1357,177 @@ object Similarity {
     .withColumn("cvec",
       element_at(col("cents"), col("list_id").cast(IntegerType)))
 
-  /** The residual projection x − c_list every residual-coded family
-    * trains and encodes on — as doubles, shared for the same
-    * one-definition reason. */
+  /** The residual projection x − c_list every IVF codec trains and
+    * encodes on, as doubles. */
   private def residualEmbedding: Column =
     zip_with(col("embedding"), col("cvec"), (a, b) => a - b)
       .cast(ArrayType(DoubleType))
 
-  def ivfPqBuild(spark: SparkSession, dir: String,
-                 subspaces: Int = PqSub,
-                 rotate: Boolean = false,
-                 rotateNP: Boolean = false): PqIndex = {
-    // one rotation per index: the NP alternation already STARTS from
-    // the parametric init internally, so "both" has no third meaning —
-    // fail loud rather than silently pick
-    require(!(rotate && rotateNP),
-      "graft: pick ONE rotation mode — rotate (parametric eigenvalue " +
-        "allocation) or rotateNP (non-parametric alternation)")
+  /** The training/encode half of the serving split: train the rotation
+    * (if any) on the raw sample and move the corpus into rotated
+    * coordinates, derive the √n list count, train the coarse quantizer
+    * and then the codec on the RESIDUALS of the one bounded lowest-hash
+    * sample (residuals concentrate near 0 with far less structure than
+    * raw vectors, so a 16-entry codebook or a 256-level grid resolves
+    * them better), and encode the corpus. Bit-deterministic end to end
+    * (LCG sample, literal artifacts, first-minimum argmins), so two
+    * builds over the same corpus produce identical artifacts. */
+  def ivfBuild(spark: SparkSession, dir: String, codec: Codec = Pq(),
+               rotate: Rotation = Rotation.Off): IvfIndex = {
     val base0 = Tables.embeddings(spark, dir)
-    val dim0 = dimOf(base0)
-    val rot =
-      if (rotate)
-        Some(opqRotation(
-          ivfTrainingSample(base0, pqSampleK(1 << PqBits)), dim0, subspaces))
-      else if (rotateNP)
-        Some(opqRotationNP(
-          ivfTrainingSample(base0, pqSampleK(1 << PqBits)), dim0, subspaces))
-      else None
-    val base = rot.map(opqRotate(base0, _)).getOrElse(base0)
-    val dim = dim0
-    val e = withNorm(base, dim).localCheckpoint(true)
+    val dim = dimOf(base0)
+    val rot = trainRotation(base0, dim, codec, rotate)
+    val e = withNorm(rotated(base0, rot), dim).localCheckpoint(true)
     val numLists = listsForCount(e.count())
     val samp = ivfTrainingSample(e,
         math.max(sampleKFor(numLists), pqSampleK(1 << PqBits)))
       .localCheckpoint(eager = true)
     val centroids = kmeansCentroids(samp, numLists, iters = 3)
-    val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    // residual training sample: x − its centroid, as doubles
-    val sampResid = assignToLists(samp, cents)
+    val sampResid = assignToLists(samp, matrixLit(centroids))
       .select(col("vec_id"), residualEmbedding.as("embedding"))
-    val books = pqCodebooks(sampResid, dim, sub = subspaces)
-    val coded = ivfPqEncode(e, centroids, books, dim)
-    PqIndex(dim, books.length, numLists, centroids, books, coded, rot)
+    val vc = codec.train(sampResid, dim)
+    IvfIndex(dim, numLists, centroids, vc, ivfEncode(e, centroids, vc), rot)
   }
 
   /** Encode a (vec_id, embedding) frame against FROZEN index artifacts —
-    * nearest-centroid assignment, residual PQ codes, EXACT
-    * reconstruction norm. Per-row deterministic given the artifacts:
-    * a vector encodes to the same coded row whether it was present at
-    * build time or handed in later, which is what makes
-    * [[pqIndexAppend]] exact rather than approximate. (The caller is
-    * expected to have applied the index's rotation, if any, to the
-    * frame — the artifacts live in rotated coordinates.) */
-  private[graft] def ivfPqEncode(e: DataFrame,
-                                 centroids: Array[Array[Double]],
-                                 books: Array[Array[Array[Double]]],
-                                 dim: Int): DataFrame = {
-    val sub = books.length
-    val subDim = dim / sub
-    val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    val assigned = assignToLists(e, cents)
-    // residual encode: list + residual codes + EXACT reconstruction norm
-    val resid = residualEmbedding
-    val codeCols = books.zipWithIndex.map { case (book, m) =>
-      val r = slice(resid, m * subDim + 1, subDim)
-      val dists = transform(bookCol(book), c =>
-        call_function("vec_dot", c, c) -
-          lit(2.0) * call_function("vec_dot", c, r))
-      array_position(dists, array_min(dists)).cast(IntegerType)
-    }
-    val decoded = concat(books.zipWithIndex.map { case (book, m) =>
-      element_at(bookCol(book), codeCols(m))
-    }: _*)
-    val xhat = zip_with(col("cvec"), decoded, (a, b) => a + b)
-    assigned
-      .select(col("vec_id"), col("list_id"),
-        array(codeCols: _*).as("codes"),
-        sqrt(call_function("vec_dot", xhat, xhat)).as("recon_norm"))
-  }
+    * nearest-centroid assignment, residual codes, EXACT reconstruction
+    * norm ‖c_list + decode(codes)‖ (fixed-order vec_dot). Per-row
+    * deterministic given the artifacts: a vector encodes to the same
+    * coded row whether it was present at build time or handed in later,
+    * which is what makes [[indexAppend]] exact rather than approximate.
+    * (The caller applies the index's rotation, if any, first.) */
+  private[graft] def ivfEncode(e: DataFrame,
+                               centroids: Array[Array[Double]],
+                               codec: VectorCodec): DataFrame =
+    assignToLists(e, matrixLit(centroids))
+      .withColumn("codes", codec.codes(residualEmbedding))
+      .withColumn("xhat", zip_with(col("cvec"), codec.decode(col("codes")),
+        (a, b) => a + b))
+      .select(col("vec_id"), col("list_id"), col("codes"),
+        sqrt(call_function("vec_dot", col("xhat"), col("xhat")))
+          .as("recon_norm"))
 
-  /** The probed-search half of [[ivfPqTopK]] (the search-many side):
-    * per query, probe the nearest lists, ADC-score the probed lists'
-    * CODES through the per-query centroid-dot table + residual LUT,
-    * two-stage top-width, bounded exact rerank against the source
-    * table. Works identically over an in-memory [[ivfPqBuild]] result
-    * and a [[pqIndexLoad]]-ed parquet index — the spec asserts the two
-    * are row-for-row equal.
+  /** THE probed search over an IVF index, in memory or loaded: per query,
+    * probe the nearest lists, ADC-score the probed lists' codes, two-stage
+    * top-width, bounded exact rerank against `base` (the current corpus —
+    * the build corpus, or build ∪ appended batches). Options:
+    *  - `allowed`: rank only candidates whose vec_id appears in this id
+    *    frame — PRE-filter semantics, the semi-join lands on the coded
+    *    frame BEFORE ranking (post-filtering an unfiltered top-k
+    *    under-fills k whenever a disallowed neighbor would have ranked);
+    *    all lists + corpus-wide rerank ≡ [[bruteForceTopKWhere]];
+    *  - `queryVecs`: an EXTERNAL (vec_id, embedding) query batch in RAW
+    *    coordinates (a rotated index rotates it) instead of the internal
+    *    lowest-hash draw over `base` — the serving shape; self-pairs
+    *    (vec_id = q_id) stay excluded, a no-op for disjoint id ranges
+    *    (see [[prepQueries]]).
     *
     * The probed list ids (≤ QueryK·probes values, bounded) are also
-    * collected and pushed as a STATIC `list_id IN (...)` filter under
-    * the join: semantically redundant with the equi-join, but on a
-    * persisted index partitioned by `list_id` it becomes a
-    * PartitionFilter at the scan — the coarse quantizer's pruning
-    * turned into file-level I/O pruning (spec-pinned), which is the
-    * entire point of an inverted file at 100 TB: a search READS only
-    * probes/lists of the index, it does not scan-and-drop. */
-  def ivfPqSearch(spark: SparkSession, dir: String, index: PqIndex,
-                  rerank: Int = 10 * K,
-                  probesOverride: Option[Int] = None): DataFrame =
-    ivfPqSearchCore(Tables.embeddings(spark, dir), index, rerank,
-      probesOverride, None, None)
-
-  /** FILTERED [[ivfPqSearch]]: rank only candidates whose vec_id
-    * appears in `allowed` — predicate-constrained vector search, the
-    * retrieval shape metadata-scoped RAG/curation queries actually run.
-    * PRE-filter semantics: the semi-join lands on the coded frame
-    * BEFORE ADC ranking, so the top-width pool and the rerank pool hold
-    * only allowed candidates (post-filtering an unfiltered top-k
-    * under-fills k whenever a disallowed neighbor would have ranked).
-    * Exactness inherits the structural invariant: all lists +
-    * corpus-wide rerank ≡ [[bruteForceTopKWhere]] row-for-row
-    * (spec-asserted); at the derived probe laws a highly selective
-    * predicate thins each probed list — the probe count is the recall
-    * knob there, same as unfiltered. */
-  def ivfPqSearchWhere(spark: SparkSession, dir: String, index: PqIndex,
-                       allowed: DataFrame,
-                       rerank: Int = 10 * K,
-                       probesOverride: Option[Int] = None): DataFrame =
-    ivfPqSearchCore(Tables.embeddings(spark, dir), index, rerank,
-      probesOverride, Some(allowed), None)
-
-  /** [[ivfPqSearch]] for an EXTERNAL query batch — the actual serving
-    * shape: queries arrive as (vec_id, embedding) vectors (RAW
-    * coordinates; a rotated index rotates them internally), not as
-    * corpus ids. The internal lowest-hash draw the audit surfaces use
-    * is just one such batch, and the spec asserts the two paths agree
-    * row-for-row when handed the same vectors. Self-pairs
-    * (vec_id = q_id) stay excluded — a no-op for disjoint id ranges
-    * (see [[prepQueries]]). `allowed` composes the metadata pre-filter
-    * of [[ivfPqSearchWhere]] with the external batch — query vector +
-    * predicate, the canonical RAG retrieval call. */
-  def ivfPqSearchFor(spark: SparkSession, dir: String, index: PqIndex,
-                     queryVecs: DataFrame,
-                     rerank: Int = 10 * K,
-                     probesOverride: Option[Int] = None,
-                     allowed: Option[DataFrame] = None): DataFrame =
-    ivfPqSearchCore(Tables.embeddings(spark, dir), index, rerank,
-      probesOverride, allowed, Some(queryVecs))
-
-  /** [[ivfPqSearchFor]] over any (vec_id, embedding) corpus frame — the
-    * `*Of` planting seam on the SERVING side: the rerank join and the
-    * self-exclusion read `base` instead of the parquet table, so a
-    * caller whose current corpus is "build corpus ∪ appended batches"
-    * (exactly what [[pqIndexRecallAudit]] audits) hands the union in
-    * directly. Same core, same invariants. */
-  def ivfPqSearchForOf(base: DataFrame, index: PqIndex,
-                       queryVecs: DataFrame,
-                       rerank: Int = 10 * K,
-                       probesOverride: Option[Int] = None,
-                       allowed: Option[DataFrame] = None): DataFrame =
-    ivfPqSearchCore(base, index, rerank, probesOverride,
-      allowed, Some(queryVecs))
-
-  private def ivfPqSearchCore(baseRaw: DataFrame,
-                              index: PqIndex, rerank: Int,
-                              probesOverride: Option[Int],
-                              allowed: Option[DataFrame],
-                              queryVecs: Option[DataFrame]): DataFrame = {
-    require(rerank >= 1, s"IVFADC without rerank is not served (got $rerank)")
+    * collected and pushed as a STATIC `list_id IN (...)` filter under the
+    * join: semantically redundant with the equi-join, but on a persisted
+    * index partitioned by `list_id` it becomes a PartitionFilter at the
+    * scan — the coarse quantizer's pruning turned into file-level I/O
+    * pruning (spec-pinned): a search READS only probes/lists of the
+    * index, it does not scan-and-drop. */
+  def ivfSearch(base: DataFrame, index: IvfIndex,
+                rerank: Int = 10 * K,
+                probesOverride: Option[Int] = None,
+                allowed: Option[DataFrame] = None,
+                queryVecs: Option[DataFrame] = None): DataFrame = {
+    require(rerank >= 1, s"graft: IVF search without rerank is not served " +
+      s"(got $rerank)")
     val numLists = index.numLists
     val numProbes = probesOverride.getOrElse(probesForLists(numLists))
     require(numProbes >= 1 && numProbes <= numLists,
       s"probes $numProbes out of [1, $numLists]")
     val dim = index.dim
-    val books = index.books
-    val sub = index.sub
-    val subDim = dim / sub
+    val codec = index.codec
     // an OPQ-built index lives entirely in rotated coordinates — the
-    // query side AND the rerank corpus view must rotate with it (the
-    // rotation is orthogonal, so every cosine equals the raw one).
-    // The O(dim²)-per-row projection is applied only AFTER the
-    // bounding joins — rotating the whole corpus to keep QueryK query
-    // rows (or queries·width rerank rows) would put a full matrix
-    // multiply of the corpus under every search, the exact trap the
-    // [[queries]] scaladoc pins for the norm projection.
-    def rotated(df: DataFrame): DataFrame =
-      index.rotation.map(opqRotate(df, _)).getOrElse(df)
-    val cents = array(index.centroids.map(c => array(c.map(lit): _*)): _*)
-    // query side: probed lists + centroid dot table + residual LUT
-    val lutCol = array(books.zipWithIndex.map { case (book, m) =>
-      val qm = expr(s"slice(q_emb, ${m * subDim + 1}, $subDim)")
-      array(book.map(c =>
-        call_function("vec_dot", qm, array(c.map(lit): _*))): _*)
-    }: _*)
-    // external batches arrive in RAW coordinates, already bounded; the
-    // internal draw bounds FIRST (vec_id-only TakeOrdered + join),
-    // then rotates the QueryK joined rows
-    val qs = queryVecs.map(q => prepQueries(rotated(q), dim))
-      .getOrElse(prepQueries(
-        rotated(baseRaw.join(broadcast(annQueryIds(baseRaw)), "vec_id")),
-        dim))
+    // query side AND the rerank corpus view rotate with it (orthogonal,
+    // so every cosine equals the raw one). The O(dim²)-per-row projection
+    // runs only AFTER the bounding joins — rotating the whole corpus to
+    // keep QueryK query rows (or queries·width rerank rows) would put a
+    // full matrix multiply of the corpus under every search, the trap
+    // the [[queries]] scaladoc pins for the norm projection.
+    def rot(df: DataFrame): DataFrame = rotated(df, index.rotation)
+    val cents = matrixLit(index.centroids)
+    val qs = prepQueries(rot(queryVecs.getOrElse(
+      base.join(broadcast(annQueryIds(base)), "vec_id"))), dim)
     val probed = qs
       .withColumn("cents", cents)
-      .withColumn("qdots", expr(
-        "transform(cents, c -> vec_dot(c, q_emb))"))
       .withColumn("dists", expr(
         "transform(cents, c -> vec_dot(c, c) - 2.0D * vec_dot(c, q_emb))"))
-      .withColumn("lut", lutCol)
       .withColumn("probe", explode(expr(
         s"""slice(array_sort(zip_with(dists, sequence(1, $numLists),
            |  (d, i) -> struct(d AS d, i AS i))), 1, $numProbes)"""
           .stripMargin)))
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("lut"),
-        col("probe.i").cast(LongType).as("list_id"),
-        element_at(col("qdots"), col("probe.i")).as("qc"))
-    // the bounded probe frame is materialized ONCE (QueryK·probes
-    // rows): the static IN-list collect and the broadcast join side
-    // both read the checkpoint instead of re-executing the query-side
-    // pipeline (TakeOrdered + join + rotation + LUT) as a second job
+      .select(Seq(col("q_id"), col("q_emb"), col("q_norm"),
+        col("probe.i").cast(LongType).as("list_id")) ++
+        codec.queryColumns(Some(element_at(col("cents"), col("probe.i")))): _*)
+    // the bounded probe frame is materialized ONCE (QueryK·probes rows):
+    // the static IN-list collect and the broadcast join side both read
+    // the checkpoint instead of re-executing the query-side pipeline
     val probedCk = probed.localCheckpoint(eager = true)
     val probedIds = probedCk.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val adcDot = (1 to sub).map(m =>
-      element_at(element_at(col("lut"), m), element_at(col("codes"), m)))
-      .foldLeft(col("qc"))(_ + _)
-    // predicate pre-filter (see ivfPqSearchWhere): semi-join the id
-    // frame onto the coded rows BEFORE ranking; planner-chosen strategy
+    // predicate pre-filter: semi-join the id frame onto the coded rows
+    // BEFORE ranking; planner-chosen strategy
     val coded = allowed.fold(index.coded)(a =>
       index.coded.join(a.select("vec_id"), Seq("vec_id"), "left_semi"))
     val scored = coded
       .filter(col("list_id").isin(probedIds: _*))
+      .select(col("*") +: codec.codedColumns(
+        Some(element_at(cents, col("list_id").cast(IntegerType)))): _*)
       .join(broadcast(probedCk), Seq("list_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_adc",
-        round(adcDot / (col("q_norm") * col("recon_norm")), 6))
+        round(codec.adcDot(ivf = true) / (col("q_norm") * col("recon_norm")),
+          6))
     // exact rerank: join the bounded candidate set to the RAW corpus
     // first, rotate + norm only the queries·width surviving rows
     topKWithRerank(scored, rerank, cand =>
-      score(withNorm(rotated(
-        cand.join(baseRaw.select(col("vec_id"), col("embedding")),
-          "vec_id")), dim)))
+      score(withNorm(rot(
+        cand.join(base.select(col("vec_id"), col("embedding")), "vec_id")),
+        dim)))
   }
 
-  // -- persisted IVFADC index (build once / search many) ------------------
+  // -- persisted IVF index (build once / search many) --------------------
 
-  /** Build the IVFADC index for the corpus at `dir` and PERSIST it under
-    * `indexPath` — the serving half a 100 TB deployment actually runs:
-    * training + encode happen ONCE, then [[pqIndexSearch]] answers
-    * queries from the stored artifacts without retraining. Layout:
+  /** Build the IVF index for the corpus at `dir` and PERSIST it under
+    * `indexPath` — training + encode happen ONCE, then
+    * `ivfSearch(base, indexLoad(spark, indexPath))` answers queries from
+    * the stored artifacts without retraining. Layout:
     *
-    *  - `meta/`       one row (dim, sub, num_lists);
+    *  - `meta/`       one row (dim, [codec ints,] num_lists, rotated,
+    *                  family) — `family` is the codec tag the loader
+    *                  dispatches on ('ivfadc' PQ, whose `sub` rides after
+    *                  dim; 'ivf_sq8' SQ8);
+    *  - `rotation/`   (i, row) — only when rotated;
     *  - `centroids/`  (list_id, centroid) — numLists rows;
-    *  - `codebooks/`  (m, code, entry) — sub·2^bits rows;
-    *  - `codes/`      the coded corpus, codes PACKED two-per-byte
-    *                  ([[pqPackCodes]] — the 64× storage form), written
-    *                  `partitionBy("list_id")` so a probed search prunes
-    *                  at the FILE level (the scan's PartitionFilters
-    *                  carry the probe set — spec-pinned).
+    *  - `codebooks/` (PQ: m, code, entry) or `bounds/` (SQ8: pos, lo,
+    *                  step) — the codec's trained artifacts;
+    *  - `codes/`      the coded corpus in the codec's stored form (PQ
+    *                  nibbles packed two per byte, SQ8 bytes as they
+    *                  are), written `partitionBy("list_id")` so a probed
+    *                  search prunes at the FILE level.
     *
-    * Everything stored is either bounded (centroids/codebooks/meta — the
-    * model-coefficient family) or exactly invertible (packed codes,
-    * parquet doubles), so the loaded index reproduces the in-memory
-    * search BIT-FOR-BIT. Returns the in-memory index it persisted. */
-  def pqIndexBuild(spark: SparkSession, dir: String, indexPath: String,
-                   subspaces: Int = PqSub,
-                   rotate: Boolean = false,
-                   rotateNP: Boolean = false): PqIndex = {
+    * Everything stored is either bounded (the model-coefficient family)
+    * or exactly invertible (packed codes, parquet doubles), so the loaded
+    * index reproduces the in-memory search BIT-FOR-BIT. Returns the
+    * in-memory index it persisted. */
+  def indexBuild(spark: SparkSession, dir: String, indexPath: String,
+                 codec: Codec = Pq(),
+                 rotate: Rotation = Rotation.Off): IvfIndex = {
     import spark.implicits._
-    // cheap argument check BEFORE the expensive train+encode: packing is
-    // two codes per byte, so an odd subspace count would otherwise only
-    // fail at pqPackCodes after the whole build has already run
-    require(subspaces % 2 == 0,
-      s"graft: pqIndexBuild needs an even subspaces count " +
-        s"(codes pack two per byte), got $subspaces")
-    // rotateNP ships on the measured r19 end-to-end verdict
-    // (docs/SCALE.md r19 addendum: at equal serving budget the NP
-    // rotation wins 5 of 9 (sf × rerank) cells, ties 3, loses 1 —
-    // largest at the largest corpus); opt-in because the lift is
-    // modest and the parametric rotation stays the anisotropic-regime
-    // default. Downstream is rotation-kind-agnostic: only the matrix
-    // differs, and the matrix itself is what persists.
-    val idx = ivfPqBuild(spark, dir, subspaces, rotate, rotateNP)
-    // the `rotated` flag lives in meta (not in directory probing —
-    // fs-agnostic), so a loader knows whether a rotation frame exists;
-    // `family` is the cross-family guard (see [[requireFamily]]) now
-    // that two codes layouts share the lifecycle
-    Seq((idx.dim, idx.sub, idx.numLists, idx.rotation.nonEmpty, "ivfadc"))
-      .toDF("dim", "sub", "num_lists", "rotated", "family")
+    val idx = ivfBuild(spark, dir, codec, rotate)
+    val ints = ("dim" -> idx.dim) +: idx.codec.metaInts :+
+      ("num_lists" -> idx.numLists)
+    spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row.fromSeq(
+          ints.map(_._2) ++ Seq(idx.rotation.nonEmpty, idx.codec.family))),
+        StructType(ints.map(i => StructField(i._1, IntegerType, false)) ++
+          Seq(StructField("rotated", BooleanType, false),
+            StructField("family", StringType))))
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
     idx.rotation.foreach { r =>
       r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
@@ -1471,32 +1539,28 @@ object Similarity {
       .map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
-    (for (m <- idx.books.indices; c <- idx.books(m).indices)
-      yield (m, c, idx.books(m)(c).toSeq)).toSeq
-      .toDF("m", "code", "entry")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
-    idx.coded
-      .select(col("vec_id"), col("list_id"),
-        pqPackCodes(col("codes"), idx.sub).as("packed"), col("recon_norm"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$indexPath/codes")
+    idx.codec.write(spark, indexPath)
+    writeCodes(idx.coded, idx.codec, "overwrite", indexPath)
     idx
   }
 
-  /** Load a [[pqIndexBuild]]-written index. The bounded artifacts
-    * (centroids, codebooks) are collected in their canonical order; the
-    * coded frame stays distributed, codes unpacked in-plan. The codes
-    * scan gets an EXPLICIT schema so the `list_id` partition column
-    * comes back as the LongType the coded frame was built with —
-    * directory-name type inference would hand back an int and silently
-    * change the probe join's key type. */
-  /** The ONE schema of the persisted `codes/` frame — shared by the
-    * loader and the compactor so they can never diverge; the explicit
-    * `list_id` LongType is what pins the partition column against
-    * directory-name type inference. */
-  private val pqCodesSchema = StructType(Seq(
+  /** Write an in-memory coded frame in the codec's stored form. */
+  private def writeCodes(coded: DataFrame, codec: VectorCodec, mode: String,
+                         indexPath: String): Unit =
+    coded.select(col("vec_id"), col("list_id"),
+        codec.storeCodes(col("codes")).as(codec.storedCol),
+        col("recon_norm"))
+      .write.mode(mode).partitionBy("list_id")
+      .parquet(s"$indexPath/codes")
+
+  /** The ONE schema of a persisted `codes/` frame — shared by the loader
+    * and the compactor so they can never diverge; the explicit `list_id`
+    * LongType pins the partition column against directory-name type
+    * inference (which would hand back an int and silently change the
+    * probe join's key type). */
+  private def codesSchema(codec: VectorCodec): StructType = StructType(Seq(
     StructField("vec_id", LongType),
-    StructField("packed", ArrayType(ByteType)),
+    StructField(codec.storedCol, ArrayType(ByteType)),
     StructField("recon_norm", DoubleType),
     StructField("list_id", LongType)))
 
@@ -1504,39 +1568,42 @@ object Similarity {
     * "is this an index?" check: a typo'd or half-written path must
     * fail with a graft-prefixed diagnostic naming the path, not an
     * ArrayIndexOutOfBounds from collect()(0). */
-  private def pqIndexMeta(spark: SparkSession, indexPath: String)
+  private def indexMeta(spark: SparkSession, indexPath: String)
       : org.apache.spark.sql.Row = {
     val metaRows = spark.read.parquet(s"$indexPath/meta").collect()
     require(metaRows.length == 1,
       s"graft: index at $indexPath has ${metaRows.length} meta rows, " +
-        "expected exactly 1 — not a pqIndexBuild-written index")
+        "expected exactly 1 — not an indexBuild-written index")
     metaRows(0)
   }
 
-  /** The cross-FAMILY guard every family-specific index entry point
-    * runs: the two persisted codes layouts share (vec_id, list_id) but
-    * differ in the payload columns (packed PQ nibbles vs per-dimension
-    * SQ8 bytes), so a loader reading the wrong schema would see nulls —
-    * and a compactor would then REWRITE the frame with them. Fail loud
-    * with both names instead. Metas written before the family tag
-    * existed were only ever produced by [[pqIndexBuild]], so an absent
-    * column reads as 'ivfadc'. */
-  private def requireFamily(spark: SparkSession, indexPath: String,
-                            want: String): org.apache.spark.sql.Row = {
-    val meta = pqIndexMeta(spark, indexPath)
-    val got =
+  /** The trained codec of a persisted index, chosen by the meta's
+    * `family` tag. Metas written before the tag existed were only ever
+    * PQ builds, so an absent tag reads as PQ. */
+  private def codecOf(spark: SparkSession, indexPath: String,
+                      meta: org.apache.spark.sql.Row): VectorCodec = {
+    val family =
       if (meta.schema.fieldNames.contains("family"))
         meta.getAs[String]("family")
-      else "ivfadc"
-    require(got == want,
-      s"graft: index at $indexPath is family '$got', expected '$want'")
-    meta
+      else PqCodec.Family
+    family match {
+      case PqCodec.Family =>
+        PqCodec.read(spark, indexPath, meta.getAs[Int]("sub"))
+      case Sq8Codec.Family =>
+        Sq8Codec.read(spark, indexPath, meta.getAs[Int]("dim"))
+      case other =>
+        throw new IllegalArgumentException(
+          s"graft: index at $indexPath has unknown family '$other'")
+    }
   }
 
-  def pqIndexLoad(spark: SparkSession, indexPath: String): PqIndex = {
-    val meta = requireFamily(spark, indexPath, "ivfadc")
+  /** Load an [[indexBuild]]-written index. The bounded artifacts
+    * (centroids, codec, rotation) are collected in their canonical order;
+    * the coded frame stays distributed, codes turned back into their
+    * in-memory form in-plan. */
+  def indexLoad(spark: SparkSession, indexPath: String): IvfIndex = {
+    val meta = indexMeta(spark, indexPath)
     val dim = meta.getAs[Int]("dim")
-    val sub = meta.getAs[Int]("sub")
     val numLists = meta.getAs[Int]("num_lists")
     val centroids = spark.read.parquet(s"$indexPath/centroids")
       .orderBy("list_id").select("centroid")
@@ -1544,20 +1611,14 @@ object Similarity {
     require(centroids.length == numLists,
       s"graft: index at $indexPath has ${centroids.length} centroids, " +
         s"meta says $numLists")
-    val codes = 1 << PqBits
-    val books = Array.ofDim[Array[Double]](sub, codes)
-    spark.read.parquet(s"$indexPath/codebooks").collect().foreach { r =>
-      books(r.getAs[Int]("m"))(r.getAs[Int]("code")) =
-        r.getAs[scala.collection.Seq[Double]]("entry").toArray
-    }
-    require(books.forall(_.forall(_ != null)),
-      s"graft: index at $indexPath is missing codebook entries")
-    val coded = spark.read.schema(pqCodesSchema)
+    val codec = codecOf(spark, indexPath, meta)
+    val coded = spark.read.schema(codesSchema(codec))
       .parquet(s"$indexPath/codes")
       .select(col("vec_id"), col("list_id"),
-        pqUnpackCodes(col("packed"), sub).as("codes"), col("recon_norm"))
+        codec.loadCodes(col(codec.storedCol)).as("codes"), col("recon_norm"))
     val rotation =
-      if (meta.getAs[Boolean]("rotated")) {
+      if (meta.schema.fieldNames.contains("rotated") &&
+          meta.getAs[Boolean]("rotated")) {
         val r = Array.ofDim[Array[Double]](dim)
         spark.read.parquet(s"$indexPath/rotation").collect().foreach { row =>
           r(row.getAs[Int]("i")) =
@@ -1567,96 +1628,65 @@ object Similarity {
           s"graft: index at $indexPath is missing rotation rows")
         Some(r)
       } else None
-    PqIndex(dim, sub, numLists, centroids, books, coded, rotation)
+    IvfIndex(dim, numLists, centroids, codec, coded, rotation)
   }
 
   /** Append a batch of NEW vectors to a persisted index WITHOUT
     * retraining — the serving-pipeline add (FAISS `index.add` on a
-    * trained index): artifacts stay FROZEN (centroids, codebooks,
-    * rotation), the delta is rotated if the index is, assigned +
-    * residual-encoded by the same [[ivfPqEncode]] the build ran, and
-    * the packed rows land in the SAME partitionBy(list_id) layout —
-    * a parquet append, new files inside existing list directories, so
-    * the probe-time PartitionFilter pruning is untouched. Encoding is
-    * per-row deterministic given the artifacts, so an appended vector
-    * carries the IDENTICAL coded row it would have carried had it been
-    * present at build time — search over (build ∪ appends) is
-    * spec-asserted row-for-row equal to a search whose coded frame
-    * held the union from the start. Caller contract: vec_ids are new
-    * (the index is keyed by vec_id; in-place updates are the CDC
-    * surface's job — `Versioning.mergeUpsert` — followed by a rebuild
-    * or a compaction, exactly as production ANN deployments handle
-    * deletes/updates via tombstone compaction). Appends must also be
-    * SERIALIZED against [[pqIndexCompact]] — single-writer contract; a
-    * batch landing mid-compaction would be rewritten away with the old
-    * directory (see the compactor's scaladoc). Periodic RETRAINING
-    * as the corpus distribution drifts remains a deployment decision —
-    * frozen artifacts quantize drifted data with growing error, which
-    * the recall audit (q_ann_recall's machinery) is there to watch. */
-  def pqIndexAppend(spark: SparkSession, newVecs: DataFrame,
-                    indexPath: String): Unit = {
-    val idx = pqIndexLoad(spark, indexPath)
-    val delta = idx.rotation.map(opqRotate(newVecs, _)).getOrElse(newVecs)
-    ivfPqEncode(withNorm(delta, idx.dim), idx.centroids, idx.books, idx.dim)
-      .select(col("vec_id"), col("list_id"),
-        pqPackCodes(col("codes"), idx.sub).as("packed"), col("recon_norm"))
-      .write.mode("append").partitionBy("list_id")
-      .parquet(s"$indexPath/codes")
+    * trained index): artifacts stay FROZEN (centroids, codec, rotation),
+    * the delta is rotated if the index is, assigned + residual-encoded by
+    * the same [[ivfEncode]] the build ran, and the rows land in the SAME
+    * partitionBy(list_id) layout — a parquet append, new files inside
+    * existing list directories, so the probe-time PartitionFilter pruning
+    * is untouched. Encoding is per-row deterministic given the artifacts,
+    * so search over (build ∪ appends) is spec-asserted row-for-row equal
+    * to a search whose coded frame held the union from the start. Caller
+    * contract: vec_ids are new ([[indexDupIds]] audits it; in-place
+    * updates are the CDC surface's job — `Versioning.mergeUpsert` —
+    * followed by a rebuild or a compaction). Appends must be SERIALIZED
+    * against [[indexCompact]] — single-writer contract. Periodic
+    * RETRAINING as the corpus drifts is a deployment decision, watched by
+    * [[indexRecallAudit]]. */
+  def indexAppend(spark: SparkSession, newVecs: DataFrame,
+                  indexPath: String): Unit = {
+    val idx = indexLoad(spark, indexPath)
+    writeCodes(
+      ivfEncode(withNorm(rotated(newVecs, idx.rotation), idx.dim),
+        idx.centroids, idx.codec),
+      idx.codec, "append", indexPath)
   }
-
-  /** Search a persisted index: [[pqIndexLoad]] + [[ivfPqSearch]] — no
-    * training, no corpus encode; the corpus at `dir` is touched only by
-    * the bounded exact-rerank join (and the query draw, which a
-    * production deployment replaces with externally supplied query
-    * batches of the same bounded shape). Spec-asserted row-for-row
-    * equal to the in-memory [[ivfPqTopK]] at the same parameters. */
-  def pqIndexSearch(spark: SparkSession, dir: String, indexPath: String,
-                    rerank: Int = 10 * K,
-                    probesOverride: Option[Int] = None): DataFrame =
-    ivfPqSearch(spark, dir, pqIndexLoad(spark, indexPath),
-      rerank, probesOverride)
 
   /** Compact a persisted index's coded frame — the maintenance pass an
     * append-heavy deployment schedules (the lakehouse OPTIMIZE shape):
-    * every [[pqIndexAppend]] lands NEW files inside the list
-    * directories, and a probed scan's task count grows with the file
-    * count, not the data; compaction rewrites `codes/` bin-packed to
-    * one file per list partition, CONTENT-IDENTICAL (the spec asserts
-    * the exact row multiset and a row-for-row search before/after).
-    * The rewrite stages to a sibling directory and swaps with two
-    * renames (Hadoop FileSystem — works on HDFS and object-store
-    * committers alike), so a reader planning BEFORE the first rename or
-    * AFTER the second sees a complete frame — never a half-written one.
+    * every [[indexAppend]] lands NEW files inside the list directories,
+    * and a probed scan's task count grows with the file count, not the
+    * data; compaction rewrites `codes/` bin-packed to one file per list
+    * partition, CONTENT-IDENTICAL (the spec asserts the exact row
+    * multiset and a row-for-row search before/after). The rewrite stages
+    * to a sibling directory and swaps with two renames (Hadoop
+    * FileSystem — works on HDFS and object-store committers alike), so a
+    * reader planning BEFORE the first rename or AFTER the second sees a
+    * complete frame — never a half-written one. The codes are read
+    * through the schema of the index's own codec, resolved from its meta
+    * BEFORE any rename touches the index.
     *
     * Concurrency contract (SINGLE WRITER): append and compact must be
     * serialized by the deployment — exactly the lakehouse OPTIMIZE
-    * contract. A [[pqIndexAppend]] that lands between compaction's
-    * snapshot read of `codes/` and the swap would be rewritten away
-    * with the old directory; nothing in the layout detects that, so do
-    * not run them concurrently. Readers get a weaker but still real
-    * guarantee: between the two renames `codes/` briefly does not
-    * exist, so a reader that PLANS inside that window fails fast (and
-    * retries) rather than seeing half a frame; a reader whose file
-    * listing resolved before the swap needs the old files to outlive
-    * its scan — pass `vacuumOld = false` to leave `codes_old/` for a
-    * deferred vacuum (the next compaction's recovery preamble, or an
-    * explicit cleanup) instead of deleting it immediately. Returns
-    * (files before, files after). */
-  def pqIndexCompact(spark: SparkSession, indexPath: String,
-                     vacuumOld: Boolean = true): (Long, Long) =
-    indexCompactCore(spark, indexPath, pqCodesSchema, "ivfadc", vacuumOld)
-
-  /** The family-agnostic compaction body [[pqIndexCompact]] and
-    * [[sq8IndexCompact]] share — the lifecycle is identical except the
-    * codes schema the rewrite reads with (the r18-verdict seam). The
-    * family guard runs BEFORE any rename touches the index: a typo'd
-    * path must fail here, not mid-swap, and compacting through the
-    * WRONG family's schema would rewrite the payload columns as
-    * nulls — the one corruption the tag exists to prevent. */
-  private def indexCompactCore(spark: SparkSession, indexPath: String,
-                               codesSchema: StructType, family: String,
-                               vacuumOld: Boolean): (Long, Long) = {
-    requireFamily(spark, indexPath, family)
+    * contract. An [[indexAppend]] that lands between compaction's
+    * snapshot read of `codes/` and the swap would be rewritten away with
+    * the old directory; nothing in the layout detects that, so do not run
+    * them concurrently. Readers get a weaker but still real guarantee:
+    * between the two renames `codes/` briefly does not exist, so a reader
+    * that PLANS inside that window fails fast (and retries) rather than
+    * seeing half a frame; a reader whose file listing resolved before the
+    * swap needs the old files to outlive its scan — pass
+    * `vacuumOld = false` to leave `codes_old/` for a deferred vacuum (the
+    * next compaction's recovery preamble, or an explicit cleanup) instead
+    * of deleting it immediately. Returns (files before, files after). */
+  def indexCompact(spark: SparkSession, indexPath: String,
+                   vacuumOld: Boolean = true): (Long, Long) = {
+    val schema = codesSchema(
+      codecOf(spark, indexPath, indexMeta(spark, indexPath)))
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new org.apache.hadoop.fs.Path(s"$indexPath/codes")
     val old = new org.apache.hadoop.fs.Path(s"$indexPath/codes_old")
@@ -1687,7 +1717,7 @@ object Similarity {
     // relative to raw embeddings (64×), so a single file per list is
     // the right grain until a list itself outgrows a block — at which
     // point maxRecordsPerFile (a conf, not a code change) re-splits
-    spark.read.schema(codesSchema).parquet(s"$indexPath/codes")
+    spark.read.schema(schema).parquet(s"$indexPath/codes")
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(tmp.toString)
@@ -1698,74 +1728,46 @@ object Similarity {
     (before, parquetFiles(path))
   }
 
-  /** Filtered search over a persisted index — [[ivfPqSearchWhere]]
-    * from disk: metadata-scoped retrieval against the stored artifacts,
-    * no retraining, the probed-list PartitionFilter pruning composing
-    * WITH the predicate semi-join (files prune by probe set, rows by
-    * the id frame). */
-  def pqIndexSearchWhere(spark: SparkSession, dir: String,
-                         indexPath: String, allowed: DataFrame,
-                         rerank: Int = 10 * K,
-                         probesOverride: Option[Int] = None): DataFrame =
-    ivfPqSearchWhere(spark, dir, pqIndexLoad(spark, indexPath), allowed,
-      rerank, probesOverride)
-
-  /** [[ivfPqSearchFor]] over a persisted index — the full serving
-    * loop: stored artifacts, externally supplied query batch, no
-    * retraining. */
-  def pqIndexSearchFor(spark: SparkSession, dir: String,
-                       indexPath: String, queryVecs: DataFrame,
-                       rerank: Int = 10 * K,
-                       probesOverride: Option[Int] = None,
-                       allowed: Option[DataFrame] = None): DataFrame =
-    ivfPqSearchFor(spark, dir, pqIndexLoad(spark, indexPath), queryVecs,
-      rerank, probesOverride, allowed)
-
   // -- persisted-index maintenance audits (drift + invariants) -------------
 
   /** Recall audit over a PERSISTED index — the drift watchdog
-    * [[pqIndexAppend]]'s contract promises, closing the serving loop's
-    * retrain decision: the index's centroids/codebooks/rotation are
-    * FROZEN at build time, so every appended batch is quantized with
-    * the build sample's grid; as the corpus distribution drifts away
-    * from that sample the quantization error grows, ADC ranking decays,
-    * and a bounded rerank stops recovering the true neighbors. This
-    * surface measures exactly that: per query of `queryVecs` (the
-    * production shape — "today's traffic", or the batch just appended),
-    * recall@k of [[pqIndexSearchFor]] over the stored artifacts against
-    * [[bruteForceTopKFor]] ground truth over `base` — the CURRENT
-    * corpus, i.e. the build corpus UNION every appended batch (the
-    * caller owns that union; the index does not store raw vectors).
+    * [[indexAppend]]'s contract promises, closing the serving loop's
+    * retrain decision: the index's artifacts are FROZEN at build time, so
+    * every appended batch is quantized with the build sample's grid; as
+    * the corpus distribution drifts away from that sample the
+    * quantization error grows, ADC ranking decays, and a bounded rerank
+    * stops recovering the true neighbors. Per query of `queryVecs` (the
+    * production shape — "today's traffic", or the batch just appended):
+    * recall@k of the stored index's [[ivfSearch]] against
+    * [[bruteForceTopKFor]] ground truth over `base` — the CURRENT corpus,
+    * i.e. the build corpus UNION every appended batch (the caller owns
+    * that union; the index does not store raw vectors).
     *
     * Reading it: mean recall flat vs the build-time audit → the frozen
     * grid still fits, keep appending; mean recall down → retrain
-    * ([[pqIndexBuild]]) and cut over — the economics of that decision
-    * (audit cost vs rebuild cost) are priced in docs/SCALE.md.
-    *
-    * Scale shape: ground truth is one brute-force pass over `base` for
-    * a BOUNDED query batch (queries broadcast, two-stage top-k); the
-    * approximate side is the ordinary probed search; the recall join is
-    * queries×k rows. The audit is therefore corpus-linear ONCE per
-    * decision, vs retrain-per-decision — and the spec plants a drifted
-    * batch to prove the gauge actually moves. */
-  def pqIndexRecallAudit(spark: SparkSession, base: DataFrame,
-                         indexPath: String, queryVecs: DataFrame,
-                         rerank: Int = 10 * K,
-                         probesOverride: Option[Int] = None): DataFrame =
+    * ([[indexBuild]]) and cut over — the economics of that decision
+    * (audit cost vs rebuild cost) are priced in docs/SCALE.md. Scale
+    * shape: one brute-force pass over `base` for a BOUNDED query batch,
+    * the ordinary probed search, and a queries×k recall join — the audit
+    * is corpus-linear ONCE per decision, vs retrain-per-decision. */
+  def indexRecallAudit(spark: SparkSession, base: DataFrame,
+                       indexPath: String, queryVecs: DataFrame,
+                       rerank: Int = 10 * K,
+                       probesOverride: Option[Int] = None): DataFrame =
     recallOf(
       bruteForceTopKFor(base, queryVecs),
-      ivfPqSearchForOf(base, pqIndexLoad(spark, indexPath), queryVecs,
-        rerank, probesOverride))
+      ivfSearch(base, indexLoad(spark, indexPath), rerank, probesOverride,
+        queryVecs = Some(queryVecs)))
 
   /** Per-list physical statistics of a persisted index's coded frame —
     * the observability surface maintenance schedules read: one row per
     * list (list_id, n_rows, n_files), ordered by list_id. `n_files`
-    * grows with every [[pqIndexAppend]] and is the compaction trigger
+    * grows with every [[indexAppend]] and is the compaction trigger
     * (a probed scan's task count tracks files, not rows); `n_rows`
     * skew across lists is the probe-cost skew. One scan of the coded
     * frame, map-combinable aggregate over ≤ numLists groups —
     * metadata-cheap at any corpus size. */
-  def pqIndexStats(spark: SparkSession, indexPath: String): DataFrame = {
+  def indexStats(spark: SparkSession, indexPath: String): DataFrame = {
     indexCodesSlim(spark, indexPath)
       .select(col("list_id"), input_file_name().as("f"))
       .groupBy("list_id")
@@ -1775,7 +1777,7 @@ object Similarity {
   }
 
   /** Duplicate-id audit of a persisted index — makes violations of
-    * [[pqIndexAppend]]'s vec_id-novelty contract OBSERVABLE instead of
+    * [[indexAppend]]'s vec_id-novelty contract OBSERVABLE instead of
     * silent: a duplicate id carries a second coded row, and a search
     * can then hand the same neighbor back in two rank slots. Returns
     * the offending (vec_id, n_rows) pairs (n_rows ≥ 2), ordered by
@@ -1785,7 +1787,7 @@ object Similarity {
     * result is the documented CDC path: upsert via
     * `Versioning.mergeUpsert` on the raw corpus, then rebuild or
     * compact. One map-combinable aggregate on the id key. */
-  def pqIndexDupIds(spark: SparkSession, indexPath: String): DataFrame =
+  def indexDupIds(spark: SparkSession, indexPath: String): DataFrame =
     indexCodesSlim(spark, indexPath)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_rows"))
@@ -1794,18 +1796,15 @@ object Similarity {
 
   /** The (vec_id, list_id) projection of a persisted index's coded
     * frame, read DIRECTLY from parquet — what the physical audits
-    * ([[pqIndexStats]], [[pqIndexDupIds]], [[indexCompactionAdvice]])
-    * scan: they never touch codes, so collecting centroids, codebooks
-    * and rotation through a full [[pqIndexLoad]] (and carrying the
-    * unpack projection) was pure overhead (r18 ADVICE). The meta probe
-    * stays — the is-this-an-index diagnostic — and the explicit schema
-    * pins the `list_id` partition column to LongType exactly as the
-    * loader does. FAMILY-AGNOSTIC by construction: both the IVFADC and
-    * the IVF-SQ8 codes layouts carry these two columns, so every
-    * physical audit serves both index families unchanged. */
+    * ([[indexStats]], [[indexDupIds]], [[indexCompactionAdvice]]) scan:
+    * they never touch codes, so a full [[indexLoad]] would be pure
+    * overhead. The meta probe stays — the is-this-an-index diagnostic —
+    * and the explicit schema pins the `list_id` partition column to
+    * LongType exactly as the loader does. Codec-agnostic by
+    * construction: every codes layout carries these two columns. */
   private def indexCodesSlim(spark: SparkSession,
                              indexPath: String): DataFrame = {
-    pqIndexMeta(spark, indexPath)
+    indexMeta(spark, indexPath)
     spark.read.schema(StructType(Seq(
         StructField("vec_id", LongType),
         StructField("list_id", LongType))))
@@ -1973,7 +1972,8 @@ object Similarity {
     for (_ <- 1 to iters) {
       val books = pqCodebooks(opqRotate(sample, r), dim, sub)
       // driver encode replica (same c·c − 2x·c first-minimum argmin as
-      // pqEncode) + the Procrustes cross matrix M = Σ x̂·yᵀ in one pass
+      // PqCodec.codes) + the Procrustes cross matrix M = Σ x̂·yᵀ in one
+      // pass
       val m = Array.ofDim[Double](dim, dim)
       var err = 0.0
       rowsX.foreach { x =>
@@ -2104,506 +2104,15 @@ object Similarity {
       array(r.map(row => call_function("vec_dot",
         array(row.map(lit): _*), col("embedding"))): _*))
 
-  /** PQ ANN behind an OPQ rotation: train the rotation on the bounded
-    * sample, rotate the corpus, run the UNCHANGED [[pqTopKOf]] chain —
-    * codebooks train on and codes quantize the rotated vectors, the
-    * exact rerank re-scores rotated vectors whose cosines equal the
-    * originals' (orthogonality). Same interface and laws as [[pqTopK]];
-    * measured beside it in SCALE.md: flat on the isotropic test corpus
-    * (rotation cannot help data with nothing to rebalance — the honest
-    * control) and a large ADC-recall lift on the planted anisotropic
-    * corpus, the production case it exists for. */
-  def opqTopKOf(base: DataFrame, rerank: Int = 10 * K,
-                subspaces: Int = PqSub): DataFrame = {
-    val dim = dimOf(base)
-    val samp = ivfTrainingSample(base, pqSampleK(1 << PqBits))
-    pqTopKOf(opqRotate(base, opqRotation(samp, dim, subspaces)),
-      rerank, subspaces)
-  }
-
-  /** Corpus entry point for [[opqTopKOf]]. */
-  def opqTopK(spark: SparkSession, dir: String, rerank: Int = 10 * K,
-              subspaces: Int = PqSub): DataFrame =
-    opqTopKOf(Tables.embeddings(spark, dir), rerank, subspaces)
-
-  // -- SQ8: scalar quantization (the second compression family) -----------
-
-  /** Per-dimension SQ8 bounds from the bounded training sample: for
-    * each dimension, (lo, step) with 256 uniform levels spanning the
-    * sample's [min, max] — x̂_d = lo_d + code_d·step_d, code ∈ [0, 255].
-    * Corpus values outside the sample's range CLAMP to the end levels
-    * (the standard trained-scalar-quantizer contract; FAISS
-    * ScalarQuantizer QT_8bit trains the same way). A constant dimension
-    * gets step 1 so the algebra stays finite (every value then codes
-    * to 0 and reconstructs at lo exactly). One bounded-sample
-    * aggregate, 2·dim doubles collected — the model-artifact family. */
-  def sq8Bounds(sample: DataFrame, dim: Int)
-      : (Array[Double], Array[Double]) = {
-    val rows = sample
-      .select(posexplode(col("embedding").cast(ArrayType(DoubleType))))
-      .toDF("pos", "v")
-      .groupBy("pos").agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      .collect()
-    require(rows.length == dim,
-      s"graft: sq8Bounds saw ${rows.length} dimensions, expected $dim")
-    val lo = new Array[Double](dim)
-    val step = new Array[Double](dim)
-    rows.foreach { r =>
-      val d = r.getInt(0)
-      lo(d) = r.getDouble(1)
-      val span = r.getDouble(2) - r.getDouble(1)
-      step(d) = if (span > 0.0) span / 255.0 else 1.0
-    }
-    (lo, step)
-  }
-
-  /** SQ8 encode: (vec_id, codes, recon_norm) with codes an
-    * array<tinyint> of `dim` biased bytes (code − 128, the
-    * [[pqPackCodes]] storage idiom) — the 8× in-plan / on-disk
-    * reduction vs array<double> (4× vs the raw float corpus), uniform
-    * per-dimension nearest-level rounding, clamped to the trained
-    * range. recon_norm is ‖x̂‖ computed from the codes at encode time
-    * (fixed-order fold — deterministic at any parallelism), so the ADC
-    * cosine downstream is exact whenever x̂ = x (spec-planted). */
-  def sq8Encode(e: DataFrame, lo: Array[Double], step: Array[Double],
-                dim: Int, extra: Seq[String] = Nil): DataFrame = {
-    val loCol = array(lo.map(lit): _*)
-    val stepCol = array(step.map(lit): _*)
-    val codes = transform(sequence(lit(1), lit(dim)), i =>
-      (least(lit(255L), greatest(lit(0L),
-        floor((element_at(col("embedding"), i) - element_at(loCol, i)) /
-          element_at(stepCol, i) + lit(0.5)))) - 128L).cast(ByteType))
-    val xhat = sq8Decode(col("codes"), lo, step)
-    e.select(col("vec_id") +: extra.map(col) :+ codes.as("codes"): _*)
-      .withColumn("recon_norm",
-        sqrt(aggregate(xhat, lit(0.0), (a, v) => a + v * v)))
-  }
-
-  /** codes → x̂ (array<double>): the exact reconstruction the scorer
-    * and the encoder's norm share — ONE definition, so they can never
-    * disagree. */
-  private def sq8Decode(codes: Column, lo: Array[Double],
-                        step: Array[Double]): Column =
-    transform(codes, (c, i) =>
-      element_at(array(lo.map(lit): _*), i + 1) +
-        (c.cast(DoubleType) + lit(128.0)) *
-          element_at(array(step.map(lit): _*), i + 1))
-
-  /** SQ8 ANN: the scalar-quantization counterpart of [[pqTopKOf]] —
-    * same two-stage skew-proof top-k, same bounded exact rerank, but
-    * the compressed frame carries one byte PER DIMENSION instead of one
-    * 4-bit code per SUBSPACE. The trade is precision for compression:
-    * 4× (float→byte) vs PQ's 64×, with far higher pure-ADC fidelity —
-    * the scorer reconstructs x̂ on the fly (a dim-term dot over
-    * decompressed values: SQ8 compresses STORAGE and SHUFFLE, not
-    * multiplies — exactly FAISS's SQ8 contract). Measured beside PQ in
-    * docs/SCALE.md; both families share the rerank/top-k machinery, so
-    * a deployment picks per corpus: PQ when memory is the wall, SQ8
-    * when ADC-rank fidelity at mild compression pays. Like
-    * [[bruteForceTopK]], this flat variant scores corpus × queries —
-    * it serves corpora small enough to scan unpruned; at 100 TB the
-    * list-pruned [[ivfSq8TopK]] (or its persisted [[sq8IndexSearch]])
-    * is the only sane member of the family. */
-  def sq8TopKOf(base: DataFrame, rerank: Int = 10 * K): DataFrame = {
-    val dim = dimOf(base)
-    val e = withNorm(base, dim).localCheckpoint(true)
-    val samp = ivfTrainingSample(e, pqSampleK(1 << PqBits))
-      .localCheckpoint(eager = true)
-    val (lo, step) = sq8Bounds(samp, dim)
-    // decode ONCE per corpus row, BEFORE the query join: the
-    // reconstruction depends only on the codes, and a pre-join Project
-    // evaluates per input row — per (row, query) pair it would run
-    // queries× redundant decodes. The compressed frame is what a sink
-    // stores/shuffles; x̂ exists only inside the scoring stage.
-    val coded = sq8Encode(e, lo, step, dim)
-      .withColumn("xhat", sq8Decode(col("codes"), lo, step))
-    val qs = queries(base, dim)
-    val scored = coded.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_adc",
-        round(call_function("vec_dot", col("q_emb"), col("xhat")) /
-          (col("q_norm") * col("recon_norm")), 6))
-    topKWithRerank(scored, rerank, cand =>
-      score(cand.join(
-        e.select(col("vec_id"), col("embedding"), col("norm")), "vec_id")))
-  }
-
-  /** Corpus entry point for [[sq8TopKOf]]. */
-  def sq8TopK(spark: SparkSession, dir: String,
-              rerank: Int = 10 * K): DataFrame =
-    sq8TopKOf(Tables.embeddings(spark, dir), rerank)
-
-  /** IVF × SQ8 (the FAISS IVFScalarQuantizer composition — the fourth
-    * cell of the pruning×compression matrix beside IVF, PQ and IVFADC):
-    * the coarse quantizer PRUNES (a query scores only its probed
-    * lists' members, probes/lists → 0 under the √n laws), SQ8
-    * compresses the RESIDUALS (x − centroid, one byte per dimension,
-    * bounds trained on the residual sample — residuals concentrate
-    * near 0, so the 256-level grid spans a tighter range than raw
-    * vectors'). x̂ = c_list + decode(codes) with ‖x̂‖ exact at encode
-    * time; the scorer decodes once per probed row BEFORE the query
-    * join (no LUT — SQ8's ADC is decode-and-dot, FAISS's SQ shape) and
-    * the bounded exact rerank recovers ranking fidelity exactly as in
-    * [[ivfPqSearch]]. Spec-gated by the same structural invariant as
-    * every family here: all lists + corpus-wide rerank ≡ brute force
-    * ROW-FOR-ROW; measured beside IVFADC in docs/SCALE.md (at equal
-    * pruning, SQ8 residuals buy back most of PQ's ADC loss for 16×
-    * the code size — 64 B vs 4 B per vector). */
-  def ivfSq8TopK(spark: SparkSession, dir: String,
-                 rerank: Int = 10 * K,
-                 probesOverride: Option[Int] = None): DataFrame = {
-    // fail fast on the cheap argument checks BEFORE the build trains
-    // the quantizer and grid (the ivfPqTopK discipline)
-    require(rerank >= 1, s"IVF-SQ8 without rerank is not served ($rerank)")
-    probesOverride.foreach(p =>
-      require(p >= 1, s"probes must be >= 1 (got $p)"))
-    ivfSq8SearchCore(Tables.embeddings(spark, dir), ivfSq8Build(spark, dir),
-      rerank, probesOverride, None, None)
-  }
-
-  /** A built IVF-SQ8 index — the second compression family's serving
-    * artifact (the [[PqIndex]] shape at the SQ8 codes layout): derived
-    * list count, trained coarse centroids, the per-dimension RESIDUAL
-    * quantization grid (lo, step — the family's analogue of the PQ
-    * codebooks, bounded driver-side model coefficients), and the coded
-    * corpus frame (vec_id, list_id, codes, recon_norm — dim bytes +
-    * one double per vector, never embeddings). No rotation seam: the
-    * SQ8 grid is per-dimension by construction and the OPQ
-    * subspace-balancing objective has no analogue here. */
-  case class Sq8Index(dim: Int, numLists: Int,
-                      centroids: Array[Array[Double]],
-                      lo: Array[Double], step: Array[Double],
-                      coded: DataFrame)
-
-  /** The training/encode half of [[ivfSq8TopK]] (the build-once side of
-    * the serving split — [[ivfPqBuild]]'s exact counterpart for the
-    * SQ8 family): derive the √n list count, train the coarse quantizer
-    * on the one bounded lowest-hash sample, train the per-dimension
-    * SQ8 grid on the RESIDUAL sample (residuals concentrate near 0, so
-    * the 256-level grid spans a tighter range than raw vectors’), and
-    * encode the corpus through [[ivfSq8Encode]]. Bit-deterministic end
-    * to end (LCG sample, first-minimum argmins, min/max grid), so two
-    * builds over the same corpus produce identical artifacts — the
-    * property the persisted round-trip specs lean on. */
-  def ivfSq8Build(spark: SparkSession, dir: String): Sq8Index = {
-    val base = Tables.embeddings(spark, dir)
-    val dim = dimOf(base)
-    val e = withNorm(base, dim).localCheckpoint(true)
-    val numLists = listsForCount(e.count())
-    val samp = ivfTrainingSample(e,
-        math.max(sampleKFor(numLists), pqSampleK(1 << PqBits)))
-      .localCheckpoint(eager = true)
-    val centroids = kmeansCentroids(samp, numLists, iters = 3)
-    val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    // SQ8 bounds on the RESIDUAL sample — the grid the codes live on
-    val sampResid = assignToLists(samp, cents)
-      .select(col("vec_id"), residualEmbedding.as("embedding"))
-    val (lo, step) = sq8Bounds(sampResid, dim)
-    Sq8Index(dim, numLists, centroids, lo, step,
-      ivfSq8Encode(e, centroids, lo, step, dim))
-  }
-
-  /** Encode a (vec_id, embedding, …) frame against FROZEN SQ8 index
-    * artifacts — nearest-centroid assignment, per-dimension residual
-    * byte codes, EXACT reconstruction norm (‖c_list + decode(codes)‖,
-    * fixed-order vec_dot). Per-row deterministic given the artifacts:
-    * a vector encodes to the same coded row whether it was present at
-    * build time or handed in later — what makes [[sq8IndexAppend]]
-    * exact rather than approximate (the [[ivfPqEncode]] contract).
-    * The corpus is touched in ONE pass: list_id rides through
-    * [[sq8Encode]]’s `extra` seam (no second assignment, no join
-    * back), and the residual-norm column sq8Encode emits is dropped
-    * unreferenced, so column pruning removes its fold entirely. */
-  private[graft] def ivfSq8Encode(e: DataFrame,
-                                  centroids: Array[Array[Double]],
-                                  lo: Array[Double], step: Array[Double],
-                                  dim: Int): DataFrame = {
-    val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    val assigned = assignToLists(e, cents)
-    sq8Encode(
-        assigned.select(col("vec_id"), col("list_id"),
-          residualEmbedding.as("embedding")),
-        lo, step, dim, extra = Seq("list_id"))
-      .drop("recon_norm")
-      .withColumn("xhat",
-        zip_with(
-          element_at(cents, col("list_id").cast(IntegerType)),
-          sq8Decode(col("codes"), lo, step), (a, b) => a + b))
-      .withColumn("recon_norm",
-        sqrt(call_function("vec_dot", col("xhat"), col("xhat"))))
-      .select(col("vec_id"), col("list_id"), col("codes"),
-        col("recon_norm"))
-  }
-
-  /** The probed-search half of [[ivfSq8TopK]] (the search-many side —
-    * [[ivfPqSearchCore]]’s counterpart at the SQ8 codes layout): per
-    * query probe the nearest lists, reconstruct x̂ = c_list +
-    * decode(codes) ONCE per surviving coded row (hoisted BEFORE the
-    * query join — see [[sq8TopKOf]]; SQ8’s ADC is decode-and-dot, no
-    * LUT), two-stage top-width + bounded exact rerank through the
-    * shared [[topKWithRerank]]. The probed list ids are pushed as a
-    * STATIC `list_id IN (...)` filter under the join: semantically
-    * redundant with the equi-join, but on a persisted index
-    * partitioned by list_id it becomes a PartitionFilter at the scan
-    * (spec-pinned) — the coarse quantizer’s pruning turned into
-    * file-level I/O pruning, identical to the IVFADC serving path.
-    * Works identically over an in-memory [[ivfSq8Build]] result and a
-    * [[sq8IndexLoad]]-ed parquet index — the spec asserts the two are
-    * row-for-row equal. */
-  private def ivfSq8SearchCore(baseRaw: DataFrame, index: Sq8Index,
-                               rerank: Int,
-                               probesOverride: Option[Int],
-                               allowed: Option[DataFrame],
-                               queryVecs: Option[DataFrame]): DataFrame = {
-    require(rerank >= 1, s"IVF-SQ8 without rerank is not served ($rerank)")
-    val numLists = index.numLists
-    val numProbes = probesOverride.getOrElse(probesForLists(numLists))
-    require(numProbes >= 1 && numProbes <= numLists,
-      s"probes $numProbes out of [1, $numLists]")
-    val dim = index.dim
-    val cents = array(index.centroids.map(c => array(c.map(lit): _*)): _*)
-    val qs = queryVecs.map(prepQueries(_, dim))
-      .getOrElse(queries(baseRaw, dim))
-    val probed = qs
-      .withColumn("cents", cents)
-      .withColumn("dists", expr(
-        "transform(cents, c -> vec_dot(c, c) - 2.0D * vec_dot(c, q_emb))"))
-      .withColumn("probe", explode(expr(
-        s"""slice(array_sort(zip_with(dists, sequence(1, $numLists),
-           |  (d, i) -> struct(d AS d, i AS i))), 1, $numProbes)"""
-          .stripMargin)))
-      .select(col("q_id"), col("q_emb"), col("q_norm"),
-        col("probe.i").cast(LongType).as("list_id"))
-    // bounded probe frame materialized ONCE: the static IN-list collect
-    // and the broadcast join side both read the checkpoint (the
-    // ivfPqSearchCore discipline)
-    val probedCk = probed.localCheckpoint(eager = true)
-    val probedIds = probedCk.select("list_id").distinct()
-      .collect().map(_.getLong(0)).sorted
-    // predicate pre-filter (see ivfPqSearchWhere): semi-join BEFORE
-    // ranking; planner-chosen strategy
-    val codedAll = allowed.fold(index.coded)(a =>
-      index.coded.join(a.select("vec_id"), Seq("vec_id"), "left_semi"))
-    val scored = codedAll
-      .filter(col("list_id").isin(probedIds: _*))
-      .withColumn("xhat",
-        zip_with(
-          element_at(cents, col("list_id").cast(IntegerType)),
-          sq8Decode(col("codes"), index.lo, index.step), (a, b) => a + b))
-      .join(broadcast(probedCk), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_adc",
-        round(call_function("vec_dot", col("q_emb"), col("xhat")) /
-          (col("q_norm") * col("recon_norm")), 6))
-    // exact rerank: join the bounded candidate set to the RAW corpus,
-    // norm only the queries·width surviving rows
-    topKWithRerank(scored, rerank, cand =>
-      score(withNorm(
-        cand.join(baseRaw.select(col("vec_id"), col("embedding")),
-          "vec_id"), dim)))
-  }
-
-  /** [[ivfSq8TopK]] for an EXTERNAL query batch over any corpus frame —
-    * the `*Of` serving/audit seam ([[ivfPqSearchForOf]]’s SQ8
-    * counterpart): [[sq8IndexRecallAudit]] hands in “build corpus ∪
-    * appended batches” here. `allowed` composes the metadata
-    * pre-filter with the external batch. */
-  def ivfSq8SearchForOf(base: DataFrame, index: Sq8Index,
-                        queryVecs: DataFrame,
-                        rerank: Int = 10 * K,
-                        probesOverride: Option[Int] = None,
-                        allowed: Option[DataFrame] = None): DataFrame =
-    ivfSq8SearchCore(base, index, rerank, probesOverride, allowed,
-      Some(queryVecs))
-
-  // -- persisted IVF-SQ8 index (the second family’s serving split) -------
-
-  /** The ONE schema of the persisted SQ8 `codes/` frame — the only
-    * family-specific piece of the persisted-index lifecycle (the
-    * r18-verdict seam: build/load/search/append/compact are
-    * family-agnostic EXCEPT the codes layout): per-dimension residual
-    * bytes instead of packed PQ nibbles; same explicit LongType pin on
-    * the `list_id` partition column against directory-name type
-    * inference. Shared by the loader and the compactor so they can
-    * never diverge. */
-  private val sq8CodesSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("codes", ArrayType(ByteType)),
-    StructField("recon_norm", DoubleType),
-    StructField("list_id", LongType)))
-
-  /** [[pqIndexBuild]] for the SQ8 family: build the IVF-SQ8 index for
-    * the corpus at `dir` and PERSIST it under `indexPath` — closing
-    * the r18 gap where the family at the coarse probe ceiling at
-    * rerank 40 (where IVFADC needs 100 — docs/SCALE.md addendum 5)
-    * retrained on every call. Layout mirrors the IVFADC index:
-    *
-    *  - `meta/`       one row (dim, num_lists, family='ivf_sq8');
-    *  - `centroids/`  (list_id, centroid) — numLists rows;
-    *  - `bounds/`     (pos, lo, step) — the per-dimension grid, the
-    *                  family’s analogue of `codebooks/`;
-    *  - `codes/`      the coded corpus, written partitionBy(list_id)
-    *                  so a probed search prunes at the FILE level
-    *                  (spec-pinned PartitionFilters).
-    *
-    * Everything stored is either bounded (centroids/bounds/meta — the
-    * model-coefficient family) or exact (tinyint codes, parquet
-    * doubles), so the loaded index reproduces the in-memory search
-    * BIT-FOR-BIT. Returns the in-memory index it persisted. */
-  def sq8IndexBuild(spark: SparkSession, dir: String,
-                    indexPath: String): Sq8Index = {
-    import spark.implicits._
-    val idx = ivfSq8Build(spark, dir)
-    Seq((idx.dim, idx.numLists, "ivf_sq8"))
-      .toDF("dim", "num_lists", "family")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
-    idx.centroids.zipWithIndex
-      .map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
-    (0 until idx.dim).map(d => (d, idx.lo(d), idx.step(d)))
-      .toDF("pos", "lo", "step")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/bounds")
-    idx.coded
-      .select(col("vec_id"), col("codes"), col("recon_norm"),
-        col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$indexPath/codes")
-    idx
-  }
-
-  /** Load a [[sq8IndexBuild]]-written index (see [[pqIndexLoad]] — the
-    * bounded artifacts collect in canonical order, the coded frame
-    * stays distributed; the [[requireFamily]] guard rejects an IVFADC
-    * index whose payload columns this schema would read as nulls). */
-  def sq8IndexLoad(spark: SparkSession, indexPath: String): Sq8Index = {
-    val meta = requireFamily(spark, indexPath, "ivf_sq8")
-    val dim = meta.getAs[Int]("dim")
-    val numLists = meta.getAs[Int]("num_lists")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("list_id").select("centroid")
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(centroids.length == numLists,
-      s"graft: index at $indexPath has ${centroids.length} centroids, " +
-        s"meta says $numLists")
-    val bRows = spark.read.parquet(s"$indexPath/bounds").collect()
-    require(bRows.length == dim &&
-        bRows.map(_.getAs[Int]("pos")).toSet == (0 until dim).toSet,
-      s"graft: index at $indexPath has malformed bounds " +
-        s"(${bRows.length} rows for dim $dim)")
-    val lo = new Array[Double](dim)
-    val step = new Array[Double](dim)
-    bRows.foreach { r =>
-      val d = r.getAs[Int]("pos")
-      lo(d) = r.getAs[Double]("lo")
-      step(d) = r.getAs[Double]("step")
-    }
-    val coded = spark.read.schema(sq8CodesSchema)
-      .parquet(s"$indexPath/codes")
-      .select(col("vec_id"), col("list_id"), col("codes"),
-        col("recon_norm"))
-    Sq8Index(dim, numLists, centroids, lo, step, coded)
-  }
-
-  /** The probed search over an in-memory [[Sq8Index]] — the
-    * [[ivfPqSearch]] shape for the SQ8 family ([[sq8IndexSearch]] is
-    * this over a loaded index; the append spec derives its
-    * union-from-the-start reference through it). */
-  def ivfSq8Search(spark: SparkSession, dir: String, index: Sq8Index,
-                   rerank: Int = 10 * K,
-                   probesOverride: Option[Int] = None): DataFrame =
-    ivfSq8SearchCore(Tables.embeddings(spark, dir), index, rerank,
-      probesOverride, None, None)
-
-  /** Search a persisted SQ8 index: [[sq8IndexLoad]] + the shared
-    * search core — no training, no corpus encode; spec-asserted
-    * row-for-row equal to the in-memory [[ivfSq8TopK]] at the same
-    * parameters (including a non-default probe knob). */
-  def sq8IndexSearch(spark: SparkSession, dir: String, indexPath: String,
-                     rerank: Int = 10 * K,
-                     probesOverride: Option[Int] = None): DataFrame =
-    ivfSq8Search(spark, dir, sq8IndexLoad(spark, indexPath),
-      rerank, probesOverride)
-
-  /** Filtered search over a persisted SQ8 index — the
-    * [[pqIndexSearchWhere]] shape: PRE-filter semantics, the probe
-    * PartitionFilter composing with the predicate semi-join. */
-  def sq8IndexSearchWhere(spark: SparkSession, dir: String,
-                          indexPath: String, allowed: DataFrame,
-                          rerank: Int = 10 * K,
-                          probesOverride: Option[Int] = None): DataFrame =
-    ivfSq8SearchCore(Tables.embeddings(spark, dir),
-      sq8IndexLoad(spark, indexPath), rerank, probesOverride,
-      Some(allowed), None)
-
-  /** [[pqIndexSearchFor]] for the SQ8 family — stored artifacts,
-    * externally supplied query batch, optional metadata pre-filter:
-    * the full serving loop without retraining. */
-  def sq8IndexSearchFor(spark: SparkSession, dir: String,
-                        indexPath: String, queryVecs: DataFrame,
-                        rerank: Int = 10 * K,
-                        probesOverride: Option[Int] = None,
-                        allowed: Option[DataFrame] = None): DataFrame =
-    ivfSq8SearchCore(Tables.embeddings(spark, dir),
-      sq8IndexLoad(spark, indexPath), rerank, probesOverride,
-      allowed, Some(queryVecs))
-
-  /** Append a batch of NEW vectors to a persisted SQ8 index WITHOUT
-    * retraining — [[pqIndexAppend]]’s contract verbatim at this codes
-    * layout: artifacts stay FROZEN (centroids, grid), the delta is
-    * assigned + residual-encoded by the same [[ivfSq8Encode]] the
-    * build ran (per-row deterministic, so an appended vector carries
-    * the IDENTICAL coded row it would have carried at build time —
-    * spec-asserted), and the rows land in the same
-    * partitionBy(list_id) layout as a parquet append. Same caller
-    * contract: vec_ids are new ([[pqIndexDupIds]] audits it — the
-    * physical audits are family-agnostic), appends SERIALIZED against
-    * [[sq8IndexCompact]], drift watched by [[sq8IndexRecallAudit]]. */
-  def sq8IndexAppend(spark: SparkSession, newVecs: DataFrame,
-                     indexPath: String): Unit = {
-    val idx = sq8IndexLoad(spark, indexPath)
-    ivfSq8Encode(withNorm(newVecs, idx.dim), idx.centroids, idx.lo,
-        idx.step, idx.dim)
-      .select(col("vec_id"), col("codes"), col("recon_norm"),
-        col("list_id"))
-      .write.mode("append").partitionBy("list_id")
-      .parquet(s"$indexPath/codes")
-  }
-
-  /** [[pqIndexCompact]] for the SQ8 family — the same staged-rename
-    * swap, crash recovery, single-writer contract and deferred-vacuum
-    * mode (see that scaladoc), reading through [[sq8CodesSchema]]:
-    * the one family-specific piece. Returns (files before, after). */
-  def sq8IndexCompact(spark: SparkSession, indexPath: String,
-                      vacuumOld: Boolean = true): (Long, Long) =
-    indexCompactCore(spark, indexPath, sq8CodesSchema, "ivf_sq8",
-      vacuumOld)
-
-  /** [[pqIndexRecallAudit]] for the SQ8 family — the same drift
-    * watchdog economics (frozen grid vs current corpus, ground truth
-    * from one bounded brute-force pass), measured against the stored
-    * SQ8 artifacts. Same reading: mean recall flat vs the build-time
-    * audit → keep appending; down → rebuild and cut over. */
-  def sq8IndexRecallAudit(spark: SparkSession, base: DataFrame,
-                          indexPath: String, queryVecs: DataFrame,
-                          rerank: Int = 10 * K,
-                          probesOverride: Option[Int] = None): DataFrame =
-    recallOf(
-      bruteForceTopKFor(base, queryVecs),
-      ivfSq8SearchForOf(base, sq8IndexLoad(spark, indexPath), queryVecs,
-        rerank, probesOverride))
-
   // -- retrain & compaction decision records (r19: the composition) -------
 
-  /** Run the drift watchdog and APPEND its summary to a persisted
-    * audit LOG under the index — the history the retrain decision
-    * reads. r18 built the gauge ([[pqIndexRecallAudit]]) but left it
-    * ephemeral: a deployment schedules the audit per append window,
-    * and one reading cannot say "degraded versus what?" — the
+  /** Run the drift watchdog ([[indexRecallAudit]]) and APPEND its summary
+    * to a persisted audit LOG under the index — the history the retrain
+    * decision reads: one reading cannot say "degraded versus what?" — the
     * decision needs the build-time baseline and the trend, which is
     * exactly what this log accumulates. Contract (what makes
     * [[indexRebuildAdvice]]'s baseline meaningful): log ONCE right
-    * after [[pqIndexBuild]] with build-distribution traffic — that
+    * after [[indexBuild]] with build-distribution traffic — that
     * reading becomes audit_seq 1, the baseline — then once per append
     * window with that window's traffic, at the SAME knobs every time
     * (the three-readings-identical-knobs discipline the r18 drift
@@ -2617,29 +2126,15 @@ object Similarity {
     * rounded at 6 dp — deterministic at any parallelism. Bounded
     * end-to-end: queries-sized input, 1-row output, the
     * model-metadata family. Returns the appended row. */
-  def pqIndexAuditLog(spark: SparkSession, base: DataFrame,
-                      indexPath: String, queryVecs: DataFrame,
-                      rerank: Int = 10 * K,
-                      probesOverride: Option[Int] = None): DataFrame =
-    auditLogAppend(spark, indexPath,
-      pqIndexRecallAudit(spark, base, indexPath, queryVecs, rerank,
-        probesOverride))
-
-  /** [[pqIndexAuditLog]] for the SQ8 family — same log shape, same
-    * baseline contract, gauged by [[sq8IndexRecallAudit]]. */
-  def sq8IndexAuditLog(spark: SparkSession, base: DataFrame,
-                       indexPath: String, queryVecs: DataFrame,
-                       rerank: Int = 10 * K,
-                       probesOverride: Option[Int] = None): DataFrame =
-    auditLogAppend(spark, indexPath,
-      sq8IndexRecallAudit(spark, base, indexPath, queryVecs, rerank,
-        probesOverride))
-
-  private def auditLogAppend(spark: SparkSession, indexPath: String,
-                             audit: DataFrame): DataFrame = {
+  def indexAuditLog(spark: SparkSession, base: DataFrame,
+                    indexPath: String, queryVecs: DataFrame,
+                    rerank: Int = 10 * K,
+                    probesOverride: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val logPath = s"$indexPath/audit_log"
-    val rows = audit.select("q_id", "recall").orderBy("q_id").collect()
+    val rows = indexRecallAudit(spark, base, indexPath, queryVecs, rerank,
+        probesOverride)
+      .select("q_id", "recall").orderBy("q_id").collect()
     require(rows.nonEmpty, "graft: audit produced no query rows")
     val recalls = rows.map(_.getDouble(1))
     val mean = math.round(recalls.sum / recalls.length * 1e6) / 1e6
@@ -2696,7 +2191,7 @@ object Similarity {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p),
       s"graft: no audit log at $indexPath — log a build-time baseline " +
-        "with pqIndexAuditLog/sq8IndexAuditLog first")
+        "with indexAuditLog first")
     val log = spark.read.parquet(logPath).orderBy("audit_seq").collect()
     require(log.nonEmpty, s"graft: audit log at $indexPath is empty")
     val baseline = log.head
@@ -2735,7 +2230,7 @@ object Similarity {
   }
 
   /** The compaction DECISION record — closes the observability→action
-    * gap on [[pqIndexStats]] (r18 verdict #5: per-list n_files is
+    * gap on [[indexStats]] (r18 verdict #5: per-list n_files is
     * "the compaction trigger" but nothing consumed it): one row over
     * the family-agnostic slim scan — (n_lists, n_rows, n_files,
     * max_files_per_list, files_per_list_threshold, compact) with
@@ -2749,7 +2244,7 @@ object Similarity {
     * scheduler reads after each append window. */
   def indexCompactionAdvice(spark: SparkSession, indexPath: String,
                             maxFilesPerList: Int = 4): DataFrame =
-    pqIndexStats(spark, indexPath)
+    indexStats(spark, indexPath)
       .agg(count(lit(1)).as("n_lists"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_files")).as("n_files"),

@@ -375,12 +375,18 @@ object Streaming {
     * proceed. */
   private def stageSymlink(dir: String, fileName: String,
                            prefix: String): String = {
+    val target = java.nio.file.Paths.get(s"$dir/$fileName")
+    // the landing link stands for ONE file: a directory-form dataset
+    // (what a Spark write produces) would be one entry the file-stream
+    // source skips, streaming 0 rows with no error
+    require(java.nio.file.Files.isRegularFile(target),
+      s"graft: streaming source $target is not a single parquet file " +
+        "(a directory-form dataset would stream 0 rows)")
     val landing = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
       prefix + graft.sources.CsvIO.pathKey(dir))
     java.nio.file.Files.createDirectories(landing)
     val link = landing.resolve(fileName)
-    val target = java.nio.file.Paths.get(s"$dir/$fileName")
     if (java.nio.file.Files.isSymbolicLink(link) &&
         java.nio.file.Files.readSymbolicLink(link) != target)
       java.nio.file.Files.delete(link)

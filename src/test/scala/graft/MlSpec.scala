@@ -1,6 +1,7 @@
 package graft
 
 import graft.ml.{OlsPipeline, ZScaler}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +83,35 @@ class MlSpec extends AnyFunSuite {
     assert(r2 > 0.95, s"r2=$r2")
     assert(adjR2 > 0.95)
     assert(rmse < 6.0, s"rmse=$rmse") // ≳ noise sd (≈2.9), bounded above
+  }
+
+  test("fitCached keeps one fit: a session fitted before another " +
+      "becomes collectable") {
+    // the main session owns the cached projection, so the cache entry
+    // itself pins none of the probe sessions below
+    OlsPipeline.fitCached(spark, sf)
+    def fitInNewSession(): java.lang.ref.WeakReference[SparkSession] = {
+      val a = spark.newSession()
+      OlsPipeline.fitCached(a, sf)
+      new java.lang.ref.WeakReference(a)
+    }
+    val ref = fitInNewSession()
+    val b = spark.newSession()
+    val fb = OlsPipeline.fitCached(b, sf)
+    // q_ols_forecast and q_ols_metrics still share one fit in a session
+    assert(OlsPipeline.fitCached(b, sf) eq fb)
+    // Spark itself pins a session for up to a minute: every shuffle
+    // submission starts a `shuffle-exchange` pool thread, which inherits
+    // the then-active session in its inheritable thread-locals and
+    // keeps it until the pool's 60 s idle keep-alive ends the thread
+    // (seen in a heap dump of this probe). The poll outlasts that.
+    val deadline = System.nanoTime() + 90L * 1000000000L
+    while (ref.get != null && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(500)
+    }
+    assert(ref.get == null,
+      "the session fitted first is still reachable after a fit in another")
   }
 
   test("M7 calibration on county aggregates is ~identity (slope≈1, icpt≈0)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.Rotation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,7 +76,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("pqEncode matches the driver-side argmin replica exactly") {
-    val got = Similarity.pqEncode(base, books, dim).collect()
+    val got = Similarity.PqCodec(books).encode(base).collect()
       .map(r => r.getLong(0) ->
         ((r.getSeq[Int](1), r.getDouble(2)))).toMap
     val raw = base.select("vec_id", "embedding").collect()
@@ -98,7 +99,7 @@ class PqSpec extends AnyFunSuite {
     val plant = (0 until sub).flatMap(m =>
       books(m)(chosen(m)).map(_.toFloat))
     val df = Seq((1L, plant)).toDF("vec_id", "embedding")
-    val r = Similarity.pqEncode(df, books, dim).collect()(0)
+    val r = Similarity.PqCodec(books).encode(df).collect()(0)
     // float-rounding the plant can move an argmin only if two entries
     // are near-identical; replica decides the expected codes from the
     // same floats, so the assertion is exact either way
@@ -119,7 +120,7 @@ class PqSpec extends AnyFunSuite {
       .select("q_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(rr: Int): Double = {
-      val got = Similarity.pqTopK(spark, sf, rerank = rr)
+      val got = Similarity.flatTopKOf(base, rerank = rr)
         .select("q_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       got.intersect(bf).size.toDouble / bf.size
@@ -137,21 +138,38 @@ class PqSpec extends AnyFunSuite {
       s"rerank must not lose recall: $adc / $r40 / $r100")
   }
 
-  test("IVFADC: all lists + corpus-wide rerank ≡ brute force " +
-      "row-for-row") {
-    // the composed path inherits ivfTopK's structural invariant:
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    .toSeq
+
+  // Lifecycle laws both codecs obey: one body per law, registered once
+  // per codec under that family's test name, so a law cannot drift
+  // between PQ and SQ8.
+
+  test("IVFADC: all lists + corpus-wide rerank ≡ brute force row-for-row")(
+    allListsLaw(Similarity.Pq()))
+  test("IVF-SQ8 composition: all lists + corpus-wide rerank ≡ brute " +
+      "force row-for-row; the derived laws return k rows per query")(
+    allListsLaw(Similarity.Sq8))
+
+  private def allListsLaw(c: Similarity.Codec): Unit = {
+    // the structural invariant every codec inherits from ivfTopK:
     // assignment, residual coding, ADC ranking and rerank may lose a
     // candidate ONLY through probe pruning / rerank truncation — with
     // both disabled the result must be bit-identical to brute force
     // (ranks, cosines, tiebreaks)
-    val n = Tables.embeddings(spark, sf).count()
-    val lists = Similarity.listsForCount(n)
-    val got = Similarity.ivfPqTopK(spark, sf, rerank = n.toInt,
-        probesOverride = Some(lists)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val bf = Similarity.bruteForceTopK(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(got.toSeq === bf.toSeq)
+    val n = base.count()
+    assert(rows(Similarity.ivfAdcTopK(spark, sf, c, rerank = n.toInt,
+        probesOverride = Some(Similarity.listsForCount(n)))) ===
+      rows(Similarity.bruteForceTopK(spark, sf)))
+    // at the derived laws the search stays well-formed: k rows per
+    // query, ranks dense from 1
+    val got = Similarity.ivfAdcTopK(spark, sf, c).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val perQ = got.groupBy(_._1).values
+    assert(perQ.forall(_.map(_._2).sorted ==
+      (1L to Similarity.K).toVector))
+    assert(perQ.size === Similarity.QueryK)
   }
 
   test("IVFADC at the derived laws: compression costs ≈ nothing beyond " +
@@ -170,7 +188,7 @@ class PqSpec extends AnyFunSuite {
       got.intersect(bf).size.toDouble / bf.size
     }
     val rIvf = recall(Similarity.ivfTopK(spark, sf))
-    val rAdc = recall(Similarity.ivfPqTopK(spark, sf))
+    val rAdc = recall(Similarity.ivfAdcTopK(spark, sf))
     assert(rAdc <= rIvf + 1e-9,
       s"IVFADC $rAdc cannot exceed its own candidate superset's $rIvf")
     assert(rAdc >= rIvf - 0.05,
@@ -179,7 +197,7 @@ class PqSpec extends AnyFunSuite {
 
   test("packed-code storage: 2 codes per byte, exact round-trip " +
       "through a real parquet write") {
-    val coded = Similarity.pqEncode(base, books, dim)
+    val coded = Similarity.PqCodec(books).encode(base)
     val packed = coded.select(col("vec_id"),
       Similarity.pqPackCodes(col("codes")).as("packed"))
     // width: sub/2 tinyints per vector — the 64x storage arithmetic
@@ -220,7 +238,7 @@ class PqSpec extends AnyFunSuite {
   test("IVFADC plan: the probed search is a broadcast equi-join on " +
       "list_id, never a cartesian") {
     import org.apache.spark.sql.execution.FormattedMode
-    val p = Similarity.ivfPqTopK(spark, sf)
+    val p = Similarity.ivfAdcTopK(spark, sf)
       .queryExecution.explainString(FormattedMode)
     val cnt = (op: String) =>
       p.linesIterator.count(_.matches(s"""\\(\\d+\\) $op.*"""))
@@ -244,70 +262,119 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
+  /** The trained artifacts of a codec, as comparable values. */
+  private def artifacts(c: Similarity.VectorCodec): Any = c match {
+    case Similarity.PqCodec(books) => books.map(_.map(_.toSeq).toSeq).toSeq
+    case Similarity.Sq8Codec(lo, step) => (lo.toSeq, step.toSeq)
+  }
+
+  /** A coded frame's content keyed by vec_id (codes as a plain Seq —
+    * PQ ints, SQ8 bytes). */
+  private def content(coded: org.apache.spark.sql.DataFrame) =
+    coded.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Any](2).toVector,
+        r.getDouble(3)))
+      .sortBy(_._1).toSeq
+
   test("persisted index loads back bitwise: centroids, codebooks, and " +
-      "the coded frame survive the parquet round-trip") {
+      "the coded frame survive the parquet round-trip")(
+    roundTripLaw(Similarity.Pq()))
+  test("persisted SQ8 index loads back bitwise: centroids, the " +
+      "per-dimension grid, and the coded frame survive the parquet " +
+      "round-trip")(
+    roundTripLaw(Similarity.Sq8))
+
+  private def roundTripLaw(c: Similarity.Codec): Unit = {
     withIndexDir { dir =>
-      val built = Similarity.pqIndexBuild(spark, sf, dir)
-      val loaded = Similarity.pqIndexLoad(spark, dir)
+      val built = Similarity.indexBuild(spark, sf, dir, c)
+      val loaded = Similarity.indexLoad(spark, dir)
       assert(loaded.dim === built.dim)
-      assert(loaded.sub === built.sub)
       assert(loaded.numLists === built.numLists)
       // bounded artifacts: parquet doubles are lossless, so BITWISE
       for (l <- built.centroids.indices)
         assert(loaded.centroids(l).toSeq === built.centroids(l).toSeq,
           s"centroid $l diverged")
-      for (m <- built.books.indices; c <- built.books(m).indices)
-        assert(loaded.books(m)(c).toSeq === built.books(m)(c).toSeq,
-          s"book $m entry $c diverged")
-      // coded frame: packed codes invert exactly, recon_norm is a stored
+      assert(artifacts(loaded.codec) === artifacts(built.codec))
+      // coded frame: stored codes invert exactly, recon_norm is a stored
       // double — content equality keyed by vec_id
-      def content(idx: Similarity.PqIndex) = idx.coded.collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getSeq[Int](2), r.getDouble(3)))).toMap
-      assert(content(loaded) === content(built))
+      assert(content(loaded.coded) === content(built.coded))
     }
   }
 
   test("search-from-disk ≡ in-memory ivfPqTopK row-for-row at the " +
-      "derived laws (and at a non-default probe count)") {
+      "derived laws (and at a non-default probe count)")(
+    diskEqualsMemoryLaw(Similarity.Pq()))
+  test("SQ8 search-from-disk ≡ in-memory ivfSq8TopK row-for-row at " +
+      "the derived laws (and at a non-default probe count) — the " +
+      "family retrained per call before r19")(
+    diskEqualsMemoryLaw(Similarity.Sq8))
+
+  private def diskEqualsMemoryLaw(c: Similarity.Codec): Unit = {
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir)
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.pqIndexSearch(spark, sf, dir)) ===
-        rows(Similarity.ivfPqTopK(spark, sf)))
+      Similarity.indexBuild(spark, sf, dir, c)
+      val loaded = Similarity.indexLoad(spark, dir)
+      assert(rows(Similarity.ivfSearch(base, loaded)) ===
+        rows(Similarity.ivfAdcTopK(spark, sf, c)))
       // a second search over the SAME stored index (search-many): no
       // retraining happened, so a different probe knob must still agree
       // with the in-memory path at that knob
-      assert(rows(Similarity.pqIndexSearch(spark, sf, dir,
+      assert(rows(Similarity.ivfSearch(base, loaded,
           probesOverride = Some(2))) ===
-        rows(Similarity.ivfPqTopK(spark, sf, probesOverride = Some(2))))
+        rows(Similarity.ivfAdcTopK(spark, sf, c, probesOverride = Some(2))))
     }
   }
 
   test("persisted index: all lists + corpus-wide rerank ≡ brute force " +
-      "row-for-row (the structural invariant re-run from disk)") {
+      "row-for-row (the structural invariant re-run from disk)")(
+    persistedAllListsLaw(Similarity.Pq()))
+  test("persisted SQ8 index: all lists + corpus-wide rerank ≡ brute " +
+      "force row-for-row, and the exact-knob recall audit reads 1.0 " +
+      "per query from the stored artifacts")(
+    persistedAllListsLaw(Similarity.Sq8))
+
+  private def persistedAllListsLaw(c: Similarity.Codec): Unit = {
     withIndexDir { dir =>
-      val built = Similarity.pqIndexBuild(spark, sf, dir)
-      val n = Tables.embeddings(spark, sf).count()
-      val got = Similarity.pqIndexSearch(spark, sf, dir,
-          rerank = n.toInt, probesOverride = Some(built.numLists))
+      val built = Similarity.indexBuild(spark, sf, dir, c)
+      val n = base.count().toInt
+      val all = Some(built.numLists)
+      assert(rows(Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir),
+          rerank = n, probesOverride = all)) ===
+        rows(Similarity.bruteForceTopK(spark, sf)))
+      // the drift watchdog from disk at the exactness knobs: the
+      // per-query recall of a search that equals brute force is 1.0
+      // EXACTLY — the planted-identity gate of the audit surface
+      val qs = base.join(broadcast(Similarity.annQueryIds(base)),
+        "vec_id")
+      val audit = Similarity.indexRecallAudit(spark, base, dir, qs,
+          rerank = n, probesOverride = all)
         .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      val bf = Similarity.bruteForceTopK(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      assert(got.toSeq === bf.toSeq)
+      assert(audit.length === Similarity.QueryK)
+      assert(audit.forall(_.getAs[Double]("recall") === 1.0),
+        "exact-knob audit must read 1.0 recall per query")
+      // the audit log records the same reading, one dense row per call
+      val logged = (1 to 2).map(_ =>
+        Similarity.indexAuditLog(spark, base, dir, qs, rerank = n,
+          probesOverride = all).collect()(0))
+      assert(logged.map(_.getAs[Long]("audit_seq")) === Seq(1L, 2L))
+      assert(logged.forall(r => r.getAs[Double]("mean_recall") === 1.0 &&
+        r.getAs[Long]("n_queries") === Similarity.QueryK.toLong))
     }
   }
 
   test("persisted search plan: the codes scan carries a list_id " +
       "PartitionFilter (file-level probe pruning) and stays " +
-      "cartesian-free") {
+      "cartesian-free")(
+    partitionFilterLaw(Similarity.Pq()))
+  test("persisted SQ8 search plan: the codes scan carries a list_id " +
+      "PartitionFilter (file-level probe pruning) and stays " +
+      "cartesian-free")(
+    partitionFilterLaw(Similarity.Sq8))
+
+  private def partitionFilterLaw(c: Similarity.Codec): Unit = {
     import org.apache.spark.sql.execution.FormattedMode
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir)
-      val p = Similarity.pqIndexSearch(spark, sf, dir)
+      Similarity.indexBuild(spark, sf, dir, c)
+      val p = Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir))
         .queryExecution.explainString(FormattedMode)
       val cnt = (op: String) =>
         p.linesIterator.count(_.matches(s"""\\(\\d+\\) $op.*"""))
@@ -328,14 +395,14 @@ class PqSpec extends AnyFunSuite {
 
   test("determinism: identical manifest on re-run and under " +
       "repartitioning of the corpus") {
-    val a = Similarity.pqTopK(spark, sf, rerank = 0).collect().toSeq
-    val b = Similarity.pqTopK(spark, sf, rerank = 0).collect().toSeq
+    val a = Similarity.flatTopKOf(base, rerank = 0).collect().toSeq
+    val b = Similarity.flatTopKOf(base, rerank = 0).collect().toSeq
     assert(a === b)
     // the encode side is partitioning-independent (literal codebooks,
     // per-row argmin): same codes at any layout
-    val c1 = Similarity.pqEncode(base.repartition(7), books, dim)
+    val c1 = Similarity.PqCodec(books).encode(base.repartition(7))
       .orderBy("vec_id").collect().map(_.getSeq[Int](1).toVector).toSeq
-    val c2 = Similarity.pqEncode(base.repartition(1), books, dim)
+    val c2 = Similarity.PqCodec(books).encode(base.repartition(1))
       .orderBy("vec_id").collect().map(_.getSeq[Int](1).toVector).toSeq
     assert(c1 === c2)
   }
@@ -416,16 +483,18 @@ class PqSpec extends AnyFunSuite {
     // the plant: pure-ADC ranking, no rerank — the sharpest contrast
     val bfPlant = Similarity.bruteForceTopKOf(anisoCorpus)
     val pqPlant = recallOf(
-      Similarity.pqTopKOf(anisoCorpus, rerank = 0), bfPlant)
+      Similarity.flatTopKOf(anisoCorpus, rerank = 0), bfPlant)
     val opqPlant = recallOf(
-      Similarity.opqTopKOf(anisoCorpus, rerank = 0), bfPlant)
+      Similarity.flatTopKOf(anisoCorpus, rerank = 0,
+        rotate = Rotation.Parametric), bfPlant)
     assert(opqPlant >= pqPlant + 0.15,
       s"expected a large OPQ lift on the plant: pq=$pqPlant opq=$opqPlant")
     // the honest control: the isotropic corpus has nothing to
     // rebalance, so OPQ must neither help nor hurt materially
     val bf = Similarity.bruteForceTopK(spark, sf)
-    val pqIso = recallOf(Similarity.pqTopK(spark, sf, rerank = 0), bf)
-    val opqIso = recallOf(Similarity.opqTopKOf(base, rerank = 0), bf)
+    val pqIso = recallOf(Similarity.flatTopKOf(base, rerank = 0), bf)
+    val opqIso = recallOf(Similarity.flatTopKOf(base, rerank = 0,
+        rotate = Rotation.Parametric), bf)
     assert(math.abs(opqIso - pqIso) <= 0.15,
       s"isotropic control moved: pq=$pqIso opq=$opqIso")
     assert(opqIso >= 0.30, s"isotropic OPQ ADC recall $opqIso below band")
@@ -436,53 +505,43 @@ class PqSpec extends AnyFunSuite {
   test("rotated persisted index: rotation loads back bitwise and " +
       "search-from-disk ≡ the rotated in-memory path row-for-row") {
     withIndexDir { dir =>
-      val built = Similarity.pqIndexBuild(spark, sf, dir, rotate = true)
-      assert(built.rotation.nonEmpty, "rotate=true built no rotation")
-      val loaded = Similarity.pqIndexLoad(spark, dir)
+      val built = Similarity.indexBuild(spark, sf, dir,
+          rotate = Rotation.Parametric)
+      assert(built.rotation.nonEmpty, "a parametric build has no rotation")
+      val loaded = Similarity.indexLoad(spark, dir)
       assert(loaded.rotation.nonEmpty, "rotation flag lost in meta")
       val (r1, r2) = (built.rotation.get, loaded.rotation.get)
       for (i <- r1.indices)
         assert(r1(i).toSeq === r2(i).toSeq, s"rotation row $i diverged")
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.pqIndexSearch(spark, sf, dir)) ===
-        rows(Similarity.ivfPqSearch(spark, sf,
-          Similarity.ivfPqBuild(spark, sf, rotate = true))))
+      assert(rows(Similarity.ivfSearch(base,
+          Similarity.indexLoad(spark, dir))) ===
+        rows(Similarity.ivfSearch(base,
+          Similarity.ivfBuild(spark, sf, rotate = Rotation.Parametric))))
     }
   }
 
-  test("NP-rotated persisted index (r19 ship decision): rotateNP " +
-      "persists its rotation bitwise, search-from-disk ≡ the " +
-      "NP-rotated in-memory path row-for-row, and the two rotation " +
-      "modes fail loud together") {
+  test("NP-rotated persisted index (r19 ship decision): the " +
+      "non-parametric rotation persists bitwise, and search-from-disk ≡ " +
+      "the NP-rotated in-memory path row-for-row") {
     withIndexDir { dir =>
-      // both modes at once has no meaning (NP already starts from the
-      // parametric init) — fail before any training runs
-      val e = intercept[IllegalArgumentException] {
-        Similarity.pqIndexBuild(spark, sf, dir,
-          rotate = true, rotateNP = true)
-      }
-      assert(e.getMessage.contains("ONE rotation mode"))
-      val built = Similarity.pqIndexBuild(spark, sf, dir, rotateNP = true)
-      assert(built.rotation.nonEmpty, "rotateNP=true built no rotation")
-      val loaded = Similarity.pqIndexLoad(spark, dir)
+      val built = Similarity.indexBuild(spark, sf, dir,
+        rotate = Rotation.NonParametric)
+      assert(built.rotation.nonEmpty, "an NP build has no rotation")
+      val loaded = Similarity.indexLoad(spark, dir)
       assert(loaded.rotation.nonEmpty, "rotation flag lost in meta")
       val (r1, r2) = (built.rotation.get, loaded.rotation.get)
       for (i <- r1.indices)
         assert(r1(i).toSeq === r2(i).toSeq, s"rotation row $i diverged")
       // the NP rotation genuinely differs from the parametric one —
       // otherwise this test would be the rotated test in disguise
-      val para = Similarity.ivfPqBuild(spark, sf, rotate = true)
+      val para = Similarity.ivfBuild(spark, sf, rotate = Rotation.Parametric)
         .rotation.get
       assert(r1.indices.exists(i => r1(i).toSeq != para(i).toSeq),
         "NP rotation identical to the parametric rotation")
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.pqIndexSearch(spark, sf, dir)) ===
-        rows(Similarity.ivfPqSearch(spark, sf,
-          Similarity.ivfPqBuild(spark, sf, rotateNP = true))))
+      assert(rows(Similarity.ivfSearch(base,
+          Similarity.indexLoad(spark, dir))) ===
+        rows(Similarity.ivfSearch(base,
+          Similarity.ivfBuild(spark, sf, rotate = Rotation.NonParametric))))
     }
   }
 
@@ -494,9 +553,10 @@ class PqSpec extends AnyFunSuite {
     // where a raw-space comparison would only agree up to fp rounding
     // of the orthogonal transform
     withIndexDir { dir =>
-      val built = Similarity.pqIndexBuild(spark, sf, dir, rotate = true)
+      val built = Similarity.indexBuild(spark, sf, dir,
+          rotate = Rotation.Parametric)
       val n = Tables.embeddings(spark, sf).count()
-      val got = Similarity.pqIndexSearch(spark, sf, dir,
+      val got = Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir),
           rerank = n.toInt, probesOverride = Some(built.numLists))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -513,32 +573,35 @@ class PqSpec extends AnyFunSuite {
 
   test("pqIndexAppend: subset build + appended complement searches " +
       "row-for-row like an index whose coded frame held the union " +
-      "from the start") {
+      "from the start")(
+    appendLaw(Similarity.Pq()))
+  test("sq8IndexAppend: subset build + appended complement searches " +
+      "row-for-row like an index whose coded frame held the union " +
+      "from the start")(
+    appendLaw(Similarity.Sq8))
+
+  private def appendLaw(c: Similarity.Codec): Unit = {
     withIndexDir { idxDir =>
       withIndexDir { tmpSf =>
         val full = Tables.embeddings(spark, sf)
         // stage a SUBSET corpus as its own table dir and build on it —
-        // artifacts (lists, centroids, books) train on the subset and
+        // artifacts (lists, centroids, codec) train on the subset and
         // stay frozen through the append
         full.filter(col("vec_id") % 3 =!= 0)
           .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        val built = Similarity.pqIndexBuild(spark, tmpSf, idxDir)
-        Similarity.pqIndexAppend(spark,
+        val built = Similarity.indexBuild(spark, tmpSf, idxDir, c)
+        Similarity.indexAppend(spark,
           full.filter(col("vec_id") % 3 === 0)
             .select("vec_id", "embedding"), idxDir)
         // reference: the SAME frozen artifacts over an in-memory coded
         // frame that held the union from the start — an independent
         // derivation of what build∪append must equal
-        val ref = Similarity.ivfPqSearch(spark, sf, built.copy(
-          coded = Similarity.ivfPqEncode(
+        val ref = Similarity.ivfSearch(base, built.copy(
+          coded = Similarity.ivfEncode(
             Similarity.withNorm(full, built.dim),
-            built.centroids, built.books, built.dim)))
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-        assert(rows(Similarity.pqIndexSearch(spark, sf, idxDir)) ===
-          rows(ref))
+            built.centroids, built.codec)))
+        assert(rows(Similarity.ivfSearch(base,
+            Similarity.indexLoad(spark, idxDir))) === rows(ref))
       }
     }
   }
@@ -550,21 +613,18 @@ class PqSpec extends AnyFunSuite {
         val full = Tables.embeddings(spark, sf)
         full.filter(col("vec_id") % 3 =!= 0)
           .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        val built = Similarity.pqIndexBuild(spark, tmpSf, idxDir,
-          rotate = true)
-        Similarity.pqIndexAppend(spark,
+        val built = Similarity.indexBuild(spark, tmpSf, idxDir,
+          rotate = Rotation.Parametric)
+        Similarity.indexAppend(spark,
           full.filter(col("vec_id") % 3 === 0)
             .select("vec_id", "embedding"), idxDir)
         val rotatedFull = Similarity.opqRotate(full, built.rotation.get)
-        val ref = Similarity.ivfPqSearch(spark, sf, built.copy(
-          coded = Similarity.ivfPqEncode(
+        val ref = Similarity.ivfSearch(base, built.copy(
+          coded = Similarity.ivfEncode(
             Similarity.withNorm(rotatedFull, built.dim),
-            built.centroids, built.books, built.dim)))
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-        assert(rows(Similarity.pqIndexSearch(spark, sf, idxDir)) ===
+            built.centroids, built.codec)))
+        assert(rows(Similarity.ivfSearch(base,
+            Similarity.indexLoad(spark, idxDir))) ===
           rows(ref))
       }
     }
@@ -576,20 +636,17 @@ class PqSpec extends AnyFunSuite {
       "brute force row-for-row; derived laws never leak a disallowed " +
       "neighbor") {
     val allowed = base.select("vec_id").filter(col("vec_id") % 2 === 0)
-    val built = Similarity.ivfPqBuild(spark, sf)
+    val built = Similarity.ivfBuild(spark, sf)
     val n = Tables.embeddings(spark, sf).count()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
     // exactness: with pruning and truncation disabled, the filtered
     // composed path must reproduce the filtered ground truth exactly —
     // PRE-filter semantics (top-k OF the allowed set), same query draw
-    assert(rows(Similarity.ivfPqSearchWhere(spark, sf, built, allowed,
-        rerank = n.toInt, probesOverride = Some(built.numLists))) ===
+    assert(rows(Similarity.ivfSearch(base, built, rerank = n.toInt,
+        probesOverride = Some(built.numLists), allowed = Some(allowed))) ===
       rows(Similarity.bruteForceTopKWhere(base, allowed)))
     // at the derived laws the result may lose recall to probe pruning
     // but may NEVER surface a disallowed candidate
-    val ids = Similarity.ivfPqSearchWhere(spark, sf, built, allowed)
+    val ids = Similarity.ivfSearch(base, built, allowed = Some(allowed))
       .select("neighbor_id").collect().map(_.getLong(0))
     assert(ids.nonEmpty)
     assert(ids.forall(_ % 2 == 0), s"disallowed neighbor leaked")
@@ -598,52 +655,59 @@ class PqSpec extends AnyFunSuite {
   test("filtered search from a persisted index ≡ the in-memory " +
       "filtered path row-for-row") {
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir)
+      Similarity.indexBuild(spark, sf, dir)
       val allowed = base.select("vec_id").filter(col("vec_id") % 2 === 0)
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.pqIndexSearchWhere(spark, sf, dir, allowed)) ===
-        rows(Similarity.ivfPqSearchWhere(spark, sf,
-          Similarity.ivfPqBuild(spark, sf), allowed)))
+      assert(rows(Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir),
+          allowed = Some(allowed))) ===
+        rows(Similarity.ivfSearch(base, Similarity.ivfBuild(spark, sf),
+          allowed = Some(allowed))))
     }
   }
 
   // -- compaction (the append-heavy maintenance pass) ----------------------
 
   test("pqIndexCompact: appends multiply files, compaction bin-packs " +
-      "them back — content and search bit-identical across the swap") {
+      "them back — content and search bit-identical across the swap")(
+    compactLaw(Similarity.Pq()))
+  test("sq8IndexCompact: appends multiply files, compaction bin-packs " +
+      "them back — content and search bit-identical across the swap; " +
+      "the family-agnostic physical audits serve this index unchanged")(
+    compactLaw(Similarity.Sq8))
+
+  private def compactLaw(c: Similarity.Codec): Unit = {
     withIndexDir { idxDir =>
       withIndexDir { tmpSf =>
         val full = Tables.embeddings(spark, sf)
         full.filter(col("vec_id") % 3 =!= 0)
           .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.pqIndexBuild(spark, tmpSf, idxDir)
+        Similarity.indexBuild(spark, tmpSf, idxDir, c)
         // two separate appends → new files inside the list directories
-        Similarity.pqIndexAppend(spark,
+        Similarity.indexAppend(spark,
           full.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0)
             .select("vec_id", "embedding"), idxDir)
-        Similarity.pqIndexAppend(spark,
+        Similarity.indexAppend(spark,
           full.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0)
             .select("vec_id", "embedding"), idxDir)
-        def content() = Similarity.pqIndexLoad(spark, idxDir).coded
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            r.getSeq[Int](2).toVector, r.getDouble(3)))
-          .sortBy(_._1).toSeq
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-        val rowsBefore = content()
-        val searchBefore = rows(Similarity.pqIndexSearch(spark, sf, idxDir))
-        val (nb, na) = Similarity.pqIndexCompact(spark, idxDir)
+        def loaded() = Similarity.indexLoad(spark, idxDir)
+        val rowsBefore = content(loaded().coded)
+        val searchBefore = rows(Similarity.ivfSearch(base, loaded()))
+        // the physical audits (codec-agnostic slim read) see the
+        // appended files and a duplicate-free id set
+        val statsBefore = Similarity.indexStats(spark, idxDir).collect()
+        assert(statsBefore.map(_.getAs[Long]("n_rows")).sum ===
+          rowsBefore.length)
+        assert(statsBefore.exists(_.getAs[Long]("n_files") >= 2),
+          "two appends must leave a multi-file list somewhere")
+        assert(Similarity.indexDupIds(spark, idxDir).collect().isEmpty)
+        val (nb, na) = Similarity.indexCompact(spark, idxDir)
         assert(na < nb, s"compaction did not reduce files: $nb -> $na")
-        assert(content() === rowsBefore,
+        assert(content(loaded().coded) === rowsBefore,
           "compaction changed the coded row multiset")
-        assert(rows(Similarity.pqIndexSearch(spark, sf, idxDir)) ===
-          searchBefore, "compaction changed a search result")
+        assert(rows(Similarity.ivfSearch(base, loaded())) === searchBefore,
+          "compaction changed a search result")
+        val statsAfter = Similarity.indexStats(spark, idxDir).collect()
+        assert(statsAfter.forall(_.getAs[Long]("n_files") === 1L),
+          "compaction must bin-pack to one file per list")
       }
     }
   }
@@ -660,13 +724,10 @@ class PqSpec extends AnyFunSuite {
         expr("""transform(embedding, (v, i) -> CAST(v AS DOUBLE) +
                |  CASE WHEN i = 0 THEN 0.03D ELSE 0.0D END)"""
           .stripMargin).as("embedding"))
-    val built = Similarity.ivfPqBuild(spark, sf)
+    val built = Similarity.ivfBuild(spark, sf)
     val n = Tables.embeddings(spark, sf).count()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(rows(Similarity.ivfPqSearchFor(spark, sf, built, extQ,
-        rerank = n.toInt, probesOverride = Some(built.numLists))) ===
+    assert(rows(Similarity.ivfSearch(base, built, rerank = n.toInt,
+        probesOverride = Some(built.numLists), queryVecs = Some(extQ))) ===
       rows(Similarity.bruteForceTopKFor(base, extQ)))
     // the internal audit draw is just one external batch: handing the
     // SAME vectors through the external seam must reproduce the
@@ -675,27 +736,27 @@ class PqSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.broadcast(
         Similarity.annQueryIds(base)), "vec_id")
       .select("vec_id", "embedding")
-    assert(rows(Similarity.ivfPqSearchFor(spark, sf, built, drawn)) ===
-      rows(Similarity.ivfPqSearch(spark, sf, built)))
+    assert(rows(Similarity.ivfSearch(base, built,
+        queryVecs = Some(drawn))) ===
+      rows(Similarity.ivfSearch(base, built)))
   }
 
   test("external query batch from a ROTATED persisted index: raw-space " +
       "batch rotates through the stored rotation — disk ≡ in-memory " +
       "row-for-row") {
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir, rotate = true)
+      Similarity.indexBuild(spark, sf, dir,
+          rotate = Rotation.Parametric)
       val extQ = base.filter(col("vec_id") <= 5)
         .select((col("vec_id") + 1000000).as("vec_id"),
           expr("""transform(embedding, (v, i) -> CAST(v AS DOUBLE) +
                  |  CASE WHEN i = 0 THEN 0.03D ELSE 0.0D END)"""
             .stripMargin).as("embedding"))
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.pqIndexSearchFor(spark, sf, dir, extQ)) ===
-        rows(Similarity.ivfPqSearchFor(spark, sf,
-          Similarity.ivfPqBuild(spark, sf, rotate = true), extQ)))
+      assert(rows(Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir),
+          queryVecs = Some(extQ))) ===
+        rows(Similarity.ivfSearch(base,
+          Similarity.ivfBuild(spark, sf, rotate = Rotation.Parametric),
+          queryVecs = Some(extQ))))
     }
   }
 
@@ -708,19 +769,16 @@ class PqSpec extends AnyFunSuite {
                |  CASE WHEN i = 0 THEN 0.03D ELSE 0.0D END)"""
           .stripMargin).as("embedding"))
     val allowed = base.select("vec_id").filter(col("vec_id") % 2 === 0)
-    val built = Similarity.ivfPqBuild(spark, sf)
+    val built = Similarity.ivfBuild(spark, sf)
     val n = Tables.embeddings(spark, sf).count()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(rows(Similarity.ivfPqSearchFor(spark, sf, built, extQ,
-        rerank = n.toInt, probesOverride = Some(built.numLists),
-        allowed = Some(allowed))) ===
+    assert(rows(Similarity.ivfSearch(base, built, rerank = n.toInt,
+        probesOverride = Some(built.numLists), allowed = Some(allowed),
+        queryVecs = Some(extQ))) ===
       rows(Similarity.bruteForceTopKFor(base, extQ, Some(allowed))))
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir)
-      val ids = Similarity.pqIndexSearchFor(spark, sf, dir, extQ,
-          allowed = Some(allowed))
+      Similarity.indexBuild(spark, sf, dir)
+      val ids = Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir),
+          allowed = Some(allowed), queryVecs = Some(extQ))
         .select("neighbor_id").collect().map(_.getLong(0))
       assert(ids.nonEmpty)
       assert(ids.forall(_ % 2 == 0), "disallowed neighbor leaked")
@@ -731,11 +789,10 @@ class PqSpec extends AnyFunSuite {
       "two renames and sweeps the leftovers of a crash before the " +
       "old-dir delete") {
     withIndexDir { idxDir =>
-      Similarity.pqIndexBuild(spark, sf, idxDir)
-      def rows() = Similarity.pqIndexSearch(spark, sf, idxDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      val before = rows()
+      Similarity.indexBuild(spark, sf, idxDir)
+      def search() =
+        rows(Similarity.ivfSearch(base, Similarity.indexLoad(spark, idxDir)))
+      val before = search()
       val codes = new java.io.File(idxDir, "codes")
       val old = new java.io.File(idxDir, "codes_old")
       val tmp = new java.io.File(idxDir, "codes_compacting")
@@ -743,9 +800,9 @@ class PqSpec extends AnyFunSuite {
       // codes_old, nothing swapped in; the index is unreadable until
       // recovery rolls it back
       assert(codes.renameTo(old), "test setup: stage-out rename failed")
-      val (b1, a1) = Similarity.pqIndexCompact(spark, idxDir)
+      val (b1, a1) = Similarity.indexCompact(spark, idxDir)
       assert(b1 >= a1)
-      assert(rows() === before, "recovery+compact changed a search result")
+      assert(search() === before, "recovery+compact changed a search result")
       assert(!old.exists && !tmp.exists, "recovery left staging dirs")
       // crash shape 2: died after the swap-in, before the delete — a
       // stale codes_old (and a dead codes_compacting) lie around; the
@@ -753,9 +810,9 @@ class PqSpec extends AnyFunSuite {
       assert(old.mkdir() && tmp.mkdir(), "test setup: stale dirs")
       java.nio.file.Files.write(
         new java.io.File(old, "junk.parquet").toPath, Array[Byte](1))
-      val (b2, a2) = Similarity.pqIndexCompact(spark, idxDir)
+      val (b2, a2) = Similarity.indexCompact(spark, idxDir)
       assert(b2 === a2, s"already-compacted index grew files: $b2 -> $a2")
-      assert(rows() === before)
+      assert(search() === before)
       assert(!old.exists && !tmp.exists, "sweep left staging dirs")
     }
   }
@@ -771,7 +828,7 @@ class PqSpec extends AnyFunSuite {
         // build corpus A (two thirds); the artifacts freeze on A's grid
         val a = full.filter(col("vec_id") % 3 =!= 0)
         a.write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.pqIndexBuild(spark, tmpSf, idxDir)
+        Similarity.indexBuild(spark, tmpSf, idxDir)
         // two appends into ONE index, disjoint id spaces: the held-out
         // complement as-is (the undrifted control — same distribution
         // the grid was trained on), and the same rows MEAN-SHIFTED by a
@@ -787,8 +844,8 @@ class PqSpec extends AnyFunSuite {
         val drifted = comp.select((col("vec_id") + 1000000).as("vec_id"),
           expr("transform(embedding, v -> CAST(v AS DOUBLE) + 3.0D)")
             .as("embedding"))
-        Similarity.pqIndexAppend(spark, comp, idxDir)
-        Similarity.pqIndexAppend(spark, drifted, idxDir)
+        Similarity.indexAppend(spark, comp, idxDir)
+        Similarity.indexAppend(spark, drifted, idxDir)
         // the CURRENT corpus: build ∪ both appends — the union the
         // caller owns (the index stores no raw vectors)
         val base = a.select("vec_id", "embedding")
@@ -804,9 +861,9 @@ class PqSpec extends AnyFunSuite {
         // drift degrades. At 100 TB rerank ≪ list size makes this the
         // default regime; the small-SF default (rerank 10·K over tiny
         // lists) would let exact rerank swallow the whole pool.
-        val numLists = Similarity.pqIndexLoad(spark, idxDir).numLists
+        val numLists = Similarity.indexLoad(spark, idxDir).numLists
         def meanRecall(qs: org.apache.spark.sql.DataFrame): Double =
-          Similarity.pqIndexRecallAudit(spark, base, idxDir, qs,
+          Similarity.indexRecallAudit(spark, base, idxDir, qs,
               rerank = Similarity.K, probesOverride = Some(numLists))
             .agg(avg(col("recall"))).collect()(0).getDouble(0)
         val qBuild = a.select("vec_id", "embedding")
@@ -843,35 +900,35 @@ class PqSpec extends AnyFunSuite {
         val full = Tables.embeddings(spark, sf)
         val a = full.filter(col("vec_id") % 3 =!= 0)
         a.write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.pqIndexBuild(spark, tmpSf, idxDir)
-        def stats() = Similarity.pqIndexStats(spark, idxDir).collect()
+        Similarity.indexBuild(spark, tmpSf, idxDir)
+        def stats() = Similarity.indexStats(spark, idxDir).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
         val s0 = stats()
         assert(s0.map(_._2).sum === a.count(),
           "per-list rows must sum to the coded corpus")
-        assert(Similarity.pqIndexDupIds(spark, idxDir).count() === 0L,
+        assert(Similarity.indexDupIds(spark, idxDir).count() === 0L,
           "healthy index reported duplicate ids")
         // one clean append: rows grow by the batch, still no dups
         val batch = full.filter(col("vec_id") % 3 === 0)
           .select("vec_id", "embedding")
-        Similarity.pqIndexAppend(spark, batch, idxDir)
+        Similarity.indexAppend(spark, batch, idxDir)
         val s1 = stats()
         assert(s1.map(_._2).sum === s0.map(_._2).sum + batch.count())
         assert(s1.map(_._3).sum > s0.map(_._3).sum,
           "append did not add files")
-        assert(Similarity.pqIndexDupIds(spark, idxDir).count() === 0L)
+        assert(Similarity.indexDupIds(spark, idxDir).count() === 0L)
         // the contract violation: the SAME batch appended again — the
         // audit must name every offending id with its row count
-        Similarity.pqIndexAppend(spark, batch, idxDir)
-        val dups = Similarity.pqIndexDupIds(spark, idxDir).collect()
+        Similarity.indexAppend(spark, batch, idxDir)
+        val dups = Similarity.indexDupIds(spark, idxDir).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSeq
         assert(dups.map(_._1) ===
           batch.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq)
         assert(dups.forall(_._2 === 2L))
         // compaction preserves content (dups included — it is not a
         // repair pass) and bin-packs to one file per list
-        Similarity.pqIndexCompact(spark, idxDir)
-        assert(Similarity.pqIndexDupIds(spark, idxDir).collect()
+        Similarity.indexCompact(spark, idxDir)
+        assert(Similarity.indexDupIds(spark, idxDir).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSeq === dups,
           "compaction changed the duplicate set")
         assert(stats().forall(_._3 === 1L),
@@ -916,7 +973,7 @@ class PqSpec extends AnyFunSuite {
     // parametric rotation is a measured SCALE.md verdict, not a spec
     // claim; that it must not fall off the init's recall is
     def adcTop(rot: Array[Array[Double]]) =
-      Similarity.pqTopKOf(Similarity.opqRotate(plant, rot), rerank = 0)
+      Similarity.flatTopKOf(Similarity.opqRotate(plant, rot), rerank = 0)
         .select("q_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = Similarity.bruteForceTopKOf(plant)
@@ -936,10 +993,10 @@ class PqSpec extends AnyFunSuite {
     val samp = Similarity.ivfTrainingSample(
       Similarity.withNorm(base, dim),
       Similarity.pqSampleK(1 << Similarity.PqBits))
-    val (lo, step) = Similarity.sq8Bounds(samp, dim)
+    val Similarity.Sq8Codec(lo, step) = Similarity.Sq8.train(samp, dim)
     assert(lo.length === dim && step.forall(_ > 0.0))
     // encode replica: nearest level, clamped, biased −128
-    val coded = Similarity.sq8Encode(base, lo, step, dim)
+    val coded = Similarity.Sq8Codec(lo, step).encode(base)
     assert(coded.schema("codes").dataType ===
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.ByteType, containsNull = false) ||
@@ -967,7 +1024,7 @@ class PqSpec extends AnyFunSuite {
         (0 until dim).map(d => lo(d) + ((v * 37 + d * 11) % 256) * step(d)))
     }
     val grid = gridRows.toDF("vec_id", "embedding")
-    val gridCoded = Similarity.sq8Encode(grid, lo, step, dim)
+    val gridCoded = Similarity.Sq8Codec(lo, step).encode(grid)
       .collect().map(r => (r.getLong(0),
         r.getSeq[Byte](1).toVector, r.getDouble(2))).toSeq
     gridRows.zip(gridCoded.sortBy(_._1)).foreach {
@@ -987,33 +1044,8 @@ class PqSpec extends AnyFunSuite {
     }
     // structural invariant: SQ8 at full rerank ≡ exact brute force
     val n = base.count().toInt
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(rows(Similarity.sq8TopKOf(base, rerank = n)) ===
+    assert(rows(Similarity.flatTopKOf(base, Similarity.Sq8, rerank = n)) ===
       rows(Similarity.bruteForceTopKOf(base)))
-  }
-
-  test("IVF-SQ8 composition: all lists + corpus-wide rerank ≡ brute " +
-      "force row-for-row; the derived laws return k rows per query") {
-    val n = base.count()
-    val numLists = Similarity.listsForCount(n)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    // the structural invariant every family here carries: with nothing
-    // pruned and everything reranked, the approximation must vanish
-    assert(rows(Similarity.ivfSq8TopK(spark, sf, rerank = n.toInt,
-        probesOverride = Some(numLists))) ===
-      rows(Similarity.bruteForceTopK(spark, sf)))
-    // at the derived laws the search stays well-formed: k rows per
-    // query, ranks dense from 1
-    val got = Similarity.ivfSq8TopK(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val perQ = got.groupBy(_._1).values
-    assert(perQ.forall(_.map(_._2).sorted ==
-      (1L to Similarity.K).toVector))
-    assert(perQ.size === Similarity.QueryK)
   }
 
   test("argument/diagnostic hygiene: odd subspaces fail BEFORE the " +
@@ -1023,8 +1055,8 @@ class PqSpec extends AnyFunSuite {
     // a nonexistent corpus dir — reaching the scan would throw a path
     // error, the require must fire first
     val eOdd = intercept[IllegalArgumentException] {
-      Similarity.pqIndexBuild(spark, "/nonexistent", "/nonexistent-idx",
-        subspaces = 3)
+      Similarity.indexBuild(spark, "/nonexistent", "/nonexistent-idx",
+        Similarity.Pq(subspaces = 3))
     }
     assert(eOdd.getMessage.contains("graft") &&
       eOdd.getMessage.contains("even"))
@@ -1037,227 +1069,60 @@ class PqSpec extends AnyFunSuite {
           "id > 0 AS rotated")
         .write.mode("overwrite").parquet(s"$dir/meta")
       val eLoad = intercept[IllegalArgumentException] {
-        Similarity.pqIndexLoad(spark, dir)
+        Similarity.indexLoad(spark, dir)
       }
       assert(eLoad.getMessage.contains("graft") &&
         eLoad.getMessage.contains(dir))
     }
     withIndexDir { dir =>
-      Similarity.pqIndexBuild(spark, sf, dir)
-      def rows() = Similarity.pqIndexSearch(spark, sf, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      val before = rows()
+      Similarity.indexBuild(spark, sf, dir)
+      def search() =
+        rows(Similarity.ivfSearch(base, Similarity.indexLoad(spark, dir)))
+      val before = search()
       val old = new java.io.File(dir, "codes_old")
       // deferred-vacuum mode: the old files survive the swap (for
       // readers whose file listings resolved pre-swap), and the next
       // compaction's recovery preamble vacuums them
-      Similarity.pqIndexCompact(spark, dir, vacuumOld = false)
+      Similarity.indexCompact(spark, dir, vacuumOld = false)
       assert(old.exists, "vacuumOld=false deleted codes_old")
-      assert(rows() === before, "deferred-vacuum compact changed a search")
-      Similarity.pqIndexCompact(spark, dir)
+      assert(search() === before, "deferred-vacuum compact changed a search")
+      Similarity.indexCompact(spark, dir)
       assert(!old.exists, "the next compaction did not vacuum codes_old")
-      assert(rows() === before)
+      assert(search() === before)
     }
   }
 
-  // -- persisted IVF-SQ8 index (r19: the second family's serving split) --
-
-  test("persisted SQ8 index loads back bitwise: centroids, the " +
-      "per-dimension grid, and the coded frame survive the parquet " +
-      "round-trip") {
-    withIndexDir { dir =>
-      val built = Similarity.sq8IndexBuild(spark, sf, dir)
-      val loaded = Similarity.sq8IndexLoad(spark, dir)
-      assert(loaded.dim === built.dim)
-      assert(loaded.numLists === built.numLists)
-      for (l <- built.centroids.indices)
-        assert(loaded.centroids(l).toSeq === built.centroids(l).toSeq,
-          s"centroid $l diverged")
-      // the grid IS the family's codebook analogue: parquet doubles
-      // are lossless, so BITWISE
-      assert(loaded.lo.toSeq === built.lo.toSeq)
-      assert(loaded.step.toSeq === built.step.toSeq)
-      // coded frame: tinyint codes and the stored recon_norm double —
-      // content equality keyed by vec_id
-      def content(idx: Similarity.Sq8Index) = idx.coded.collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getSeq[Byte](2).toVector, r.getDouble(3))))
-        .toMap
-      assert(content(loaded) === content(built))
+  test("a loaded index carries its own family's codec — PQ codebooks " +
+      "or the SQ8 grid, chosen by the meta family tag") {
+    for (c <- Seq(Similarity.Pq(), Similarity.Sq8)) withIndexDir { dir =>
+      val built = Similarity.indexBuild(spark, sf, dir, c)
+      val loaded = Similarity.indexLoad(spark, dir)
+      assert(loaded.codec.getClass === built.codec.getClass, s"$c")
+      assert(loaded.codec.family === built.codec.family)
+      assert(spark.read.parquet(s"$dir/meta").collect()(0)
+        .getAs[String]("family") === built.codec.family)
+      // and the loaded codes decode through that codec: the coded frame
+      // is content-equal to the build's
+      assert(content(loaded.coded) === content(built.coded), s"$c")
     }
   }
 
-  test("SQ8 search-from-disk ≡ in-memory ivfSq8TopK row-for-row at " +
-      "the derived laws (and at a non-default probe count) — the " +
-      "family retrained per call before r19") {
+  test("a meta without the family tag (written before the tag " +
+      "existed) loads as IVF-PQ and searches like the tagged index") {
     withIndexDir { dir =>
-      Similarity.sq8IndexBuild(spark, sf, dir)
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.sq8IndexSearch(spark, sf, dir)) ===
-        rows(Similarity.ivfSq8TopK(spark, sf)))
-      // search-many over the SAME stored artifacts at another knob
-      assert(rows(Similarity.sq8IndexSearch(spark, sf, dir,
-          probesOverride = Some(2))) ===
-        rows(Similarity.ivfSq8TopK(spark, sf, probesOverride = Some(2))))
-    }
-  }
-
-  test("persisted SQ8 index: all lists + corpus-wide rerank ≡ brute " +
-      "force row-for-row, and the exact-knob recall audit reads 1.0 " +
-      "per query from the stored artifacts") {
-    withIndexDir { dir =>
-      val built = Similarity.sq8IndexBuild(spark, sf, dir)
-      val n = Tables.embeddings(spark, sf).count()
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-      assert(rows(Similarity.sq8IndexSearch(spark, sf, dir,
-          rerank = n.toInt, probesOverride = Some(built.numLists))) ===
-        rows(Similarity.bruteForceTopK(spark, sf)))
-      // the drift watchdog from disk at the exactness knobs: the
-      // per-query recall of a search that equals brute force is 1.0
-      // EXACTLY — the planted-identity gate of the audit surface
-      val qs = base.join(broadcast(Similarity.annQueryIds(base)),
-        "vec_id")
-      val audit = Similarity.sq8IndexRecallAudit(spark, base, dir, qs,
-          rerank = n.toInt, probesOverride = Some(built.numLists))
+      Similarity.indexBuild(spark, sf, dir)
+      val tagged = rows(Similarity.ivfSearch(base,
+        Similarity.indexLoad(spark, dir)))
+      // rewrite meta/ in the pre-tag shape: (dim, sub, num_lists, rotated)
+      val meta = spark.read.parquet(s"$dir/meta").drop("family")
         .collect()
-      assert(audit.length === Similarity.QueryK)
-      assert(audit.forall(_.getAs[Double]("recall") === 1.0),
-        "exact-knob audit must read 1.0 recall per query")
-    }
-  }
-
-  test("persisted SQ8 search plan: the codes scan carries a list_id " +
-      "PartitionFilter (file-level probe pruning) and stays " +
-      "cartesian-free") {
-    import org.apache.spark.sql.execution.FormattedMode
-    withIndexDir { dir =>
-      Similarity.sq8IndexBuild(spark, sf, dir)
-      val p = Similarity.sq8IndexSearch(spark, sf, dir)
-        .queryExecution.explainString(FormattedMode)
-      val cnt = (op: String) =>
-        p.linesIterator.count(_.matches(s"""\\(\\d+\\) $op.*"""))
-      assert(cnt("CartesianProduct") === 0, p.take(1500))
-      assert(cnt("BroadcastHashJoin") >= 1, p.take(1500))
-      val partFilter = p.linesIterator.find(l =>
-        l.contains("PartitionFilters:") && l.contains("list_id#"))
-      assert(partFilter.nonEmpty,
-        "codes scan has no list_id PartitionFilter:\n" + p.take(2000))
-      assert(partFilter.get.contains("INSET") ||
-        partFilter.get.contains(" IN ("),
-        s"PartitionFilters line carries no IN-set: ${partFilter.get}")
-    }
-  }
-
-  test("sq8IndexAppend: subset build + appended complement searches " +
-      "row-for-row like an index whose coded frame held the union " +
-      "from the start") {
-    withIndexDir { idxDir =>
-      withIndexDir { tmpSf =>
-        val full = Tables.embeddings(spark, sf)
-        full.filter(col("vec_id") % 3 =!= 0)
-          .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        val built = Similarity.sq8IndexBuild(spark, tmpSf, idxDir)
-        Similarity.sq8IndexAppend(spark,
-          full.filter(col("vec_id") % 3 === 0)
-            .select("vec_id", "embedding"), idxDir)
-        // reference: the SAME frozen artifacts over an in-memory coded
-        // frame that held the union from the start
-        val ref = Similarity.ivfSq8Search(spark, sf, built.copy(
-          coded = Similarity.ivfSq8Encode(
-            Similarity.withNorm(full, built.dim),
-            built.centroids, built.lo, built.step, built.dim)))
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-        assert(rows(Similarity.sq8IndexSearch(spark, sf, idxDir)) ===
-          rows(ref))
-      }
-    }
-  }
-
-  test("sq8IndexCompact: appends multiply files, compaction bin-packs " +
-      "them back — content and search bit-identical across the swap; " +
-      "the family-agnostic physical audits serve this index unchanged") {
-    withIndexDir { idxDir =>
-      withIndexDir { tmpSf =>
-        val full = Tables.embeddings(spark, sf)
-        full.filter(col("vec_id") % 3 =!= 0)
-          .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.sq8IndexBuild(spark, tmpSf, idxDir)
-        Similarity.sq8IndexAppend(spark,
-          full.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0)
-            .select("vec_id", "embedding"), idxDir)
-        Similarity.sq8IndexAppend(spark,
-          full.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0)
-            .select("vec_id", "embedding"), idxDir)
-        def content() = Similarity.sq8IndexLoad(spark, idxDir).coded
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            r.getSeq[Byte](2).toVector, r.getDouble(3)))
-          .sortBy(_._1).toSeq
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-        val rowsBefore = content()
-        val searchBefore = rows(Similarity.sq8IndexSearch(spark, sf, idxDir))
-        // the physical audits (pq-prefixed, family-agnostic slim read)
-        // see the appended files and a duplicate-free id set
-        val statsBefore = Similarity.pqIndexStats(spark, idxDir).collect()
-        assert(statsBefore.map(_.getAs[Long]("n_rows")).sum ===
-          rowsBefore.length)
-        assert(statsBefore.exists(_.getAs[Long]("n_files") >= 2),
-          "two appends must leave a multi-file list somewhere")
-        assert(Similarity.pqIndexDupIds(spark, idxDir).collect().isEmpty)
-        val (nb, na) = Similarity.sq8IndexCompact(spark, idxDir)
-        assert(na < nb, s"compaction did not reduce files: $nb -> $na")
-        assert(content() === rowsBefore,
-          "compaction changed the coded row multiset")
-        assert(rows(Similarity.sq8IndexSearch(spark, sf, idxDir)) ===
-          searchBefore, "compaction changed a search result")
-        val statsAfter = Similarity.pqIndexStats(spark, idxDir).collect()
-        assert(statsAfter.forall(_.getAs[Long]("n_files") === 1L),
-          "compaction must bin-pack to one file per list")
-      }
-    }
-  }
-
-  test("cross-family guard: loading, compacting or searching an index " +
-      "through the WRONG family fails loud with both names — the " +
-      "wrong codes schema would otherwise read payloads as nulls " +
-      "(and a compactor would rewrite them)") {
-    withIndexDir { pqDir =>
-      withIndexDir { sqDir =>
-        Similarity.pqIndexBuild(spark, sf, pqDir)
-        Similarity.sq8IndexBuild(spark, sf, sqDir)
-        val e1 = intercept[IllegalArgumentException] {
-          Similarity.sq8IndexLoad(spark, pqDir)
-        }
-        assert(e1.getMessage.contains("ivfadc") &&
-          e1.getMessage.contains("ivf_sq8"))
-        val e2 = intercept[IllegalArgumentException] {
-          Similarity.pqIndexLoad(spark, sqDir)
-        }
-        assert(e2.getMessage.contains("ivf_sq8") &&
-          e2.getMessage.contains("ivfadc"))
-        val e3 = intercept[IllegalArgumentException] {
-          Similarity.pqIndexCompact(spark, sqDir)
-        }
-        assert(e3.getMessage.contains("family"))
-        val e4 = intercept[IllegalArgumentException] {
-          Similarity.sq8IndexCompact(spark, pqDir)
-        }
-        assert(e4.getMessage.contains("family"))
-        // and the RIGHT family still loads after the failed probes
-        assert(Similarity.sq8IndexLoad(spark, sqDir).numLists >= 1)
-        assert(Similarity.pqIndexLoad(spark, pqDir).numLists >= 1)
-      }
+      spark.createDataFrame(java.util.Arrays.asList(meta: _*),
+          meta(0).schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      assert(!spark.read.parquet(s"$dir/meta").columns.contains("family"))
+      val loaded = Similarity.indexLoad(spark, dir)
+      assert(loaded.codec.isInstanceOf[Similarity.PqCodec])
+      assert(rows(Similarity.ivfSearch(base, loaded)) === tagged)
     }
   }
 
@@ -1274,7 +1139,7 @@ class PqSpec extends AnyFunSuite {
         // drifted append collapses cosine gaps below quantization noise
         val a = full.filter(col("vec_id") % 3 =!= 0)
         a.write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.pqIndexBuild(spark, tmpSf, idxDir)
+        Similarity.indexBuild(spark, tmpSf, idxDir)
         // advice before any audit is a guess — must fail loud
         val eNoLog = intercept[IllegalArgumentException] {
           Similarity.indexRebuildAdvice(spark, idxDir)
@@ -1286,12 +1151,12 @@ class PqSpec extends AnyFunSuite {
         val drifted = comp.select((col("vec_id") + 1000000).as("vec_id"),
           expr("transform(embedding, v -> CAST(v AS DOUBLE) + 3.0D)")
             .as("embedding"))
-        val numLists = Similarity.pqIndexLoad(spark, idxDir).numLists
+        val numLists = Similarity.indexLoad(spark, idxDir).numLists
         // the log contract: same ADC-decisive knobs at every reading
         // (all lists probed, rerank = K)
         def logWindow(base: org.apache.spark.sql.DataFrame,
                       qs: org.apache.spark.sql.DataFrame) =
-          Similarity.pqIndexAuditLog(spark, base, idxDir, qs,
+          Similarity.indexAuditLog(spark, base, idxDir, qs,
             rerank = Similarity.K, probesOverride = Some(numLists))
         def advice() = Similarity.indexRebuildAdvice(spark, idxDir)
           .collect()(0)
@@ -1309,7 +1174,7 @@ class PqSpec extends AnyFunSuite {
         assert(ad0.getAs[Double]("trend_drop_per_window") === 0.0)
         assert(ad0.isNullAt(ad0.fieldIndex("projected_windows_to_rebuild")))
         // window 1: undrifted append + its traffic — advice stays down
-        Similarity.pqIndexAppend(spark, comp, idxDir)
+        Similarity.indexAppend(spark, comp, idxDir)
         val base1 = a.select("vec_id", "embedding").unionByName(comp)
         logWindow(base1, comp.filter(col("vec_id") % 30 === 0))
         val ad1 = advice()
@@ -1323,7 +1188,7 @@ class PqSpec extends AnyFunSuite {
         assert(ad1.isNullAt(p1) || ad1.getLong(p1) > 0L,
           "an undrifted window must not project an immediate rebuild")
         // window 2: drifted append + its traffic — advice flips ON
-        Similarity.pqIndexAppend(spark, drifted, idxDir)
+        Similarity.indexAppend(spark, drifted, idxDir)
         val base2 = base1.unionByName(drifted)
         logWindow(base2,
           drifted.filter((col("vec_id") - 1000000) % 30 === 0))
@@ -1380,7 +1245,7 @@ class PqSpec extends AnyFunSuite {
         val full = Tables.embeddings(spark, sf)
         full.filter(col("vec_id") % 3 =!= 0)
           .write.mode("overwrite").parquet(s"$tmpSf/embeddings.parquet")
-        Similarity.sq8IndexBuild(spark, tmpSf, idxDir)
+        Similarity.indexBuild(spark, tmpSf, idxDir, Similarity.Sq8)
         def adv(th: Int = 4) =
           Similarity.indexCompactionAdvice(spark, idxDir,
             maxFilesPerList = th).collect()(0)
@@ -1394,7 +1259,7 @@ class PqSpec extends AnyFunSuite {
         val comp = full.filter(col("vec_id") % 3 === 0)
           .select("vec_id", "embedding")
         (1 to 4).foreach { w =>
-          Similarity.sq8IndexAppend(spark,
+          Similarity.indexAppend(spark,
             comp.select((col("vec_id") + w * 1000000).as("vec_id"),
               col("embedding")), idxDir)
         }
@@ -1407,7 +1272,7 @@ class PqSpec extends AnyFunSuite {
         // the threshold knob is honored on the same physical state
         assert(!adv(th = 5).getAs[Boolean]("compact"))
         // after the advised compaction the gauge resets
-        Similarity.sq8IndexCompact(spark, idxDir)
+        Similarity.indexCompact(spark, idxDir)
         val aC = adv()
         assert(aC.getAs[Long]("max_files_per_list") === 1L)
         assert(!aC.getAs[Boolean]("compact"))

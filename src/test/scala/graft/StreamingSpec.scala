@@ -471,6 +471,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(Streaming.lastRunDataBatches >= 1)
   }
 
+  test("a directory-form documents.parquet fails the stream loudly, " +
+      "naming the path, instead of streaming 0 rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dirform")
+    try {
+      // a Spark write makes documents.parquet a DIRECTORY of part files
+      spark.read.parquet(s"$sf/documents.parquet").limit(20)
+        .write.parquet(s"$dir/documents.parquet")
+      val e = intercept[IllegalArgumentException] {
+        Streaming.streamCurate(spark, dir.toString)
+      }
+      assert(e.getMessage.contains("graft:") &&
+        e.getMessage.contains(s"$dir/documents.parquet"), e.getMessage)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(dir.toFile)
+    }
+  }
+
   test("streaming dedup keeps first-seen doc per content hash") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
