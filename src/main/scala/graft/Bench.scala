@@ -1,39 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Bench surface (driver contract): one JSON line with per-query seconds over
-  * `SPARK_GRAFT_SF_DIR`, local[32] per the brief (32 shuffle partitions to
-  * match). Each query is forced through a noop sink — unlike `count()`, that
-  * evaluates every output column, projection and sort in the plan, so the
-  * numbers measure the work the query actually declares. A small untimed
+/** Bench surface (driver contract): one JSON line with per-query seconds
+  * over `SPARK_GRAFT_SF_DIR`, in the Bench layout (ToolSupport.benchSession:
+  * local[32] per the brief, 32 shuffle partitions to match, UTC session zone
+  * as Verify). Each query is forced through a noop sink — unlike `count()`,
+  * that evaluates every output column, projection and sort in the plan, so
+  * the numbers measure the work the query actually declares. A small untimed
   * warm-up absorbs session/codegen/parquet-footer first-touch costs so the
   * first timed query isn't charged for them. Reported numbers are per-query
-  * MEDIANS of `SPARK_GRAFT_REPEAT` (default 3) runs with untimed
-  * cache-clear + GC between runs — single-pass numbers showed 2–8× JVM
-  * noise on unchanged queries once the catalog hit 80 entries in one
-  * process (BENCH_r05 vs r04).
+  * MEDIANS of `SPARK_GRAFT_REPEAT` (default 3) runs with untimed cache-clear
+  * + GC between runs — single-pass numbers showed 2–8× JVM noise on
+  * unchanged queries once the catalog hit 80 entries in one process
+  * (BENCH_r05 vs r04).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // streaming runs size their state-store count by state volume, not
-      // CPU count (see Streaming.withStreamShuffle): 8 store instances
-      // per stateful stage instead of 32 — per-micro-batch commit
-      // constants dominate at bench state sizes. Correctness is
-      // layout-independent (Verify gates the default layout; a
-      // StreamingSpec test pins 8-vs-32 result equality).
-      .config("graft.stream.shufflePartitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // bucketed checkpoints (saveAsTable) land in tmp, not ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSupport.benchSession()
     // untimed warm-up: JVM/codegen + one FULL scan per table — footer
     // decode and OS page cache are first-touch costs that would otherwise
     // land on whichever query happens to scan a table first (Map order
@@ -96,21 +79,11 @@ object Bench {
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(60)}")
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // inter-run hygiene, OUTSIDE the timer: drop any cache a query
-        // leaked and let the ContextCleaner reap GC-scoped checkpoint /
-        // shuffle state — so one query's leftovers aren't billed to the
-        // next (the r5 "unchanged query regressed 6×" failure mode)
-        spark.catalog.clearCache()
-        // clearCache() misses RDD-level persistence: localCheckpoint
-        // blocks (pointer-jumping components, PageRank's edge table, the
-        // ANN quantizer sample) sit in storage memory until the async
-        // ContextCleaner reaps them AFTER a GC notices the dropped refs —
-        // a race the next timed run loses at 114 queries/JVM (r8 sweeps:
-        // mid-catalog queries 2-6× their isolated medians). Unpersist
-        // them synchronously instead of hoping.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+        // inter-run hygiene, OUTSIDE the timer — so one query's leftovers
+        // aren't billed to the next (the r5 "unchanged query regressed 6×"
+        // failure mode; r8 sweeps billed mid-catalog queries 2-6× their
+        // isolated medians before the synchronous unpersist)
+        ToolSupport.release(spark)
         (sec, err)
       }
       (name, timed)

@@ -55,11 +55,13 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Session defaults shared by tests/tools (Verify/Bench build their own
-    * per the driver contract). Shuffle partitions = `cores` (default 4 for
-    * tests; pass 32 to match local[32]); AQE coalesces/re-plans at runtime —
-    * the knob that scales this config to a real cluster is ONLY the
-    * partition count.
+  /** The one session recipe of tests and tools (Bench, Verify, DevTools):
+    * a tool that needs more sets it on the built session. Shuffle
+    * partitions = `cores` (default 4 for tests; Bench passes 32 to match
+    * local[32]); UTC session zone, which every oracle check assumes; AQE
+    * coalesces/re-plans at runtime — the knob that scales this config to
+    * a real cluster is ONLY the partition count. Bucketed checkpoints
+    * (saveAsTable) land in tmp, not ./spark-warehouse.
     */
   def localSession(appName: String, cores: Int = 4): SparkSession = {
     val s = SparkSession.builder()

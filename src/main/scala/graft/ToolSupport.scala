@@ -2,12 +2,39 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the driver-contract mains (Bench/Verify),
-  * single-sourced so the two tools can't drift: the SPARK_GRAFT_ONLY dev
-  * filter and JSON string escaping.
+/** Shared plumbing for the mains (Bench, Verify, DevTools), single-sourced
+  * so the tools can't drift: the Bench session layout, the cleanup between
+  * runs, the SPARK_GRAFT_ONLY dev filter and JSON string escaping.
   */
 object ToolSupport {
   type Query = (SparkSession, String) => DataFrame
+
+  /** The Bench layout: local[SPARK_GRAFT_CPUS] (default 32) with as many
+    * shuffle partitions, and 8 state-store instances per stateful
+    * streaming stage instead of 32 — per-micro-batch commit constants
+    * dominate at bench state sizes (see Streaming.withStreamShuffle).
+    * Correctness is layout-independent: Verify gates the default layout
+    * and a StreamingSpec test pins 8-vs-32 result equality. */
+  def benchSession(): SparkSession = {
+    val spark = Tables.localSession("graft-bench",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.conf.set("graft.stream.shufflePartitions", "8")
+    spark
+  }
+
+  /** Cleanup between measured runs, so one query's leftovers aren't billed
+    * to the next: drop cached tables, unpersist RDD-level persistence
+    * synchronously — clearCache() misses the localCheckpoint blocks
+    * (pointer-jumping components, PageRank's edge table, the ANN quantizer
+    * sample), which otherwise sit in storage memory until the async
+    * ContextCleaner reaps them after some later GC — and GC so the
+    * cleaner reaps GC-scoped checkpoint and shuffle state now. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
 
   /** SPARK_GRAFT_ONLY=q_a,q_b selects a subset of the query map; unknown
     * names abort, so a typo'd partial run can never masquerade as a full
@@ -52,242 +79,95 @@ object ToolSupport {
     case c            => c.toString
   } + "\""
 
-  /** Stable short keys for the bench contract line's "queries" map: the
-    * uniform "q_" prefix dropped plus a fixed token-abbreviation table.
-    * Purely a WIRE format for the 2000-char capture window — Verify,
-    * CORRECTNESS and the query registry keep full names; the mapping is
-    * deterministic (mechanical to reverse) and collision-checked in
-    * ToolSupportSpec, so a new query name can never silently alias an
-    * existing bench key. */
-  val benchKeySubs: Seq[(String, String)] = Seq(
-    "stream_" -> "st_", "window_" -> "win_", "roundtrip" -> "rt",
-    "neardup" -> "nd", "distinct" -> "dist", "sessions" -> "sess",
-    "importance" -> "imp", "diagnostics" -> "diag", "checkpoint" -> "ckpt",
-    "decode" -> "dec", "manifest" -> "mf", "pipeline" -> "pipe",
-    "survivors" -> "surv", "video_" -> "vid_", "frames" -> "frs",
-    "feature_" -> "feat_", "matrix" -> "mx", "multimodal_" -> "mm_",
-    "group_" -> "grp_", "outlier_" -> "outl_", "extract" -> "ext",
-    "filter" -> "flt", "notnull" -> "nn", "domain_" -> "dom_",
-    "percentile" -> "pct", "forecast" -> "fc", "metrics" -> "met",
-    // r8 widening (106-entry catalog): keep the 95-entry wire model
-    // under the driver's 2000-char tail window with headroom
-    "join" -> "jn", "dedup" -> "dd", "mean_having" -> "mh",
-    "tumbling" -> "tumb", "rollup" -> "rup", "windows" -> "win",
-    "fingerprint" -> "fp", "repetition" -> "rep", "histogram" -> "hist",
-    "select_" -> "sel_", "region_" -> "reg_", "pagerank" -> "pr",
-    "snapshot_" -> "snap_", "inverted_index" -> "inv_idx",
-    "temp_mix" -> "tmix", "jaccard" -> "jac", "blank_to_null" -> "b2null",
-    "keepnull" -> "keepn", "sess_multi" -> "sessm", "curate_" -> "cur_",
-    "bucketed_" -> "bkt_", "approx_" -> "apx_",
-    // r8 second widening (114-entry catalog): same budget discipline
-    "string_" -> "str_", "enrich_" -> "enr_", "model_" -> "mdl_",
-    "schema_" -> "sch_", "exact_" -> "ex_", "ngram_" -> "ng_",
-    "source_" -> "src_", "sample_" -> "smp_", "embed_" -> "emb_",
-    "decontam" -> "decon", "audio_" -> "aud_", "image_" -> "img_",
-    "minhash_" -> "mh_", "simhash_" -> "sh_", "quality" -> "qual",
-    "merge_upsert" -> "mrg_up", "bpe_pairs" -> "bpe",
-    "lag_gaps" -> "lag", "zorder" -> "zord",
-    // fold order matters: "matrix"->"mx" above has already produced
-    // corr_mx by the time this entry applies
-    "corr_mx" -> "corr", "token_count" -> "tok_cnt",
-    // r8 third widening (128-entry catalog): the analytics batch, plus a
-    // squeeze of the long tail so the worst-case wire line keeps >=15%
-    // headroom (these run AFTER the folds above, so the left side is the
-    // already-shortened form)
-    "vocab_coverage" -> "vocab", "moving_avg" -> "mavg",
-    "copurchase" -> "copur", "dq_checks" -> "dq",
-    "incr_agg" -> "iagg", "funnel" -> "funl", "cohort" -> "coh",
-    "left_jn" -> "ljn", "limit_slice" -> "lslice", "pivot_ratio" -> "pivot",
-    "null_split" -> "nsplit", "geo_county" -> "geocty",
-    "outl_keepn" -> "okeepn", "full_outer" -> "fouter",
-    "na_profile" -> "naprof", "sel_rename" -> "selren",
-    "cv_tuning" -> "cvtune", "st_totals" -> "st_tot",
-    "row_index" -> "rowidx", "chunk_win" -> "chwin",
-    "cur_chain" -> "curch", "st_enrich" -> "st_enr",
-    "st_curate" -> "st_cur", "asof_skew" -> "asofsk",
-    "snap_diff" -> "snapd", "json_ext" -> "jext", "win_" -> "w",
-    "bloom_dd" -> "bldd", "shard_mf" -> "shmf", "seq_pack" -> "spack",
-    "jsonl_rt" -> "jlrt", "range_jn" -> "rngjn", "st_range" -> "st_rng",
-    "sch_cast" -> "scast", "enr_pipe" -> "enrp", "emb_surv" -> "esurv",
-    "ols_diag" -> "olsd", "apx_dist" -> "apxd", "st_sessm" -> "st_sm",
-    "incr_dd" -> "idd", "feat_mx" -> "fmx", "aud_dec" -> "audd",
-    "vid_frs" -> "vidf", "str_ext" -> "sext", "smp_mix" -> "smix",
-    "dd_surv" -> "ddsv", "skew_jn" -> "skjn", "gbt_met" -> "gbtm",
-    "dom_cap" -> "dcap", "tok_cnt" -> "tokc", "reg_rup" -> "rrup",
-    "img_dec" -> "imgd", "semi_jn" -> "smjn", "anti_jn" -> "atjn",
-    "src_sim" -> "ssim", "mm_meta" -> "mmeta", "edit_jn" -> "edjn",
-    "asof_jn" -> "asofj", "ann_ivf" -> "aivf", "ann_topk" -> "atopk",
-    "inv_idx" -> "iidx", "ols_met" -> "olsm",
-    "winsorize" -> "winz", "cascade_delete" -> "cascd",
-    "set_ops_all" -> "sopsa", "nullsafe_jn" -> "nsjn",
-    "triangles" -> "tri", "latest_order" -> "lastord", "ab_test" -> "ab",
-    "attribution" -> "attr",
-    // r8 fourth widening (137-entry catalog): squeeze for tail headroom
-    "st_funl" -> "stfn", "lastord" -> "lord", "geocty" -> "gcty",
-    "okeepn" -> "okpn", "fouter" -> "fout", "naprof" -> "napf",
-    "selren" -> "selr", "cvtune" -> "cvt", "lslice" -> "lsli",
-    "rowidx" -> "ridx", "nsplit" -> "nspl", "asofsk" -> "asfk",
-    "esurv" -> "esv", "spack" -> "spk",
-    "freq_table" -> "freq", "heavy_hitters" -> "hh",
-    "session" -> "sess", "ckpt_prune" -> "ckpt",
-    // ("sample_" above has already turned resample_ffill into resmp_ffill)
-    "resmp_ffill" -> "resamp", "date_" -> "dt_",
-    "rare_other" -> "rare", "cond_update" -> "cond_up",
-    "sliding" -> "slid", "rank_funcs" -> "ranks",
-    // r8 fifth widening (143-entry catalog): the analytics/drift batch,
-    // plus a squeeze of the remaining 6-8 char tail (left sides are the
-    // post-fold forms, as above) to keep >=15% window headroom
-    "time_weighted" -> "twa", "topk_group" -> "tkg",
-    "lang_drift" -> "ldrift",
-    "dt_parse" -> "dtp", "ljn_dist" -> "ljnd", "agg_sum" -> "asum",
-    "ann_lsh" -> "alsh", "cond_up" -> "cdup", "lang_id" -> "lid",
-    "na_drop" -> "nadr", "set_ops" -> "sops", "streaks" -> "stks",
-    "st_sess" -> "stss", "st_sink" -> "stsk", "st_slid" -> "stsl",
-    "st_tumb" -> "sttb", "b2null" -> "b2n", "markov" -> "mkv",
-    "csv_rt" -> "csvr", "ldrift" -> "ldft", "cumsum" -> "csum",
-    "grp_mh" -> "gmh", "minmax" -> "mnmx", "emb_nd" -> "embn",
-    "geo_jn" -> "gjn", "mrg_up" -> "mgup", "dt_flt" -> "dtf",
-    "bkt_jn" -> "bktj",
-    "concurrency" -> "conc", "stickiness" -> "stky",
-    "weighted_sample" -> "wsmp",
-    "mdl_rt" -> "mdrt", "ng_jac" -> "ngj", "nn_flt" -> "nnf",
-    "ols_fc" -> "olsf", "orc_rt" -> "orcr", "redact" -> "red",
-    "resamp" -> "rsmp", "rf_imp" -> "rfim", "zscore" -> "zsc",
-    "st_tot" -> "stt", "st_rng" -> "strg", "st_cur" -> "stc",
-    "st_enr" -> "sten", "bigram_lm" -> "blm",
-    // "percentile"->"pct" above has already produced pct_disc
-    "pct_disc" -> "pctd",
-    "atopk" -> "atk", "asofj" -> "asfj", "cascd" -> "casc",
-    "cbind" -> "cbnd", "chisq" -> "chi2", "chwin" -> "chw",
-    "copur" -> "copu", "curch" -> "cuch", "decon" -> "dcon",
-    "ntile" -> "ntl", "pivot" -> "pvt", "rngjn" -> "rngj",
-    "ranks" -> "rnks", "scast" -> "scst", "snapd" -> "snpd",
-    "tfidf" -> "tfid", "union" -> "unio", "vocab" -> "vocb",
-    "wsess" -> "wses", "wslid" -> "wsld", "wtumb" -> "wtmb",
-    // "geo_jn"->"gjn" above leaves geo_nearest untouched
-    "geo_nearest" -> "gnn", "calibration" -> "cal",
-    "csvr" -> "csv", "jlrt" -> "jlr", "orcr" -> "orc", "mdrt" -> "mdr",
-    "rsmp" -> "rsm", "olsf" -> "olf", "alsh" -> "als", "nadr" -> "nad",
-    "cdup" -> "cdu", "stks" -> "stk", "sttb" -> "stb", "stsl" -> "ssl",
-    // r8 final widening: systematic 3-char floor for every remaining
-    // 4+-char key (applied LAST, longest left sides first so substring
-    // pairs like sopsa/sops fold safely) — creates ~100 chars of window
-    // headroom (worst-case model 1594/1700) so round 9 can grow the
-    // catalog ~9 queries before touching this table again
-    "ex_dd" -> "ex_", "mh_nd" -> "mh_", "mmeta" -> "mme", "sh_nd" -> "sh_",
-    "sopsa" -> "sop", "st_dd" -> "st_", "st_sm" -> "sts", "aivf" -> "aiv",
-    "apxd" -> "apx", "asfj" -> "asf", "asfk" -> "afk", "asum" -> "asu",
-    "atjn" -> "atj", "attr" -> "att", "audd" -> "aud", "bktj" -> "bkt",
-    "bldd" -> "bld", "bm25" -> "bm2", "casc" -> "cas", "cbnd" -> "cbn",
-    "chi2" -> "chi", "ckpt" -> "ckp", "conc" -> "con", "copu" -> "cop",
-    "corr" -> "cor", "csum" -> "csu", "cube" -> "cub", "cuch" -> "cuc",
-    "dcap" -> "dca", "dcon" -> "dco", "ddsv" -> "dds", "dist" -> "dis",
-    "edjn" -> "edj", "embn" -> "emb", "enrp" -> "enr", "fout" -> "fou",
-    "freq" -> "fre", "funl" -> "fun", "gbtm" -> "gbt", "gcty" -> "gct",
-    "hist" -> "his", "iagg" -> "iag", "iidx" -> "iid", "imgd" -> "img",
-    "jext" -> "jex", "ldft" -> "ldf", "ljnd" -> "lnd", "lord" -> "lor",
-    "lsli" -> "lsl", "mavg" -> "mav", "melt" -> "mel", "mgup" -> "mgu",
-    "mnmx" -> "mnm", "napf" -> "nap", "nsjn" -> "nsj", "nspl" -> "nsp",
-    "okpn" -> "okp", "olsd" -> "ols", "olsm" -> "osm", "pctd" -> "ptd",
-    "qual" -> "qua", "rare" -> "rar", "rfim" -> "rfi", "ridx" -> "rid",
-    "rngj" -> "rng", "rnks" -> "rnk", "rrup" -> "rru", "scd2" -> "scd",
-    "scst" -> "scs", "selr" -> "sel", "sext" -> "sex", "shmf" -> "shm",
-    "skjn" -> "skj", "smix" -> "smi", "smjn" -> "smj", "snpd" -> "snp",
-    "sops" -> "sps", "ssim" -> "ssi", "sten" -> "ste", "stfn" -> "stf",
-    "stky" -> "sky", "strg" -> "str", "stsk" -> "ssk", "stss" -> "sss",
-    "tfid" -> "tfi", "tmix" -> "tmi", "tokc" -> "tok", "topk" -> "top",
-    "unio" -> "uni", "vidf" -> "vid", "vocb" -> "voc", "winz" -> "win",
-    "wses" -> "wse", "wsld" -> "wsl", "wsmp" -> "wsm", "wtmb" -> "wtm",
-    "zord" -> "zor",
-    // r8 addition after the 3-char floor: new keys enter pre-floored
-    "grouping_sets" -> "gst", "conversion_window" -> "cvw", "equidepth" -> "edh",
-    // r9 additions, same discipline: every new key enters at 3 chars
-    "col_profile" -> "cpf", "value_drift" -> "vdf", "st_drift" -> "std",
-    "stratified" -> "sfd", "anomaly" -> "ano", "apx_pct" -> "apc",
-    // r9 2-char floor: the 161-entry catalog left 5 chars of window
-    // headroom at the 3-char floor, so every 3-char key drops to a
-    // unique 2-char code (left sides are exact post-floor keys — at this
-    // stage every key is <=3 chars, so a 3-char left side can only match
-    // a whole key, never a fragment of another). Banked headroom: ~160
-    // chars (model 1539/1700). New keys enter pre-floored at 2 chars.
-    "pvt" -> "pv", "asu" -> "as", "gmh" -> "gm", "rru" -> "rr",
-    "rup" -> "ru", "csu" -> "cs", "cub" -> "cu", "mnm" -> "mn",
-    "dis" -> "di", "fre" -> "fr", "his" -> "hi", "zsc" -> "zs",
-    "met" -> "me", "cor" -> "co", "rsm" -> "rs", "mav" -> "ma",
-    "fun" -> "fu", "coh" -> "ch", "nap" -> "na", "cdu" -> "cd",
-    "b2n" -> "b2", "sel" -> "se", "scs" -> "sc", "dtf" -> "dt",
-    "okp" -> "ok", "nnf" -> "nn", "nad" -> "nd", "nsp" -> "ns",
-    "lsl" -> "ls", "rid" -> "ri", "sex" -> "sx", "dtp" -> "dp",
-    "edj" -> "ed", "ljn" -> "lj", "uni" -> "un", "ntl" -> "nt",
-    "top" -> "to", "rar" -> "ra", "mel" -> "ml", "pct" -> "pc",
-    "ptd" -> "pt", "gst" -> "gs", "mad" -> "md", "edh" -> "eh",
-    "apx" -> "ap", "apc" -> "ac", "olf" -> "ol", "osm" -> "os",
-    "fmx" -> "fm", "rfi" -> "rf", "gbt" -> "gb", "cvt" -> "cv",
-    "ex_" -> "ex", "mh_" -> "mh", "sh_" -> "sh", "ngj" -> "ng",
-    "dds" -> "dd", "ssi" -> "ss", "idd" -> "id", "bld" -> "bl",
-    "lid" -> "li", "qua" -> "qu", "tok" -> "tk", "tfi" -> "tf",
-    "iid" -> "ii", "voc" -> "vo", "red" -> "re", "smi" -> "sm",
-    "dca" -> "dc", "tmi" -> "tm", "spk" -> "sp", "chw" -> "cw",
-    "dco" -> "do", "rep" -> "rp", "cuc" -> "cc", "shm" -> "hm",
-    "snp" -> "sn", "tri" -> "tr", "mgu" -> "mg", "scd" -> "sd",
-    "cpf" -> "cp", "iag" -> "ia", "cop" -> "op", "win" -> "wi",
-    "cas" -> "ca", "zor" -> "zo", "bpe" -> "bp", "lag" -> "la",
-    "atk" -> "at", "als" -> "al", "aiv" -> "ai", "emb" -> "em",
-    "esv" -> "es", "mme" -> "mm", "img" -> "im", "aud" -> "au",
-    "vid" -> "vi", "gct" -> "gc", "csv" -> "sv", "jlr" -> "jl",
-    "orc" -> "or", "ckp" -> "ck", "bkt" -> "bk", "skj" -> "sk",
-    "asf" -> "af", "afk" -> "ak", "rng" -> "rn", "mdr" -> "mr",
-    "wtm" -> "wt", "wsl" -> "ws", "wse" -> "we", "stb" -> "st",
-    "ssl" -> "sl", "sss" -> "s0", "sts" -> "ts", "ste" -> "te",
-    "str" -> "sr", "ssk" -> "s1", "st_" -> "s_", "stc" -> "tc",
-    "stf" -> "sf", "std" -> "td", "stt" -> "tt", "gjn" -> "gj",
-    "cbn" -> "cb", "smj" -> "sj", "atj" -> "aj", "sps" -> "ps",
-    "sop" -> "so", "nsj" -> "nj", "lor" -> "lo", "att" -> "a0",
-    "rnk" -> "rk", "stk" -> "s2", "mkv" -> "mk", "chi" -> "ci",
-    "twa" -> "tw", "cvw" -> "vw", "vdf" -> "vd", "ano" -> "an",
-    "tkg" -> "tg", "ldf" -> "ld", "con" -> "cn", "sky" -> "sy",
-    "wsm" -> "wm", "sfd" -> "fd", "blm" -> "bm", "bm2" -> "m2",
-    "gnn" -> "gn", "cal" -> "cl", "fou" -> "fo", "ols" -> "o0",
-    "enr" -> "en", "e2e" -> "e2", "jex" -> "je", "lnd" -> "ln",
-    // r9 additions after the 2-char floor: new keys enter pre-floored
-    "sim_jn" -> "pj",
-    // ("triangles"->"tri"->"tr" has already turned retrieval_eval into
-    // retreval_eval by this point — the left side is the folded form)
-    "retreval_eval" -> "rv",
-    // ("stky"->"sky"->"sy" folds skyline to syline before this table)
-    "syline" -> "ky",
-    // ("mh_"->"mh" has already turned mh_accuracy into mhaccuracy)
-    "mhaccuracy" -> "m1", "benford" -> "bf",
-    // fold order strikes again: stream_topk arrives here as "s_to" —
-    // the left side below is that folded form, not the raw name
-    "s_to" -> "t5", "changepoint" -> "cg",
-    // ("group_"->"grp_", then "ols"->"o0" fold group_ols to grp_o0)
-    "grp_o0" -> "go",
-    // ("mh_"->"mh" folds mh_tabulation to mhtabulation)
-    "mhtabulation" -> "m3", "s_cpt" -> "c1", "qunt_norm" -> "qn", "gini" -> "gy",
-    // ("embed_"->"emb_"; "emb_nd"->... leaves emb_drift; then "emb"->"em")
-    "em_drift" -> "e1", "ann_recll" -> "a1",
-    // r10 addition ("session"->"sess" has already folded session_paths)
-    "sess_paths" -> "s3",
-    // r11 addition, pre-floored at 2 chars ("string_"->"str_", "dedup"->
-    // "dd", then "str"->"sr" fold substring_dedup to subsr_dd)
-    "subsr_dd" -> "sb",
-    // r11 addition, pre-floored at 2 chars (no earlier rule touches
-    // "span_mask" — verified with tools/benchkey.py)
-    "span_mask" -> "s4",
-    // r15 addition, the judge-granted wire key ("dedup"->"dd" has folded
-    // suffix_dedup to suffix_dd by this point; no other registered name
-    // contains that fragment — verified with tools/benchkey.py, all 178
-    // pre-r15 keys byte-identical). Single-char because the 178-key model
-    // sat at 1871/1880: a 1-char entry costs exactly the 9 remaining
-    // chars, keeping the ToolSupportSpec bound with the driver's ~40-char
-    // real edge behind it.
-    "suffix_dd" -> "x")
+  /** Stable short keys for the bench contract line's "queries" map, one
+    * per catalog name. Purely a WIRE format for the 2000-char capture
+    * window — Verify, CORRECTNESS and the query registry keep full names.
+    * An explicit table: a new query gets its own entry, chosen unique
+    * and short, and ToolSupportSpec checks the table covers the catalog
+    * exactly with no two names sharing a key. The keys are the ones the
+    * bench line has carried since r15, so rounds stay comparable. */
+  val benchKeys: Map[String, String] = Map(
+    "q_ab_test" -> "ab", "q_agg_sum" -> "as", "q_ann_ivf" -> "ai",
+    "q_ann_lsh" -> "al", "q_ann_recall" -> "a1", "q_ann_topk" -> "at",
+    "q_anomaly" -> "an", "q_anti_join" -> "aj", "q_approx_distinct" -> "ap",
+    "q_approx_pct" -> "ac", "q_asof_join" -> "af", "q_asof_skew" -> "ak",
+    "q_attribution" -> "a0", "q_audio_decode" -> "au", "q_benford" -> "bf",
+    "q_bigram_lm" -> "bm", "q_blank_to_null" -> "b2", "q_bloom_dedup" -> "bl",
+    "q_bm25" -> "m2", "q_bpe_pairs" -> "bp", "q_bucketed_join" -> "bk",
+    "q_calibration" -> "cl", "q_cascade_delete" -> "ca", "q_cbind" -> "cb",
+    "q_changepoint" -> "cg", "q_checkpoint_prune" -> "ck", "q_chisq" -> "ci",
+    "q_chunk_windows" -> "cw", "q_cohort" -> "ch", "q_col_profile" -> "cp",
+    "q_concurrency" -> "cn", "q_cond_update" -> "cd",
+    "q_conversion_window" -> "vw", "q_copurchase" -> "op",
+    "q_corr_matrix" -> "co", "q_csv_roundtrip" -> "sv", "q_cube" -> "cu",
+    "q_cumsum" -> "cs", "q_curate_chain" -> "cc", "q_cv_tuning" -> "cv",
+    "q_date_filter" -> "dt", "q_date_parse" -> "dp", "q_decontam" -> "do",
+    "q_dedup_survivors" -> "dd", "q_distinct" -> "di", "q_domain_cap" -> "dc",
+    "q_dq_checks" -> "dq", "q_e2e" -> "e2", "q_edit_join" -> "ed",
+    "q_embed_drift" -> "e1", "q_embed_neardup" -> "em",
+    "q_embed_survivors" -> "es", "q_enrich_pipeline" -> "en",
+    "q_equidepth" -> "eh", "q_exact_dedup" -> "ex",
+    "q_feature_matrix" -> "fm", "q_fingerprint" -> "fp",
+    "q_freq_table" -> "fr", "q_full_outer" -> "fo", "q_funnel" -> "fu",
+    "q_gbt_metrics" -> "gb", "q_geo_county" -> "gc", "q_geo_join" -> "gj",
+    "q_geo_nearest" -> "gn", "q_gini" -> "gy", "q_group_mean_having" -> "gm",
+    "q_group_ols" -> "go", "q_grouping_sets" -> "gs",
+    "q_heavy_hitters" -> "hh", "q_histogram" -> "hi",
+    "q_image_decode" -> "im", "q_incr_agg" -> "ia", "q_incr_dedup" -> "id",
+    "q_inverted_index" -> "ii", "q_json_extract" -> "je",
+    "q_jsonl_roundtrip" -> "jl", "q_lag_gaps" -> "la", "q_lang_drift" -> "ld",
+    "q_lang_id" -> "li", "q_latest_order" -> "lo", "q_left_join" -> "lj",
+    "q_left_join_distinct" -> "ln", "q_limit_slice" -> "ls", "q_mad" -> "md",
+    "q_markov" -> "mk", "q_melt" -> "ml", "q_merge_upsert" -> "mg",
+    "q_metrics" -> "me", "q_mh_accuracy" -> "m1", "q_mh_tabulation" -> "m3",
+    "q_minhash_neardup" -> "mh", "q_minmax" -> "mn",
+    "q_model_roundtrip" -> "mr", "q_moving_avg" -> "ma",
+    "q_multimodal_meta" -> "mm", "q_na_drop" -> "nd", "q_na_profile" -> "na",
+    "q_ngram_jaccard" -> "ng", "q_notnull_filter" -> "nn", "q_ntile" -> "nt",
+    "q_null_split" -> "ns", "q_nullsafe_join" -> "nj",
+    "q_ols_diagnostics" -> "o0", "q_ols_forecast" -> "ol",
+    "q_ols_metrics" -> "os", "q_orc_roundtrip" -> "or",
+    "q_outlier_keepnull" -> "ok", "q_pagerank" -> "pr",
+    "q_percentile" -> "pc", "q_percentile_disc" -> "pt",
+    "q_pivot_ratio" -> "pv", "q_quality" -> "qu", "q_quantile_norm" -> "qn",
+    "q_range_join" -> "rn", "q_rank_funcs" -> "rk", "q_rare_other" -> "ra",
+    "q_redact" -> "re", "q_region_rollup" -> "rr", "q_repetition" -> "rp",
+    "q_resample_ffill" -> "rs", "q_retrieval_eval" -> "rv",
+    "q_rf_importance" -> "rf", "q_rollup" -> "ru", "q_row_index" -> "ri",
+    "q_sample_mix" -> "sm", "q_scd2" -> "sd", "q_schema_cast" -> "sc",
+    "q_select_rename" -> "se", "q_semi_join" -> "sj", "q_seq_pack" -> "sp",
+    "q_session_paths" -> "s3", "q_set_ops" -> "ps", "q_set_ops_all" -> "so",
+    "q_shard_manifest" -> "hm", "q_sim_join" -> "pj",
+    "q_simhash_neardup" -> "sh", "q_skew_join" -> "sk", "q_skyline" -> "ky",
+    "q_snapshot_diff" -> "sn", "q_source_sim" -> "ss", "q_span_mask" -> "s4",
+    "q_stickiness" -> "sy", "q_stratified" -> "fd", "q_streaks" -> "s2",
+    "q_stream_cpt" -> "c1", "q_stream_curate" -> "tc",
+    "q_stream_dedup" -> "s_", "q_stream_drift" -> "td",
+    "q_stream_enrich" -> "te", "q_stream_funnel" -> "sf",
+    "q_stream_range" -> "sr", "q_stream_sessions" -> "s0",
+    "q_stream_sessions_multi" -> "ts", "q_stream_sink" -> "s1",
+    "q_stream_sliding" -> "sl", "q_stream_topk" -> "t5",
+    "q_stream_totals" -> "tt", "q_stream_tumbling" -> "st",
+    "q_string_extract" -> "sx", "q_substring_dedup" -> "sb",
+    "q_suffix_dedup" -> "x", "q_temp_mix" -> "tm", "q_tfidf" -> "tf",
+    "q_time_weighted" -> "tw", "q_token_count" -> "tk", "q_topk" -> "to",
+    "q_topk_group" -> "tg", "q_triangles" -> "tr", "q_union" -> "un",
+    "q_value_drift" -> "vd", "q_video_frames" -> "vi",
+    "q_vocab_coverage" -> "vo", "q_weighted_sample" -> "wm",
+    "q_window_session" -> "we", "q_window_sliding" -> "ws",
+    "q_window_tumbling" -> "wt", "q_winsorize" -> "wi", "q_zorder" -> "zo",
+    "q_zscore" -> "zs"
+  )
 
-  def benchKey(name: String): String =
-    benchKeySubs.foldLeft(name.stripPrefix("q_")) {
-      case (k, (a, b)) => k.replace(a, b)
-    }
+  /** The wire key of a catalog name; a dev-mode repeat suffix ("#2")
+    * passes through. An unregistered name fails loudly rather than
+    * emitting an unknown key. */
+  def benchKey(name: String): String = {
+    val (base, suffix) = name.span(_ != '#')
+    benchKeys.getOrElse(base, throw new NoSuchElementException(
+      s"graft: no bench key registered for $base (ToolSupport.benchKeys)")
+    ) + suffix
+  }
 
   /** Seconds → compact JSON number for the bench contract line: Locale.ROOT
     * (a comma decimal separator would corrupt the JSON), adaptive precision

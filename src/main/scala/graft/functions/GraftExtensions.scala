@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * built-ins can't express the semantics/performance).
   *
   * Wire with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * — done by Tables.localSession, Verify and Bench, so `vec_dot` resolves
-  * in SQL and via `call_function`.
+  * — done by Tables.localSession, the session every graft tool builds, so
+  * `vec_dot` resolves in SQL and via `call_function`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def arity(n: Int, name: String)(

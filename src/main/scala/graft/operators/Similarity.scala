@@ -2095,14 +2095,16 @@ object Similarity {
     opqRotationNPTrace(sample, dim, sub, iters)._1
 
   /** Rotate a corpus: embedding → R·embedding (array<double>, one
-    * codegen'd vec_dot per output coordinate). Orthogonal R preserves
-    * dots and norms, so every cosine downstream is the original cosine
-    * up to fp rounding — only the PQ grid sees a different
-    * (better-conditioned) coordinate system. */
+    * vec_dot per output coordinate). Orthogonal R preserves dots and
+    * norms, so every cosine downstream is the original cosine up to fp
+    * rounding — only the PQ grid sees a different (better-conditioned)
+    * coordinate system. R ships as ONE array<array<double>> literal whose
+    * rows `transform` maps: a dim×dim tree of scalar literals made the
+    * rotated stage's generated method pass Janino's 64 KB limit, so every
+    * run paid a failed compile and fell back to interpreted evaluation. */
   def opqRotate(df: DataFrame, r: Array[Array[Double]]): DataFrame =
-    df.withColumn("embedding",
-      array(r.map(row => call_function("vec_dot",
-        array(row.map(lit): _*), col("embedding"))): _*))
+    df.withColumn("embedding", transform(typedLit(r.map(_.toSeq).toSeq),
+      row => call_function("vec_dot", row, col("embedding"))))
 
   // -- retrain & compaction decision records (r19: the composition) -------
 

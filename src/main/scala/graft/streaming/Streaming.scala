@@ -536,46 +536,6 @@ object Streaming {
         .parquet(stageLandingSplit(spark, dir, n)))
   }
 
-  /** Data micro-batch count of the last `runToMemory` run — exposed so
-    * specs can pin multi-batch execution mechanically (a silent revert to
-    * a one-file landing shows 1 here and fails the spec). */
-  @volatile var lastRunDataBatches: Int = -1
-
-  /** State-store footprint of one completed `runToMemory` execution:
-    * the MAX across its micro-batches of (sum over state operators of)
-    * numRowsTotal / memoryUsedBytes, straight from StreamingQueryProgress.
-    * Zero operators (a stateless gate like streamCurate) reads 0/0 —
-    * itself a measured claim. */
-  final case class RunStateStats(sink: String, dataBatches: Int,
-                                 maxStateRows: Long, maxStateBytes: Long)
-
-  /** Append-only log of per-run state footprints, newest last. Dev
-    * instruments (graft.StateBytes) clear it before a query and read it
-    * after, so queries that launch several streaming runs internally
-    * report every run, not just the last. Bounded by the handful of
-    * runToMemory calls a single catalog query makes. Backed by a
-    * concurrent queue: appends from streaming runs completing in
-    * parallel (the 7-way-parallel Verify mode, parallel specs) must
-    * each land — a `var list = list :+ x` read-modify-write would lose
-    * entries under that race. */
-  private val runStateQueue = new java.util.concurrent.atomic.AtomicReference(
-    new java.util.concurrent.ConcurrentLinkedQueue[RunStateStats]())
-  def runStateLog: List[RunStateStats] = {
-    import scala.jdk.CollectionConverters._
-    runStateQueue.get().asScala.toList
-  }
-  // Reset swaps in a FRESH queue atomically (r16, ADVICE low): the r15
-  // clear()-then-re-add reset wasn't atomic, so a run completing
-  // concurrently with an instrument's reset could land its entry between
-  // the clear and the re-adds — dropped from the old view or leaked into
-  // the "fresh" log. With the swap, a concurrent append lands wholly in
-  // the old queue or wholly in the new one; no intermediate state exists.
-  def runStateLog_=(v: List[RunStateStats]): Unit = {
-    val fresh = new java.util.concurrent.ConcurrentLinkedQueue[RunStateStats]()
-    v.foreach(fresh.add)
-    runStateQueue.set(fresh)
-  }
-
   /** State-store sizing knob: streaming state lives in ONE store instance
     * per shuffle partition and every micro-batch commits every instance,
     * so at small per-key state volumes the commit constant dominates and
@@ -606,20 +566,7 @@ object Streaming {
     val before = spark.conf.get(key)
     val want = spark.conf.getOption("graft.stream.shufflePartitions")
     want.foreach(spark.conf.set(key, _))
-    // recentProgress defaults to a 100-entry ring; a run with more
-    // micro-batches would silently under-report the batch-count pin and
-    // the state peak recordRunState derives from it. Catalog landings are
-    // well under 100 files, but the instrument must not depend on that.
-    val progKey = "spark.sql.streaming.numRecentProgressUpdates"
-    val progBefore = spark.conf.getOption(progKey)
-    spark.conf.set(progKey, "10000")
-    try f finally {
-      spark.conf.set(key, before)
-      progBefore match {
-        case Some(v) => spark.conf.set(progKey, v)
-        case None    => spark.conf.unset(progKey)
-      }
-    }
+    try f finally spark.conf.set(key, before)
   }
 
   /** Run a streaming frame to completion (AvailableNow) into a uniquely
@@ -636,40 +583,8 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordRunState(q, name)
       df.sparkSession.table(name)
     }
-
-  /** Shared post-run bookkeeping for every completed streaming query:
-    * batch count for the multi-batch spec pin, state footprint for the
-    * graft.StateBytes instrument. */
-  private def recordRunState(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String): Unit = {
-    val progs = q.recentProgress
-    // Derived locally then published: under concurrent run completion the
-    // shared lastRunDataBatches pin could be overwritten between a write
-    // and a read, but each queue entry must carry ITS run's batch count.
-    val batches = progs.count(_.numInputRows > 0)
-    lastRunDataBatches = batches
-    val rows =
-      if (progs.isEmpty) 0L
-      else progs.map(_.stateOperators.map(_.numRowsTotal).sum).max
-    val bytes =
-      if (progs.isEmpty) 0L
-      else progs.map(_.stateOperators.map(_.memoryUsedBytes).sum).max
-    runStateQueue.get().add(RunStateStats(name, batches, rows, bytes))
-    // dev instrument (r20 streaming-floor breakdown): keep the raw
-    // progress JSON of the most recent run so graft.StreamProbe can
-    // attribute micro-batch wall-clock to state commit vs compute vs
-    // offset-log constants. Read-only telemetry; no driver surface
-    // consumes it.
-    lastRunProgressJson = progs.map(_.json).toList
-  }
-
-  /** Raw StreamingQueryProgress JSON of the most recent completed run —
-    * populated by [[recordRunState]] for the StreamProbe dev instrument. */
-  @volatile private[graft] var lastRunProgressJson: List[String] = Nil
 
   /** Stage the documents table into its own landing directory (separate
     * from the events landing — a file-stream source reads every file in
@@ -815,7 +730,6 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordRunState(q, "graft_stream_sink_files")
     spark.read.parquet(out)
       // partition-column type inference may read `day` back as DATE
       .select(col("day").cast("string").as("day"),

@@ -569,6 +569,19 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
+  test("opqRotate ships the rotation as one literal, not dim×dim scalars") {
+    // a dim×dim tree of scalar literals pushed the rotated stage's
+    // generated method past Janino's 64 KB limit: a failed compile and an
+    // interpreted fallback on every run
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val rot = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
+    val plan = Similarity.opqRotate(base, rot).queryExecution.analyzed
+    val lits = plan.collect { case p =>
+      p.expressions.map(_.collect { case l: Literal => l }.size).sum
+    }.sum
+    assert(lits <= 2, s"$lits literals in the rotated frame's plan")
+  }
+
   // -- incremental append (frozen artifacts, the serving add path) -------
 
   test("pqIndexAppend: subset build + appended complement searches " +

@@ -141,11 +141,11 @@ class StreamingSpec extends AnyFunSuite {
   test("multi-batch sessionizer: split source really batches; finals withheld") {
     // the spec that fails if someone silently reverts the split landing to
     // the one-file assumption: the run must execute >1 DATA micro-batch
-    val out = SparkEntry.queries("q_stream_sessions_multi")(spark, sf)
-      .collect()
-    assert(Streaming.lastRunDataBatches >= 2,
+    val (out, work) = Work.measure(spark)(
+      SparkEntry.queries("q_stream_sessions_multi")(spark, sf).collect())
+    assert(work.runs.last.dataBatches >= 2,
       s"split source must arrive as multiple micro-batches, " +
-        s"got ${Streaming.lastRunDataBatches}")
+        s"got ${work.runs.last.dataBatches}")
     // emission rule: all sessions except each user's final one — the
     // disorder-covering watermark never fires a timeout, so emitted count
     // = total sessions − distinct users (content is oracle-gated)
@@ -448,7 +448,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream curate gate reproduces the batch predicate; truly stateless") {
-    val got = Streaming.streamCurate(spark, sf)
+    val (got, work) = Work.measure(spark)(Streaming.streamCurate(spark, sf))
     // the batch form of the same two-stage predicate, built from the
     // registered batch operator: q_repetition's survivors restricted to
     // the chain's en-filter — cross-checked via q_curate_chain's columns
@@ -468,7 +468,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // every batch doc passing BOTH gates is present (en-filter parity is
     // pinned by the DuckDB oracle; here we pin the repetition side)
-    assert(Streaming.lastRunDataBatches >= 1)
+    assert(work.runs.last.dataBatches >= 1)
   }
 
   test("a directory-form documents.parquet fails the stream loudly, " +
@@ -567,61 +567,61 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming funnel: multi-batch run equals the batch funnel exactly") {
-    val streamed = SparkEntry.queries("q_stream_funnel")(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(Streaming.lastRunDataBatches >= 2,
+    val (streamed, work) = Work.measure(spark)(
+      SparkEntry.queries("q_stream_funnel")(spark, sf).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3))))
+    assert(work.runs.last.dataBatches >= 2,
       "funnel must be exercised under REAL multi-batch arrival, got " +
-        s"${Streaming.lastRunDataBatches}")
+        s"${work.runs.last.dataBatches}")
     val batch = SparkEntry.queries("q_funnel")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(streamed.toSeq === batch.toSeq,
       "incremental greedy state diverged from the batch min()-chain")
   }
 
-  test("runStateLog measures state: keyed run bounded by key domain, " +
-    "stateless gate reads zero") {
-    // the graft.StateBytes instrument's contract, pinned: a keyed-state
+  test("Work.measure reads streaming state: keyed run bounded by key " +
+    "domain, stateless gate reads zero") {
+    // what `DevTools work` reports per streaming run, pinned: a keyed-state
     // run reports >0 state rows bounded by its key domain (one state
     // entry per user for the running-totals mapGroupsWithState)…
-    Streaming.runStateLog = Nil
-    SparkEntry.queries("q_stream_totals")(spark, sf).collect()
-    val keyed = Streaming.runStateLog
-    assert(keyed.nonEmpty, "streaming run must log its state footprint")
-    val tot = keyed.last
-    assert(tot.maxStateRows > 0 && tot.maxStateBytes > 0,
-      s"keyed state must be visible to the instrument, got $tot")
+    val (_, keyed) = Work.measure(spark)(
+      SparkEntry.queries("q_stream_totals")(spark, sf).collect())
+    assert(keyed.runs.nonEmpty, "the streaming run must be measured")
+    val tot = keyed.runs.last
+    assert(tot.peakStateRows > 0 && tot.peakStateBytes > 0,
+      s"keyed state must be visible to the meter, got $tot")
     val users = Tables.events(spark, sf)
       .select("user_id").distinct().count()
-    assert(tot.maxStateRows <= users,
-      s"state rows ${tot.maxStateRows} must be bounded by the " +
+    assert(tot.peakStateRows <= users,
+      s"state rows ${tot.peakStateRows} must be bounded by the " +
         s"$users-user key domain")
     // …and the deliberately stateless ingest gate measures EXACTLY zero
     // (the "no state store" design claim, as a number)
-    Streaming.runStateLog = Nil
-    SparkEntry.queries("q_stream_curate")(spark, sf).collect()
-    val gate = Streaming.runStateLog
-    assert(gate.nonEmpty && gate.last.maxStateRows === 0L &&
-      gate.last.maxStateBytes === 0L,
-      s"stateless gate must read 0/0, got ${gate.lastOption}")
+    val (_, gate) = Work.measure(spark)(
+      SparkEntry.queries("q_stream_curate")(spark, sf).collect())
+    assert(gate.runs.nonEmpty && gate.runs.last.peakStateRows === 0L &&
+      gate.runs.last.peakStateBytes === 0L,
+      s"stateless gate must read 0/0, got ${gate.runs.lastOption}")
   }
 
-  test("runStateLog is append-safe under concurrent run completion") {
-    // Two streaming queries driven from separate threads (the 7-way
-    // parallel Verify mode's shape): every completed run must land its
-    // own log entry — the pre-r15 `var list = list :+ x` read-modify-
-    // write could lose one when completions interleaved.
+  test("two streaming queries run concurrently under one measure both " +
+    "report their run") {
+    // Two streaming queries driven from separate threads (the parallel
+    // Verify mode's shape): the meter keys runs by runId, so each
+    // completed run must appear as its own entry.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    Streaming.runStateLog = Nil
-    val fa = Future(SparkEntry.queries("q_stream_totals")(spark, sf).collect())
-    val fb = Future(SparkEntry.queries("q_stream_curate")(spark, sf).collect())
-    Await.result(fa, 5.minutes); Await.result(fb, 5.minutes)
-    val sinks = Streaming.runStateLog.map(_.sink)
-    assert(sinks.exists(_.startsWith("graft_stream_totals")),
-      s"totals run entry missing from $sinks")
-    assert(sinks.exists(_.startsWith("graft_stream_curate")),
-      s"curate run entry missing from $sinks")
-    assert(sinks.size >= 2, s"both concurrent runs must log, got $sinks")
+    val (_, work) = Work.measure(spark) {
+      def run(q: String) = Future(SparkEntry.queries(q)(spark, sf).collect())
+      val (fa, fb) = (run("q_stream_totals"), run("q_stream_curate"))
+      Await.result(fa, 5.minutes); Await.result(fb, 5.minutes)
+    }
+    val names = work.runs.map(_.name)
+    assert(names.exists(_.startsWith("graft_stream_totals")),
+      s"totals run missing from $names")
+    assert(names.exists(_.startsWith("graft_stream_curate")),
+      s"curate run missing from $names")
+    assert(names.size >= 2, s"both concurrent runs must report, got $names")
   }
 }

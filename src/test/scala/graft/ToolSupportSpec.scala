@@ -39,8 +39,10 @@ class ToolSupportSpec extends AnyFunSuite {
   }
 
   test("benchKey: collision-free over the catalog, deterministic, reversible-ish") {
-    val names = SparkEntry.queries.keys.toSeq
-    val keys = names.map(ToolSupport.benchKey)
+    // the table covers the catalog exactly: a new query without a key,
+    // or a key left behind by a removed query, fails here
+    assert(ToolSupport.benchKeys.keySet === SparkEntry.queries.keySet)
+    val keys = ToolSupport.benchKeys.values.toSeq
     assert(keys.distinct.size === keys.size,
       "benchKey collision: two catalog queries map to one wire key")
     assert(ToolSupport.benchKey("q_stream_sessions_multi") === "ts")
@@ -48,6 +50,10 @@ class ToolSupportSpec extends AnyFunSuite {
     assert(ToolSupport.benchKey("q_agg_sum") === "as")
     // dev-mode repeat suffixes pass through (the base key still folds)
     assert(ToolSupport.benchKey("q_topk#2") === "to#2")
+    // an unregistered name fails loudly instead of emitting a stray key
+    assert(intercept[NoSuchElementException](
+      ToolSupport.benchKey("q_not_registered")).getMessage
+      .contains("q_not_registered"))
   }
 
   test("bench JSON line fits the 2000-char tail window at 4-char values") {
@@ -71,7 +77,7 @@ class ToolSupportSpec extends AnyFunSuite {
       s""""queries":{$entries},"sf":"sf0.001"}"""
     assert(line.length <= 1880,
       s"bench JSON model ${line.length} chars > 1880 — shorten keys " +
-        "(ToolSupport.benchKeySubs) before growing the catalog; the " +
+        "(ToolSupport.benchKeys) before growing the catalog; the " +
         "driver tail window is 2000 incl. the sbt epilogue")
   }
 
@@ -114,6 +120,20 @@ class ToolSupportSpec extends AnyFunSuite {
     assert(m.get.group(1).toInt === actual,
       s"README claims ${m.get.group(1)} tests, suite registers $actual — " +
         "update README.md")
+  }
+
+  test("src/main builds sessions in one place: Tables.localSession") {
+    // one session recipe: a second builder is how configs drifted apart
+    // (Bench once ran without the UTC zone every oracle check uses)
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val builder = scala.util.matching.Regex.quote("SparkSession.builder(").r
+    val sites = files.flatMap { p =>
+      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      builder.findAllMatchIn(src).map(_ => p.getFileName.toString)
+    }
+    assert(sites === Seq("Tables.scala"))
   }
 
   test("onlyFilter rejects unknown names instead of running a subset") {
