@@ -17,8 +17,8 @@ import scala.util.control.NonFatal
   *     is off in this session so the physical tree is directly
   *     collectible (plan SHAPE, not timing, is what is read here);
   *   - `work <sfDir> query...`: one noop-sink execution per query in the
-  *     Bench layout under [[Work.measure]]: a line of shuffle write and
-  *     spill totals per query, and a line per streaming run it launched
+  *     Bench layout under [[Work.measure]]: a line of jobs, shuffle
+  *     write and spill totals per query, and a line per streaming run it launched
   *     (data batches, peak state, commit-path ms).
   * Usage: sbt "runMain graft.DevTools <command> <sfDir> [query...]" */
 object DevTools {
@@ -72,7 +72,7 @@ object DevTools {
           val (_, w) = Work.measure(spark) {
             frame(q).write.mode("overwrite").format("noop").save()
           }
-          println(s"## $q shuffle_bytes=${w.shuffleBytes} " +
+          println(s"## $q jobs=${w.jobs} shuffle_bytes=${w.shuffleBytes} " +
             s"shuffle_records=${w.shuffleRecords} disk_spill=${w.spillBytes}")
           for (r <- w.runs)
             println(s"## $q run=${r.name} batches=${r.dataBatches} " +

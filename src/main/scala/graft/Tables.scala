@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graft.Footer
 
 /** Table access for the driver-generated testdata (TESTDATA.md).
   *
@@ -9,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * checkpoints, 01_DataMerge.R:50,143) — as partitioned Parquet scans.
   * Column pruning and predicate pushdown reach the scan via Catalyst, which
   * is what makes the same code hold at 100 TB: only referenced columns and
-  * row groups are read.
+  * row groups are read. Each scan's schema comes from its parquet footer,
+  * read on the driver, so planning a load starts no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +21,43 @@ object Tables {
 
   /** Lazy parquet scan; Catalyst prunes columns/pushes filters into it. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A parquet scan of `path` without its schema-inference job: the
+    * schema comes from the one footer Spark's non-merging inference reads
+    * (`_common_metadata`, else `_metadata`, else the first data file by
+    * sorted path), read on the driver and converted by Spark's own code
+    * under the session's confs. A directory with subdirectories (a
+    * hive-partitioned layout needs partition discovery) and a path with
+    * no footer plan as plain `spark.read.parquet`, which keeps Spark's
+    * partition columns and its own error. Nothing is cached: every call
+    * reads the footer again. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val footer: Option[FileStatus] =
+      if (!fs.exists(p)) None
+      else {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Some(st).filterNot(f => Footer.hidden(f.getPath.getName))
+        else {
+          val kids = fs.listStatus(p)
+          if (kids.exists(_.isDirectory)) None
+          else {
+            val leaves = kids.filterNot(k => Footer.hidden(k.getPath.getName))
+              .sortBy(_.getPath.toString)
+            val summaries = Seq("_common_metadata", "_metadata")
+            summaries.view.flatMap(n => leaves.find(_.getPath.getName == n))
+              .headOption.orElse(leaves.find(l =>
+                !summaries.contains(l.getPath.getName)))
+          }
+        }
+      }
+    footer.flatMap(Footer.schema(spark, _)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

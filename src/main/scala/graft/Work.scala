@@ -4,7 +4,8 @@ import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -12,8 +13,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 /** The work a piece of code makes Spark do, read from Spark's own task and
   * streaming-progress metrics (no stopwatch): shuffle write volume and
   * spill over its stages — the communication cost a plan change moves —
-  * and, per streaming run it launches, micro-batches, peak state and the
-  * commit-path times. */
+  * the Spark jobs it started, and, per streaming run it launches,
+  * micro-batches, peak state and the commit-path times. */
 object Work {
   /** One streaming run (one `runId`), summed or peaked over its progress
     * events. Peaks are the max across batches of the sum over the run's
@@ -25,10 +26,10 @@ object Work {
                        stateCommitMs: Long = 0)
 
   /** Shuffle write and spill over attempt-0 stages (a retried attempt
-    * would count its writes twice), plus the streaming runs in start
-    * order. */
+    * would count its writes twice), the jobs started, plus the streaming
+    * runs in start order. */
   final case class Report(shuffleBytes: Long, shuffleRecords: Long,
-                          spillBytes: Long, runs: Seq[Run])
+                          spillBytes: Long, jobs: Long, runs: Seq[Run])
 
   /** Run `thunk` on `spark` and return its result with the work it did.
     * The bus is drained before the listeners attach, so events of earlier
@@ -37,7 +38,7 @@ object Work {
     * and streaming runs of the same session. */
   def measure[T](spark: SparkSession)(thunk: => T): (T, Report) = {
     val sc = spark.sparkContext
-    val bytes, records, spill = new AtomicLong
+    val bytes, records, spill, jobs = new AtomicLong
     val runs = scala.collection.mutable.LinkedHashMap.empty[UUID, Run]
     def update(id: UUID, name: String)(f: Run => Run): Unit =
       runs.synchronized {
@@ -45,6 +46,9 @@ object Work {
           Run(Option(name).getOrElse(id.toString))))
       }
     val stages = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (e.stageInfo.attemptNumber() == 0) {
           val m = e.stageInfo.taskMetrics
@@ -79,7 +83,7 @@ object Work {
     try {
       val result = thunk
       ListenerBus.drain(sc)
-      (result, Report(bytes.get, records.get, spill.get,
+      (result, Report(bytes.get, records.get, spill.get, jobs.get,
         runs.synchronized(runs.values.toList)))
     } finally {
       spark.streams.removeListener(streams)

@@ -135,7 +135,10 @@ abstract class PercentileExactBase
   }
 
   override def serialize(buf: PercentileExact.Buf): Array[Byte] = {
-    val bytes = 8L + buf.rleM.toLong * 16L + buf.n.toLong * 8L
+    // header: run count, tail count, the noCompact flag — a buffer that
+    // gave up compaction keeps that decision across the shuffle instead
+    // of paying another unproductive sort on the merge side
+    val bytes = 9L + buf.rleM.toLong * 16L + buf.n.toLong * 8L
     require(bytes <= Int.MaxValue,
       s"$prettyName: partial buffer of ${buf.n} values plus ${buf.rleM} " +
         "compacted runs exceeds the 2 GiB serialization limit — this " +
@@ -144,6 +147,7 @@ abstract class PercentileExactBase
     val bb = java.nio.ByteBuffer.allocate(bytes.toInt)
     bb.putInt(buf.rleM)
     bb.putInt(buf.n)
+    bb.put(if (buf.noCompact) 1.toByte else 0.toByte)
     var i = 0
     while (i < buf.rleM) { bb.putDouble(buf.rleV(i)); i += 1 }
     i = 0
@@ -157,6 +161,7 @@ abstract class PercentileExactBase
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val m = bb.getInt()
     val n = bb.getInt()
+    val noCompact = bb.get() != 0
     val rleV = if (m == 0) null else new Array[Double](m)
     val rleC = if (m == 0) null else new Array[Long](m)
     var i = 0
@@ -168,6 +173,7 @@ abstract class PercentileExactBase
     while (i < n) { arr(i) = bb.getDouble(); i += 1 }
     val b = new PercentileExact.Buf(arr, n)
     b.rleV = rleV; b.rleC = rleC; b.rleM = m
+    b.noCompact = noCompact
     b
   }
 }

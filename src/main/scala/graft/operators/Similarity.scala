@@ -1110,7 +1110,7 @@ object Similarity {
     private[operators] def read(spark: SparkSession, indexPath: String,
                                 sub: Int): PqCodec = {
       val books = Array.ofDim[Array[Double]](sub, 1 << PqBits)
-      spark.read.parquet(s"$indexPath/codebooks").collect().foreach { r =>
+      Tables.parquet(spark, s"$indexPath/codebooks").collect().foreach { r =>
         books(r.getAs[Int]("m"))(r.getAs[Int]("code")) =
           r.getAs[scala.collection.Seq[Double]]("entry").toArray
       }
@@ -1165,7 +1165,7 @@ object Similarity {
     val Family = "ivf_sq8"
     private[operators] def read(spark: SparkSession, indexPath: String,
                                 dim: Int): Sq8Codec = {
-      val rows = spark.read.parquet(s"$indexPath/bounds").collect()
+      val rows = Tables.parquet(spark, s"$indexPath/bounds").collect()
       require(rows.length == dim &&
           rows.map(_.getAs[Int]("pos")).toSet == (0 until dim).toSet,
         s"graft: index at $indexPath has malformed bounds " +
@@ -1570,7 +1570,7 @@ object Similarity {
     * ArrayIndexOutOfBounds from collect()(0). */
   private def indexMeta(spark: SparkSession, indexPath: String)
       : org.apache.spark.sql.Row = {
-    val metaRows = spark.read.parquet(s"$indexPath/meta").collect()
+    val metaRows = Tables.parquet(spark, s"$indexPath/meta").collect()
     require(metaRows.length == 1,
       s"graft: index at $indexPath has ${metaRows.length} meta rows, " +
         "expected exactly 1 — not an indexBuild-written index")
@@ -1605,7 +1605,7 @@ object Similarity {
     val meta = indexMeta(spark, indexPath)
     val dim = meta.getAs[Int]("dim")
     val numLists = meta.getAs[Int]("num_lists")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
+    val centroids = Tables.parquet(spark, s"$indexPath/centroids")
       .orderBy("list_id").select("centroid")
       .collect().map(_.getSeq[Double](0).toArray)
     require(centroids.length == numLists,
@@ -1620,7 +1620,7 @@ object Similarity {
       if (meta.schema.fieldNames.contains("rotated") &&
           meta.getAs[Boolean]("rotated")) {
         val r = Array.ofDim[Array[Double]](dim)
-        spark.read.parquet(s"$indexPath/rotation").collect().foreach { row =>
+        Tables.parquet(spark, s"$indexPath/rotation").collect().foreach { row =>
           r(row.getAs[Int]("i")) =
             row.getAs[scala.collection.Seq[Double]]("row").toArray
         }
@@ -2144,7 +2144,7 @@ object Similarity {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prevSeq =
       if (fs.exists(p))
-        spark.read.parquet(logPath)
+        Tables.parquet(spark, logPath)
           .agg(max(col("audit_seq"))).collect()(0).getLong(0)
       else 0L
     val row = Seq((prevSeq + 1, recalls.length.toLong, mean, recalls.min))
@@ -2194,7 +2194,7 @@ object Similarity {
     require(fs.exists(p),
       s"graft: no audit log at $indexPath — log a build-time baseline " +
         "with indexAuditLog first")
-    val log = spark.read.parquet(logPath).orderBy("audit_seq").collect()
+    val log = Tables.parquet(spark, logPath).orderBy("audit_seq").collect()
     require(log.nonEmpty, s"graft: audit log at $indexPath is empty")
     val baseline = log.head
     val latest = log.last

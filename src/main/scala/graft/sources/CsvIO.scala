@@ -69,7 +69,7 @@ object CsvIO {
     df.write.mode("overwrite").parquet(path)
 
   def loadCheckpoint(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** S3 at scale: hive-layout checkpoint partitioned by low-cardinality
     * key(s). A downstream filter on the partition column prunes whole
@@ -88,7 +88,7 @@ object CsvIO {
   def checkpointPrune(spark: SparkSession, dir: String): DataFrame = {
     val path = scratch("ckpt_events", dir)
     checkpointPartitioned(Tables.events(spark, dir), path, Seq("event_type"))
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("event_type") === "click")
       .agg(
         count(lit(1)).as("cnt"),

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** Structured Streaming surface (builder brief: readStream → transforms →
@@ -416,7 +417,7 @@ object Streaming {
   private def eventsStream(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
     graft.Tables.withEventTs(
       spark.readStream.schema(schema).parquet(stageLanding(dir)))
   }
@@ -437,7 +438,7 @@ object Streaming {
     // mismatched source.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = Paths.get(s"$dir/events.parquet")
-    val tsTag = spark.read.parquet(src.toString)
+    val tsTag = graft.Tables.parquet(spark, src.toString)
       .schema("ts").dataType.typeName.replaceAll("[^a-z]", "")
     val srcTag = s"${Files.size(src)}_${
       Files.getLastModifiedTime(src).toMillis}"
@@ -454,7 +455,7 @@ object Streaming {
       // the temp dir, so a published landing is complete by construction.
       val tmp = Paths.get(landing.toString + ".tmp." +
         java.lang.ProcessHandle.current().pid())
-      spark.read.parquet(src.toString)
+      graft.Tables.parquet(spark, src.toString)
         .repartitionByRange(n, col("ts")) // physical ts: long or timestamp
         .write.mode("overwrite").parquet(tmp.toString)
       import scala.jdk.CollectionConverters._
@@ -529,7 +530,7 @@ object Streaming {
   private def eventsStreamSplit(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, n: Int): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
     graft.Tables.withEventTs(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -605,7 +606,7 @@ object Streaming {
     * predicate — streaming execution itself passes the hash gate. */
   def streamCurate(spark: org.apache.spark.sql.SparkSession,
                    dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.parquet(spark, s"$dir/documents.parquet").schema
     val docs = spark.readStream.schema(schema)
       .parquet(stageDocsLanding(dir))
       .withColumn("nt", regexp_replace(lower(col("text")), "\\s+", " "))
@@ -694,16 +695,19 @@ object Streaming {
       .orderBy("day", "segment")
   }
 
-  /** Streaming → partitioned parquet with idempotent restarts — the
-    * exactly-once sink discipline for files: `foreachBatch` writes each
-    * micro-batch's changed day-partitions via DYNAMIC partition overwrite,
-    * so replaying a batch (failure/restart, or a full re-run) rewrites
-    * the same partitions with the same content instead of appending
-    * duplicates. Update output mode keeps per-batch writes at
-    * changed-group size. The query returns the parquet read BACK from the
-    * sink, so the driver's oracle gates the entire write→read lifecycle
-    * (same pattern as the CSV round-trip); idempotence itself is pinned
-    * by running the stream twice in the spec. */
+  /** Streaming → parquet with idempotent restarts — the exactly-once
+    * sink discipline for files: Complete output mode hands every
+    * micro-batch the whole aggregate, and `foreachBatch` overwrites ONE
+    * flat table with it, so replaying a batch (failure/restart, or a full
+    * re-run) rewrites the same table instead of appending duplicates, and
+    * a batch that changed only some groups still leaves every group in
+    * the table. A non-watermarked aggregate keeps every group in state
+    * under any output mode, so Complete mode costs no extra state, only
+    * a per-batch write of the aggregate (one row per day × event type).
+    * The query returns the parquet read BACK from the sink, so the
+    * driver's oracle gates the entire write→read lifecycle (same pattern
+    * as the CSV round-trip); idempotence itself is pinned by running the
+    * stream twice in the spec. */
   def streamToParquet(spark: org.apache.spark.sql.SparkSession,
                       dir: String): DataFrame = withStreamShuffle(spark) {
     import org.apache.spark.sql.streaming.Trigger
@@ -713,30 +717,24 @@ object Streaming {
         date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
         col("event_type"))
       .agg(count(lit(1)).as("cnt"), EventWindows.sumValueCents)
-    val q = agg.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // partition = EXACTLY one output group: Update mode emits only
-        // the groups a batch changed, so a coarser partition (day alone)
-        // would be rewritten with just the changed subset and silently
-        // drop its other groups whenever the source splits into multiple
-        // micro-batches
-        batch.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("day", "event_type")
-          .parquet(out)
-        ()
-      }
+    parquetSinkOf(agg, out)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
-      // partition-column type inference may read `day` back as DATE
-      .select(col("day").cast("string").as("day"),
-        col("event_type").cast("string").as("event_type"),
-        col("cnt"), col("sum_value_cents"))
-      .orderBy("day", "event_type")
+      .awaitTermination()
+    graft.Tables.parquet(spark, out).orderBy("day", "event_type")
   }
+
+  /** The sink of [[streamToParquet]]: a streaming aggregate written as one
+    * flat parquet table at `out`, rewritten whole by every micro-batch.
+    * The caller picks the trigger and starts it. */
+  private[graft] def parquetSinkOf(agg: DataFrame,
+                                   out: String): DataStreamWriter[Row] =
+    agg.writeStream
+      .outputMode(OutputMode.Complete())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("overwrite").parquet(out)
+        ()
+      }
 
   /** Stream–stream interval join executed as a REAL streaming job: the
     * attribution pairs of `RangeJoin.query` (clicks inside same-user 24h

@@ -1,11 +1,25 @@
 package graft
 
 import graft.plans.EnrichPipeline
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class EnrichPipelineSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Scans of the orders table: parquet relations rooted at
+    * `orders.parquet`. */
+  private def ordersScans(p: LogicalPlan): Seq[LogicalRelation] =
+    p.collectWithSubqueries {
+      case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.location.rootPaths.exists(_.getName == "orders.parquet") => l
+    }
+  private def rdds(p: LogicalPlan): Seq[LogicalRDD] =
+    p.collectWithSubqueries { case r: LogicalRDD => r }
 
   test("e2e chain: regression over the enrichment recovers the planted betas") {
     import graft.ml.{E2eChain, OlsPipeline}
@@ -33,20 +47,18 @@ class EnrichPipelineSpec extends AnyFunSuite {
   test("e2e enrich chain is one fused lineage; query reads ONE checkpoint") {
     // the ENRICH chain itself must stay one fused plan reaching the
     // orders parquet scan directly — no per-stage barriers inside it
-    val pd = graft.ml.E2eChain.dataset(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    assert(pd.contains("Relation") && pd.contains("orders"), pd.take(2000))
-    assert(!pd.contains("LogicalRDD"), "per-stage barrier inside enrich")
+    val pd = graft.ml.E2eChain.dataset(spark, sf).queryExecution.optimizedPlan
+    assert(ordersScans(pd).nonEmpty, pd.toString.take(2000))
+    assert(rdds(pd).isEmpty, "per-stage barrier inside enrich")
     // the QUERY materializes that chain exactly once (the r20 lazy
     // localCheckpoint replacing cache — it truncates the enrich lineage
     // for the gram/forecast/calibration consumers), so the returned
     // frame's plan reads the single checkpointed frame, not a re-derived
     // enrich tree
-    val p = SparkEntry.queries("q_e2e")(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    assert(p.contains("LogicalRDD"), p.take(2000))
-    assert(!p.contains("orders"), "q_e2e re-derived the enrich chain " +
-      "instead of reading its one checkpoint: " + p.take(2000))
+    val p = SparkEntry.queries("q_e2e")(spark, sf).queryExecution.optimizedPlan
+    assert(rdds(p).nonEmpty, p.toString.take(2000))
+    assert(ordersScans(p).isEmpty, "q_e2e re-derived the enrich chain " +
+      "instead of reading its one checkpoint: " + p.toString.take(2000))
   }
 
   test("chain fuses to one plan with pushed filters (no per-stage barriers)") {

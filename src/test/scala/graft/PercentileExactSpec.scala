@@ -281,4 +281,23 @@ class PercentileExactSpec extends AnyFunSuite {
       .collect()(0).getSeq[Double](0).map(bits)
     assert(run(1) == ref && run(7) == ref && run(32) == ref)
   }
+
+  test("a partial buffer keeps its noCompact flag through serialize") {
+    // a buffer that gave up compaction must not reset after a shuffle
+    // and pay another unproductive sort and merge on the merge side
+    import graft.functions.PercentileExact
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val agg = PercentileExact(Literal(1.0), Literal(0.5))
+    for (flag <- Seq(true, false)) {
+      val b = new PercentileExact.Buf(Array(3.0, -0.0, 2.0, 0.0), 3)
+      b.rleV = Array(1.0, 5.0); b.rleC = Array(2L, 7L); b.rleM = 2
+      b.noCompact = flag
+      val back = agg.deserialize(agg.serialize(b))
+      assert(back.noCompact === flag)
+      assert(back.n === 3 && back.arr.take(3).map(bits).toSeq ===
+        Seq(3.0, -0.0, 2.0).map(bits))
+      assert(back.rleM === 2 && back.rleV.toSeq === Seq(1.0, 5.0) &&
+        back.rleC.toSeq === Seq(2L, 7L))
+    }
+  }
 }

@@ -393,7 +393,7 @@ class StreamingSpec extends AnyFunSuite {
   test("exactly-once sink: re-running the stream leaves the table unchanged") {
     val first = Streaming.streamToParquet(spark, sf).collect()
     // second full run replays every batch into the same sink path —
-    // dynamic partition overwrite must rewrite, never duplicate
+    // the overwrite must rewrite, never duplicate
     val second = Streaming.streamToParquet(spark, sf).collect()
     assert(first.nonEmpty)
     assert(first.toSeq === second.toSeq)
@@ -409,26 +409,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(first.toSeq === batch.toSeq)
   }
 
-  test("sink partitions are one group each: partial replays lose nothing") {
-    // the property that makes the foreachBatch sink safe under Update
-    // mode: a batch containing only SOME of a day's groups must rewrite
-    // only those groups' partitions. If partitioning were by day alone,
-    // this partial write would wipe the day's other groups.
+  test("flat sink: a batch that changes one group keeps every group") {
+    // the production sink (streamToParquet's) over two micro-batches where
+    // the second changes only the click group: the table it rewrites must
+    // still hold the purchase group, with the click group at wave 2's sum
     import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files
-      .createTempDirectory("graft_sink_gran").toString + "/t"
-    def write(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day", "event_type").parquet(out)
-    write(Seq(("2024-01-01", "click", 5L), ("2024-01-01", "purchase", 3L))
-      .toDF("day", "event_type", "cnt"))
-    // partial "micro-batch": only the click group of that day changed
-    write(Seq(("2024-01-01", "click", 9L)).toDF("day", "event_type", "cnt"))
-    val back = spark.read.parquet(out)
-      .collect().map(r => (r.getAs[String]("event_type"),
-        r.getAs[Long]("cnt"))).toMap
-    assert(back === Map("click" -> 9L, "purchase" -> 3L))
+      .createTempDirectory("graft_sink_flat").toString + "/t"
+    val mem = MemoryStream[(String, String, Long)]
+    val agg = mem.toDF().toDF("day", "event_type", "v")
+      .groupBy("day", "event_type").agg(sum("v").as("cnt"))
+    def table(): Map[String, Long] = Tables.parquet(spark, out).collect()
+      .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("cnt")).toMap
+    val (_, work) = Work.measure(spark) {
+      val q = Streaming.parquetSinkOf(agg, out).start()
+      try {
+        mem.addData(("2024-01-01", "click", 5L),
+          ("2024-01-01", "purchase", 3L))
+        q.processAllAvailable()
+        assert(table() === Map("click" -> 5L, "purchase" -> 3L))
+        mem.addData(("2024-01-01", "click", 4L))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(work.runs.last.dataBatches === 2, work)
+    assert(table() === Map("click" -> 9L, "purchase" -> 3L))
   }
 
   test("stream results are state-layout independent: 8 vs 32 stores equal") {

@@ -122,18 +122,37 @@ class ToolSupportSpec extends AnyFunSuite {
         "update README.md")
   }
 
-  test("src/main builds sessions in one place: Tables.localSession") {
-    // one session recipe: a second builder is how configs drifted apart
-    // (Bench once ran without the UTC zone every oracle check uses)
+  /** Every occurrence of `text` in a src/main source: (file name, the
+    * file's text, offset). */
+  private def mainSites(text: String): Seq[(String, String, Int)] = {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val builder = scala.util.matching.Regex.quote("SparkSession.builder(").r
-    val sites = files.flatMap { p =>
+    val pattern = scala.util.matching.Regex.quote(text).r
+    files.flatMap { p =>
       val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      builder.findAllMatchIn(src).map(_ => p.getFileName.toString)
+      pattern.findAllMatchIn(src)
+        .map(m => (p.getFileName.toString, src, m.start))
     }
-    assert(sites === Seq("Tables.scala"))
+  }
+
+  test("src/main builds sessions in one place: Tables.localSession") {
+    // one session recipe: a second builder is how configs drifted apart
+    // (Bench once ran without the UTC zone every oracle check uses)
+    assert(mainSites("SparkSession.builder(").map(_._1) ===
+      Seq("Tables.scala"))
+  }
+
+  test("src/main reads parquet in one place: Tables.parquet") {
+    // any other read.parquet( plans a one-task schema-inference job
+    val sites = mainSites("read.parquet(")
+    assert(sites.nonEmpty)
+    sites.foreach { case (file, src, at) =>
+      val start = src.indexOf("def parquet(")
+      val end = src.indexOf("\n  }\n", start)
+      assert(file == "Tables.scala" && start >= 0 && at > start && at < end,
+        s"read.parquet( outside Tables.parquet in $file at offset $at")
+    }
   }
 
   test("onlyFilter rejects unknown names instead of running a subset") {
