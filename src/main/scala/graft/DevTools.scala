@@ -16,10 +16,11 @@ import scala.util.control.NonFatal
   *     its window expressions and input subtree for classification. AQE
   *     is off in this session so the physical tree is directly
   *     collectible (plan SHAPE, not timing, is what is read here);
-  *   - `work <sfDir> query...`: one noop-sink execution per query in the
-  *     Bench layout under [[Work.measure]]: a line of jobs, shuffle
-  *     write and spill totals per query, and a line per streaming run it launched
-  *     (data batches, peak state, commit-path ms).
+  *   - `work <sfDir> query...`: per query, one unmeasured noop-sink
+  *     execution (JIT and class loading), then one in the Bench layout
+  *     under [[Work.measure]]: a line of jobs, shuffle write and spill
+  *     totals per query, and a line per streaming run it launched (data
+  *     batches, peak state, commit-path ms).
   * Usage: sbt "runMain graft.DevTools <command> <sfDir> [query...]" */
 object DevTools {
   private val planDefaults = Seq(
@@ -68,10 +69,12 @@ object DevTools {
           }
         println(s"\n[window-audit] total unpartitioned WindowExec nodes: $total")
       case "work" =>
+        def run(q: String): Unit =
+          frame(q).write.mode("overwrite").format("noop").save()
         for (q <- named) {
-          val (_, w) = Work.measure(spark) {
-            frame(q).write.mode("overwrite").format("noop").save()
-          }
+          run(q)
+          ToolSupport.release(spark)
+          val (_, w) = Work.measure(spark)(run(q))
           println(s"## $q jobs=${w.jobs} shuffle_bytes=${w.shuffleBytes} " +
             s"shuffle_records=${w.shuffleRecords} disk_spill=${w.spillBytes}")
           for (r <- w.runs)

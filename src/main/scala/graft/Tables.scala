@@ -66,31 +66,23 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** Normalize `events.ts` to a session-zone timestamp whatever the
-    * generator's parquet physical type is. Older testdata wrote
-    * TIMESTAMP(NANOS) — the Spark vectorized reader rejects it, so with
-    * `nanosAsLong` it arrives as a raw epoch-nanos LONG and `div` keeps the
-    * micros conversion in exact integer space (a double division would lose
-    * precision above 2^53 ns). Current testdata writes timestamp[us] with
-    * isAdjustedToUTC=false, which Spark reads as TIMESTAMP_NTZ; the session
-    * timezone is pinned to UTC, so the NTZ→TZ cast is value-preserving and
-    * both generations yield identical instants. */
+  /** Normalize `events.ts` to a session-zone timestamp. The inputs write
+    * timestamp[us] with isAdjustedToUTC=false, which Spark reads as
+    * TIMESTAMP_NTZ; the session timezone is pinned to UTC, so the NTZ→TZ
+    * cast is value-preserving. A TIMESTAMP(NANOS) column fails in Spark's
+    * own reader: the session's `nanosAsLong` conf is never set here. */
   def withEventTs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
-      case LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     withEventTs(load(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** The flagship end-to-end chain: the reference's FULL 01→03 path —
   * ingest→enrich→clean (01_DataMerge.R:42, 02_DataCleaning.R) straight
@@ -83,7 +83,7 @@ object E2eChain {
     // here: the returned frame is still lazy and must read the same
     // materialized RDD (Bench's inter-run hygiene unpersists it; a
     // session relying on it long-term would unpersist after collecting).
-    val ds = dataset(spark, dir).localCheckpoint(eager = false)
+    val ds = Materialize.lazily(dataset(spark, dir))
     val observed = ds.filter(col("label").isNotNull)
     val forecastU = ds.filter(col("label").isNull)
     val (train, test) = OlsPipeline.keySplit(observed, "o_orderkey", 123)

@@ -240,32 +240,13 @@ object OlsPipeline {
         col("l_quantity"), col("l_discount"), col("l_tax"))
       .orderBy("prediction", "l_orderkey",
         "l_quantity", "l_discount", "l_tax")
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = graft.operators.GlobalRank.offsets(rdd)
-    val n = offsets.last
-    val spark2 = spark
-    import spark2.implicits._
-    val agg = rdd
-      .mapPartitionsWithIndex { (pi, it) =>
-        var idx = offsets(pi)
-        it.map { row =>
-          val tile = graft.operators.GlobalRank.tile(idx, n, tiles)
-          idx += 1
-          (tile, row.getDouble(0), row.getDouble(1))
-        }
-      }
-      .toDF("decile", "p", "y")
-      .groupBy("decile")
+    graft.operators.GlobalRank.tiled(sorted, tiles)(_.groupBy("decile")
       .agg(count(lit(1)).as("n"),
-        round(esum(col("p")) / count(lit(1)), 4).as("mean_pred"),
-        round(esum(col("y")) / count(lit(1)), 4).as("mean_actual"),
-        round(esum(col("p")) / count(lit(1)) -
-          esum(col("y")) / count(lit(1)), 4).as("gap"))
-      .orderBy("decile")
-    val rows = agg.collect()
-    rdd.unpersist(blocking = false)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
+        round(esum(col("prediction")) / count(lit(1)), 4).as("mean_pred"),
+        round(esum(col("label")) / count(lit(1)), 4).as("mean_actual"),
+        round(esum(col("prediction")) / count(lit(1)) -
+          esum(col("label")) / count(lit(1)), 4).as("gap"))
+      .orderBy("decile"))
   }
 
   /** M7: calibration meta-regression lm(actual ~ forecast) on the county

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Behavioral / product-analytics operators over the events stream table:
   * ordered conversion funnels and cohort retention — the two queries every
@@ -890,12 +890,11 @@ object Behavior {
     // over this days-sized frame, where the r19/r20 flat-buffer argument
     // has nothing to win (the VERDICT item-7 re-check, measured at sf0.1:
     // 30 input rows).
-    val daily = Tables.events(spark, dir)
+    val daily = Materialize.lazily(Tables.events(spark, dir)
       .select(col("event_id"),
         epochDay(col("ts")).as("d"))
       .filter(!(col("d") % 16 === 5 && col("event_id") % 4 =!= 0))
-      .groupBy("d").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+      .groupBy("d").agg(count(lit(1)).as("n")))
     val med = daily.agg(expr("percentile(CAST(n AS DOUBLE), 0.5)").as("med"))
     val dev = daily.crossJoin(broadcast(med))
       .select(col("d"), col("n"), col("med"),

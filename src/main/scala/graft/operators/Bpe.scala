@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** BPE tokenizer training — the iterative merge loop over the
   * [[TextAnalysis.bpePairs]] pair-count inner loop (r15 verdict #3: the
@@ -296,8 +296,7 @@ object Bpe {
                        targetVocab: Int,
                        grain: Grain = CharGrain,
                        preTok: PreTok = WhitespacePreTok): Vocab = {
-    val words = wordTableAt(spark, dir, grain, preTok)
-      .localCheckpoint(true)
+    val words = Materialize.eagerly(wordTableAt(spark, dir, grain, preTok))
     val alphabet = grain match {
       case ByteGrain => 256L
       case _ => words.select(explode(col("syms")).as("s"))
@@ -363,7 +362,7 @@ object Bpe {
     // one materialization; each round re-checkpoints the rewritten
     // vocab-bounded table (the pageRank unrolled-rounds shape) so the
     // plan never nests k aggregate() folds
-    var cur = words.select(col("freq"), col("syms")).localCheckpoint(true)
+    var cur = Materialize.eagerly(words.select(col("freq"), col("syms")))
     var round = 1
     while (round <= rounds) {
       val top = pairStats(cur)
@@ -374,7 +373,7 @@ object Bpe {
         val (l, r, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += Merge(out.size + 1, l, r, l + r, n)
-        cur = cur.withColumn("syms", mergeFold(l, r)).localCheckpoint(true)
+        cur = Materialize.eagerly(cur.withColumn("syms", mergeFold(l, r)))
         round += 1
       }
     }
@@ -450,7 +449,7 @@ object Bpe {
   def encodeWords(words: DataFrame, merges: Seq[Merge]): DataFrame =
     merges.zipWithIndex.foldLeft(words) { case (df, (m, i)) =>
       val next = df.withColumn("syms", mergeFold(m.left, m.right))
-      if ((i + 1) % 4 == 0) next.localCheckpoint(true) else next
+      if ((i + 1) % 4 == 0) Materialize.eagerly(next) else next
     }
 
   /** Segmentation-aware corpus statistics (r16 depth item a):
@@ -806,7 +805,7 @@ object Bpe {
     def checkpointTracked(df: DataFrame)
         : (DataFrame, scala.collection.Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet
-      val ck = df.localCheckpoint(eager = true)
+      val ck = Materialize.eagerly(df)
       (ck, sc.getPersistentRDDs.keySet -- before)
     }
     var (cur, curIds) = checkpointTracked(words)

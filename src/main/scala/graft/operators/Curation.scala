@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Corpus-curation operators for LLM training-data pipelines over
   * `documents` — the steps that sit between dedup/quality-scoring and the
@@ -594,7 +594,7 @@ object Curation {
     // some later consumer runs) — unlike ntile's 10 fixed rows, the bin
     // manifest grows as totalTokens/budgetTokens, so a driver collect
     // here would contradict the operator's own 100 TB story (~10¹⁰ bins)
-    val out = agg.localCheckpoint(eager = true)
+    val out = Materialize.eagerly(agg)
     rdd.unpersist(blocking = false)
     out
   }
@@ -643,15 +643,13 @@ object Curation {
     // plans/r20/q_stratified_before.txt). Measured 0.68 → 0.55 s
     // isolated warm at sf0.1 (DevProbe 5-run medians; surv alone 0.60).
     // Both frames are documents-sized narrow (lang, doc_id, h) rows.
-    val joined = docs.join(broadcast(counts), "lang")
-      .localCheckpoint(eager = false)
+    val joined = Materialize.lazily(docs.join(broadcast(counts), "lang"))
     // threshold in truncating integer div (overflow-free at any n_g; a
     // stratum so large the div floors to 0 simply takes the fallback)
-    val surv = joined.filter(col("h") <
+    val surv = Materialize.lazily(joined.filter(col("h") <
       when(col("lang") === "zh",
         expr(s"(${8L * k * StratM}L) div (n_g * 32L)"))
-        .otherwise(expr(s"(${8L * k * StratM}L) div n_g")))
-      .localCheckpoint(eager = false)
+        .otherwise(expr(s"(${8L * k * StratM}L) div n_g"))))
     val certified = surv.groupBy("lang").agg(count(lit(1)).as("s_g"))
       .filter(col("s_g") >= k.toLong).select("lang")
     val okRows = surv.join(broadcast(certified), Seq("lang"), "left_semi")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Deduplication operators for LLM training-data pipelines over `documents`
   * (builder-brief first-class components; SURVEY.md §7.1(7)).
@@ -126,18 +126,7 @@ object Dedup {
   /** [[substringDedup]] over an arbitrary (doc_id, text) frame — split
     * out (like [[spanMaskOf]]) so DedupSpec can drive adversarial
     * corpora (padded, null-text) through the EXACT production plan. */
-  def substringDedupOf(docs: DataFrame, w: Int = SpanTokens): DataFrame =
-    substringDedupOf(docs, w, materialize = true)
-
-  /** [[substringDedupOf]] with the materialization seam exposed —
-    * `materialize = false` exists for PlanSpec only (the trianglesOf
-    * discipline), so the span_fps-kernel / no-cartesian / join-count pins
-    * can read the FULL logical shape: checkpoints hide executed subtrees
-    * behind ExistingRDD scans. */
-  private[graft] def substringDedupOf(docs: DataFrame, w: Int,
-                                      materialize: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+  def substringDedupOf(docs: DataFrame, w: Int = SpanTokens): DataFrame = {
     val base = docs.select(col("doc_id"), spanNormText.as("nt"))
     val toks = base.select(col("doc_id"), split(col("nt"), " ").as("ts"))
     // corpus-wide pass: positional fps off the normalized string via the
@@ -150,7 +139,7 @@ object Dedup {
     // sf0.1 (DevProbe 5-run medians: ckpt alone 2.71, ckpt + n_fp
     // rederivation 2.25). Lazy, not eager: the materialization runs
     // inside the consuming action, no build-time barrier.
-    val occFp = ckpt(base.select(col("doc_id"),
+    val occFp = Materialize.lazily(base.select(col("doc_id"),
       posexplode(expr(s"span_fps(nt, $w)")).as(Seq("i", "fp"))))
     // occurrence-level hotness (no per-doc distinct — saves a corpus-wide
     // (doc_id, fp) exchange): ≥2 occurrences ⊇ ≥2 docs, and also ⊇ "fp
@@ -281,18 +270,7 @@ object Dedup {
     * the edge-case battery in DedupSpec can drive adversarial corpora
     * (empty/whitespace-only/single-token/short-hot docs) through the
     * EXACT production plan, not a test-local reimplementation. */
-  def spanMaskOf(docs: DataFrame, w: Int = SpanTokens): DataFrame =
-    spanMaskOf(docs, w, materialize = true)
-
-  /** [[spanMaskOf]] with the materialization seam exposed —
-    * `materialize = false` exists for PlanSpec only (the trianglesOf
-    * discipline), so the span_fps-kernel / no-cartesian / join-count pins
-    * can read the FULL logical shape: checkpoints hide executed subtrees
-    * behind ExistingRDD scans. */
-  private[graft] def spanMaskOf(docs: DataFrame, w: Int,
-                                materialize: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+  def spanMaskOf(docs: DataFrame, w: Int = SpanTokens): DataFrame = {
     val nt = spanNormText
     // r20: BOTH corpus-wide frames lazily localCheckpointed — toks is
     // consumed by the hot-occurrence join AND the final rewrite join,
@@ -303,14 +281,15 @@ object Dedup {
     // (DevProbe 5-run medians: occFp ckpt alone 3.59, occFp + toks
     // 2.88); lazy, so the materializations run inside the consuming
     // action with no build-time barrier.
-    val toks = ckpt(docs.select(col("doc_id"), split(nt, " ").as("ts")))
+    val toks = Materialize.lazily(
+      docs.select(col("doc_id"), split(nt, " ").as("ts")))
     // phase 1 input: positional fps straight off the normalized string —
     // the `span_fps` kernel rolls every w-token span in O(len) per doc
     // (prefix polynomial hashes), so the ONLY corpus-wide pass builds no
     // span strings and no structs: (doc_id, i, fp) longs in, longs out.
     // posexplode's 0-based pos IS the token index (short docs emit their
     // single whole-text fp at i=0, word_ngrams' short-doc semantics)
-    val occFp = ckpt(docs
+    val occFp = Materialize.lazily(docs
       .select(col("doc_id"), nt.as("nt"))
       .select(col("doc_id"),
         posexplode(expr(s"span_fps(nt, $w)")).as(Seq("i", "fp"))))
@@ -477,23 +456,12 @@ object Dedup {
   def suffixDedup(spark: SparkSession, dir: String): DataFrame =
     suffixDedupOf(suffixCorpus(spark, dir))
 
-  /** [[suffixDedup]] over an arbitrary (doc_id, text) frame — split out
-    * (the [[spanMaskOf]] convention) so DedupSpec's brute force and the
-    * planted adversarial corpora (nested repeats, overlapping maximal
-    * spans, whole-doc duplicates, in-doc periodic repeats) drive the
-    * EXACT production plan. */
   /** The shared SITE-grain coverage stage of [[suffixDedupOf]] (interval
     * report) and [[suffixMaskOf]] (rewrite): distinct (doc_id, p) token
     * positions covered by any ≥2-site repeated w-span — one definition so
     * the report and the rewrite can never disagree on what is removed
     * (the substringDedup/spanMask r12 lesson, applied up front). */
-  private[graft] def suffixCovered(docs: DataFrame, w: Int,
-                                   materialize: Boolean = true): DataFrame = {
-    // materialize = false exists for PlanSpec only (the trianglesOf
-    // discipline): checkpoints hide executed subtrees behind ExistingRDD
-    // scans, so the strings-free/join-count pins read the full shape.
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+  private[graft] def suffixCovered(docs: DataFrame, w: Int): DataFrame = {
     val base = docs.select(col("doc_id"), spanNormText.as("nt"))
     // r20 re-probe of the r19 measured-NO (which tested an occFp
     // checkpoint alone): with the LAZY checkpoints the sb/s4 restructures
@@ -502,8 +470,9 @@ object Dedup {
     // 2.60/2.62 s vs 3.05/3.18 current in both rounds — promoted. Same
     // bounded-artifact argument as spanMaskOf: toks is one row per doc,
     // occFp token-count rows of (doc_id, i, fp) longs.
-    val toks = ckpt(base.select(col("doc_id"), split(col("nt"), " ").as("ts")))
-    val occFp = ckpt(base.select(col("doc_id"),
+    val toks = Materialize.lazily(
+      base.select(col("doc_id"), split(col("nt"), " ").as("ts")))
+    val occFp = Materialize.lazily(base.select(col("doc_id"),
       posexplode(expr(s"span_fps(nt, $w)")).as(Seq("i", "fp"))))
     // occurrence count IS the site count the suffix semantic wants —
     // ≥2 occurrences is the exact candidate condition, not a superset
@@ -531,14 +500,13 @@ object Dedup {
       .distinct()
   }
 
-  def suffixDedupOf(docs: DataFrame, w: Int = SpanTokens): DataFrame =
-    suffixDedupOf(docs, w, materialize = true)
-
-  /** [[suffixDedupOf]] with the coverage stage's materialization seam
-    * exposed — PlanSpec-only (see [[suffixCovered]]). */
-  private[graft] def suffixDedupOf(docs: DataFrame, w: Int,
-                                   materialize: Boolean): DataFrame = {
-    val covered = suffixCovered(docs, w, materialize)
+  /** [[suffixDedup]] over an arbitrary (doc_id, text) frame — split out
+    * (the [[spanMaskOf]] convention) so DedupSpec's brute force and the
+    * planted adversarial corpora (nested repeats, overlapping maximal
+    * spans, whole-doc duplicates, in-doc periodic repeats) drive the
+    * EXACT production plan. */
+  def suffixDedupOf(docs: DataFrame, w: Int = SpanTokens): DataFrame = {
+    val covered = suffixCovered(docs, w)
     // gaps-and-islands LOCALLY per doc: a position starts an interval iff
     // its predecessor position is absent, ends one iff its successor is.
     // CASE (not OR) around the element_at neighbor probes — ANSI mode
@@ -623,15 +591,9 @@ object Dedup {
     * as [[spanMaskOf]]'s rewrite tail: one (doc_id, p) exchange bounded
     * by duplicated content, then a narrow per-doc set-difference
     * rebuild (array_except — index order preserved, O(n) per doc). */
-  def suffixMaskOf(docs: DataFrame, w: Int = SpanTokens): DataFrame =
-    suffixMaskOf(docs, w, materialize = true)
-
-  /** [[suffixMaskOf]] with the coverage stage's materialization seam
-    * exposed — PlanSpec-only (see [[suffixCovered]]). */
-  private[graft] def suffixMaskOf(docs: DataFrame, w: Int,
-                                  materialize: Boolean): DataFrame = {
+  def suffixMaskOf(docs: DataFrame, w: Int = SpanTokens): DataFrame = {
     val toks = docs.select(col("doc_id"), split(spanNormText, " ").as("ts"))
-    val covAgg = suffixCovered(docs, w, materialize).groupBy("doc_id")
+    val covAgg = suffixCovered(docs, w).groupBy("doc_id")
       .agg(collect_set(col("p")).as("cov"))
     toks.join(covAgg, Seq("doc_id"), "left")
       .withColumn("cov", coalesce(col("cov"),
@@ -803,7 +765,7 @@ object Dedup {
     // cache would stay pinned in the CacheManager for the JVM's lifetime,
     // while checkpoint blocks are GC-scoped — released once the result
     // frame is dropped (durable `checkpoint` on a real cluster)
-    val sigs = signatures(corpus(spark, dir)).localCheckpoint(true)
+    val sigs = Materialize.eagerly(signatures(corpus(spark, dir)))
     val pairs = candidatePairs(sigs)
     val sa = sigs.select(col("doc_id").as("a"), col("shingles").as("sh_a"))
     val sb = sigs.select(col("doc_id").as("b"), col("shingles").as("sh_b"))
@@ -852,7 +814,7 @@ object Dedup {
     // would re-execute 2 + 2·rounds times (durable `checkpoint` on a real
     // cluster). Checkpoint blocks are GC-scoped — released when the frame
     // goes out of reach, unlike cache() which pins until unpersist.
-    val p = pairs.select(col("a"), col("b")).localCheckpoint(eager = true)
+    val p = Materialize.eagerly(pairs.select(col("a"), col("b")))
     val edges = p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
     // init = min(self, neighbors): every label is a node of the component
     // (a's own id or a neighbor's), so the jump self-join below always
@@ -866,10 +828,9 @@ object Dedup {
     // driver-synchronized job (sum + materialization fused) — the eager
     // checkpoint + separate sum-collect form was 2 jobs/round and made
     // this loop the r5 bench whale (47 s for a 238-pair graph).
-    var labels = edges.groupBy(col("a"))
+    var labels = Materialize.lazily(edges.groupBy(col("a"))
       .agg(min(col("b")).as("mn"))
-      .select(col("a").as("node"), least(col("a"), col("mn")).as("label"))
-      .localCheckpoint(eager = false)
+      .select(col("a").as("node"), least(col("a"), col("mn")).as("label")))
     var prevSum = labelSum(labels)
     var iter = 0
     var done = false
@@ -885,9 +846,9 @@ object Dedup {
       // cost); the checkpoint resets the plan each round.
       val parents = minned
         .select(col("node").as("p_node"), col("label").as("p_label"))
-      val next = minned.join(parents, minned("label") === col("p_node"))
-        .select(minned("node").as("node"), col("p_label").as("label"))
-        .localCheckpoint(eager = false)
+      val next = Materialize.lazily(
+        minned.join(parents, minned("label") === col("p_node"))
+          .select(minned("node").as("node"), col("p_label").as("label")))
       val nextSum = labelSum(next)
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
@@ -963,7 +924,7 @@ object Dedup {
     // medians: fresh-from-rs alone 1.65, plus this ckpt 1.42). In
     // production the batch is a real ingest table, not a derived union —
     // this materialization stands in for "read the staged batch once".
-    val batch = batch0.localCheckpoint(eager = false)
+    val batch = Materialize.lazily(batch0)
     // 1. exact: content-hash lookup against the history's hash index
     val histHash = hist.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("hid"))
@@ -972,8 +933,8 @@ object Dedup {
       .select(col("doc_id"), col("hid"))
     val rest = batch.join(exact.select("doc_id"), Seq("doc_id"), "left_anti")
     // 2. near: batch bands probe the history's capped band buckets
-    val rs = signatures(rest).localCheckpoint(eager = true)
-    val hs = signatures(hist).localCheckpoint(eager = true)
+    val rs = Materialize.eagerly(signatures(rest))
+    val hs = Materialize.eagerly(signatures(hist))
     val hb = bandsOf(hs)
       .groupBy(col("band"), col("sig"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -1394,10 +1355,9 @@ object Dedup {
     // localCheckpoint, not cache: arr feeds prefix generation AND both
     // verify sides — without it the collect_list aggregation re-executes
     // three times (same lifecycle argument as minhashNearDup's sigs)
-    val arr = keyed.groupBy("doc_id")
+    val arr = Materialize.eagerly(keyed.groupBy("doc_id")
       .agg(sort_array(collect_list(col("k"))).as("ks"))
-      .withColumn("s", size(col("ks")).cast(LongType))
-      .localCheckpoint(true)
+      .withColumn("s", size(col("ks")).cast(LongType)))
     // prefix length s − ceil(9s/10) + 1, all integer (div, not fp);
     // posexplode keeps each prefix token's 1-based position in the full
     // sorted array (the prefix IS the array's head) for the positional

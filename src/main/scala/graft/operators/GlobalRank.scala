@@ -1,20 +1,53 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** The distributed global-rank machinery shared by every operator that
   * needs a total order WITHOUT a single-task `Window.orderBy`: persist the
   * range-sorted RDD, take per-partition sizes in ONE job (which also
   * materializes the cache), and derive the total count plus
-  * zipWithIndex-style partition offsets from that single pass. Callers run
-  * their own per-partition fold carrying `offsets(pi)` as the exact global
-  * prefix.
+  * zipWithIndex-style partition offsets from that single pass.
   *
   * One definition ends the copy drift the r10 review found: ntileDecile,
   * giniLorenz, calibrationCurve and seqPack each hand-rolled this block
-  * (and only one copy had gained the `q == 0` tile guard). */
+  * (and only one copy had gained the `q == 0` tile guard). The first three
+  * run the whole lifecycle through [[tiled]]; seqPack folds token sums,
+  * not row counts, and keeps its manifest distributed, so it uses
+  * [[offsets]] alone. */
 private[graft] object GlobalRank {
+
+  /** NTILE over a range-sorted frame without a single-task window: persist
+    * `sorted` at MEMORY_AND_DISK, take the [[offsets]] in one job, tag each
+    * row with its `decile` (the [[tile]] of `tiles`) and 1-based global
+    * `rank` in front of its own columns, run `report` over that, collect
+    * the result and release the cached sort. `report` must be bounded —
+    * it lands on the driver (one row per tile for every caller). */
+  def tiled(sorted: DataFrame, tiles: Int)(
+      report: DataFrame => DataFrame): DataFrame = {
+    val spark = sorted.sparkSession
+    val rdd = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val offsets = GlobalRank.offsets(rdd)
+      val n = offsets.last
+      val ranked = rdd.mapPartitionsWithIndex { (pi, it) =>
+        var idx = offsets(pi)
+        it.map { row =>
+          val t = tile(idx, n, tiles)
+          idx += 1
+          Row.fromSeq(t +: idx +: row.toSeq)
+        }
+      }
+      val out = report(spark.createDataFrame(ranked, StructType(
+        StructField("decile", LongType, nullable = false) +:
+          StructField("rank", LongType, nullable = false) +:
+          sorted.schema.fields)))
+      spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*),
+        out.schema)
+    } finally rdd.unpersist(blocking = false)
+  }
 
   /** Per-partition sizes and exclusive prefix offsets of a (persisted)
     * RDD — one job; `offsets(p)` is the global index of partition p's

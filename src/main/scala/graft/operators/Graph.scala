@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Iterative graph analytics over a derived link structure — the classic
   * "many rounds of join + aggregate" workload class (PageRank here), which
@@ -67,7 +67,7 @@ object Graph {
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
     // one materialization job; every iteration reuses the result
-    val ed = edgesWithDeg(spark, dir).localCheckpoint(true)
+    val ed = Materialize.eagerly(edgesWithDeg(spark, dir))
     var ranks = nodes.select(col("id"), lit(1000000L).as("r"))
     for (_ <- 1 to PrIters) {
       val contrib = ed.join(ranks, ed("src") === ranks("id"))
@@ -174,25 +174,18 @@ object Graph {
     * with plain equi-joins and hash aggregates, no windows. The closing
     * check is one more equi-join against the oriented edge list.
     * Everything (degrees, wedge counts, the 3T/W coefficient's single
-    * IEEE division) is exact-integer until the last expression. */
-  def triangles(spark: SparkSession, dir: String): DataFrame =
-    trianglesOf(spark, dir, materialize = true)
-
-  /** [[triangles]] with the r19 materialization seam exposed: e feeds deg,
-    * the orientation join AND the edge count, deg feeds the orientation
-    * twice plus the wedge stats, and oe feeds both wedge sides plus the
-    * closing join — without materialization the initial physical plan held
-    * 72 lineitem scans / 188 Exchanges (the catalog's worst recompute
-    * tree; plans/r19/q_triangles_before.txt), so the production path
-    * localCheckpoints e and oe — LAZILY since r20; see the body comment
-    * for the measured variant sweep. Both frames are BOUNDED graph
-    * artifacts the O(m^1.5) algorithm already assumes manageable: e is
-    * the supported edge list (two longs/row), oe one row per edge.
-    * `materialize = false` exists for PlanSpec only, so the no-cartesian /
-    * equi-join pins can read the FULL logical shape (checkpoints hide
-    * executed subtrees behind ExistingRDD scans). */
-  private[graft] def trianglesOf(spark: SparkSession, dir: String,
-                                 materialize: Boolean): DataFrame = {
+    * IEEE division) is exact-integer until the last expression.
+    *
+    * Materialization (r19): e feeds deg, the orientation join AND the edge
+    * count, deg feeds the orientation twice plus the wedge stats, and oe
+    * feeds both wedge sides plus the closing join — without it the
+    * initial physical plan held 72 lineitem scans / 188 Exchanges (the
+    * catalog's worst recompute tree; plans/r19/q_triangles_before.txt),
+    * so e and oe are checkpointed — LAZILY since r20; see the body
+    * comment for the measured variant sweep. Both frames are BOUNDED
+    * graph artifacts the O(m^1.5) algorithm already assumes manageable:
+    * e is the supported edge list (two longs/row), oe one row per edge. */
+  def triangles(spark: SparkSession, dir: String): DataFrame = {
     // r20 re-measure (the r19 verdict's "settle q_triangles"): LAZY
     // checkpoints on e and oe only, deg left recompute-shaped. A
     // 7-variant DevProbe sweep at BOTH driver core counts (isolated warm
@@ -205,17 +198,16 @@ object Graph {
     // consumer inside the one action) without eager's synchronous
     // build-time barriers; deg is one cheap aggregate over the
     // materialized e, and checkpointing it too measured +0.2 s.
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = ckpt(items.select(col("l_orderkey"), col("l_partkey").as("pa"))
-      .join(items.select(col("l_orderkey"), col("l_partkey").as("pb")),
-        "l_orderkey")
-      .filter(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("s"))
-      .filter(col("s") >= TriSupport)
-      .select("pa", "pb"))
+    val e = Materialize.lazily(
+      items.select(col("l_orderkey"), col("l_partkey").as("pa"))
+        .join(items.select(col("l_orderkey"), col("l_partkey").as("pb")),
+          "l_orderkey")
+        .filter(col("pa") < col("pb"))
+        .groupBy("pa", "pb").agg(count(lit(1)).as("s"))
+        .filter(col("s") >= TriSupport)
+        .select("pa", "pb"))
     val deg = e.select(col("pa").as("v"))
       .unionAll(e.select(col("pb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -226,7 +218,7 @@ object Graph {
     // the head endpoint's degree rides the orientation struct — both
     // degrees are already on withDeg, so the former oe⋈deg re-join of
     // every oriented edge was pure wasted shuffle on the hot path
-    val oe = ckpt(withDeg.select(
+    val oe = Materialize.lazily(withDeg.select(
       when(col("da") < col("db") ||
         (col("da") === col("db") && col("pa") < col("pb")),
         struct(col("pa").as("u"), col("pb").as("w"), col("db").as("dw")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Join / set / window / top-k surface (SURVEY.md §2.3, §2.5–§2.7:
   * J1–J4, U1, W1–W2, O1–O3).
@@ -137,40 +137,17 @@ object Joins {
     val sorted = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_acctbal"))
       .orderBy("c_acctbal", "c_custkey")
-    // The global range sort is the expensive stage, so it must run ONCE:
-    // persist the sorted projection, take per-partition sizes in one job
-    // (which also materializes the cache), and derive both the total count
-    // and the zipWithIndex-style partition offsets from that single pass —
-    // instead of count() + zipWithIndex's internal size job + the final
-    // pass each re-running the sort.
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = GlobalRank.offsets(rdd)
-    val n = offsets.last
-    val spark2 = spark
-    import spark2.implicits._
-    val agg = rdd
-      .mapPartitionsWithIndex { (pi, it) =>
-        var idx = offsets(pi)
-        it.map { row =>
-          val tile = GlobalRank.tile(idx, n, tiles)
-          idx += 1
-          (tile, row.getDouble(1))
-        }
-      }
-      .toDF("decile", "c_acctbal")
-      .groupBy("decile")
+    // The global range sort is the expensive stage, so it runs ONCE
+    // (GlobalRank.tiled persists it and derives the total count and the
+    // partition offsets from one size pass) instead of count() +
+    // zipWithIndex's internal size job + the final pass each re-running
+    // the sort; the tiles-row report is collected so the cached sort is
+    // released now, not pinned until some later consumer runs
+    GlobalRank.tiled(sorted, tiles)(_.groupBy("decile")
       .agg(count(lit(1)).as("cnt"),
            round(min("c_acctbal"), 2).as("lo"),
            round(max("c_acctbal"), 2).as("hi"))
-      .orderBy("decile")
-    // tiles rows — materialize eagerly so the cached sort can be released
-    // now instead of staying pinned until some later consumer runs (and
-    // re-running the whole pipeline if it runs twice)
-    val rows = agg.collect()
-    rdd.unpersist(blocking = false)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), agg.schema)
+      .orderBy("decile"))
   }
 
   /** U2/J7: the reference's positional cbind (04_1:296-300 — vectors glued
@@ -181,8 +158,8 @@ object Joins {
   def cbindByIndex(spark: SparkSession, dir: String): DataFrame = {
     // localCheckpoint: both join sides derive from this 200-row frame —
     // uncheckpointed, the TakeOrdered over customer executed twice
-    val base = Tables.customer(spark, dir).orderBy("c_custkey").limit(200)
-      .localCheckpoint(eager = true)
+    val base = Materialize.eagerly(
+      Tables.customer(spark, dir).orderBy("c_custkey").limit(200))
     val w = Window.orderBy("c_custkey")
     val a = base.select(
       row_number().over(w).cast(LongType).as("idx"), col("c_name"))

@@ -272,13 +272,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** One-shot convenience form (specs, single payloads). */
-  def encodeVideo(w: Int, h: Int, frames: Int, seed: Long): Array[Byte] = {
-    val writer = ImageIO.getImageWritersByFormatName("jpg").next()
-    try encodeVideoWith(writer, w, h, frames, seed)
-    finally writer.dispose()
-  }
-
   /** Generate the video asset table — real concatenated-JPEG payloads from
     * the doc_id spec. The documents scan prunes to doc_id only; the tiny
     * key column is REPARTITIONED before the codec pass (an 8-byte-per-row

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Core relational operator surface (SURVEY.md §2.2–§2.4, §2.6–§2.8).
   *
@@ -749,31 +749,18 @@ object Relational {
       .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
         .cast(LongType).as("c"))
       .orderBy("c", "o_custkey")
-    val rdd = pts.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = GlobalRank.offsets(rdd)
-    val n = offsets.last
-    val spark2 = spark
-    import spark2.implicits._
-    val ranked = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var idx = offsets(pi)
-      it.map { row =>
-        val tile = GlobalRank.tile(idx, n, tiles)
-        idx += 1
-        (tile, row.getLong(1), idx) // idx is now the 1-based rank
-      }
-    }.toDF("decile", "c", "rank")
-    val agg = ranked.groupBy("decile")
-      .agg(count(lit(1)).as("n_cust"),
-        sum(col("c").cast(DecimalType(38, 0))).as("s0"),
-        sum(col("rank").cast(DecimalType(19, 0)) *
-          col("c").cast(DecimalType(19, 0))).as("s1"))
-    // global windows over a BOUNDED table only: `agg` is one row per decile
+    // global windows over a BOUNDED table only: the per-decile aggregate
+    // they run over is one row per decile
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
     val wCum = org.apache.spark.sql.expressions.Window.orderBy("decile")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val out = agg
+    // 10 rows — collected, so the cached sort is released now
+    GlobalRank.tiled(pts, tiles)(_.groupBy("decile")
+      .agg(count(lit(1)).as("n_cust"),
+        sum(col("c").cast(DecimalType(38, 0))).as("s0"),
+        sum(col("rank").cast(DecimalType(19, 0)) *
+          col("c").cast(DecimalType(19, 0))).as("s1"))
       .withColumn("ts0", sum(col("s0")).over(w).cast(DoubleType))
       .withColumn("ts1", sum(col("s1")).over(w).cast(DoubleType))
       .withColumn("tn", sum(col("n_cust")).over(w).cast(DoubleType))
@@ -783,11 +770,7 @@ object Relational {
         round(col("cum0") / col("ts0"), 6).as("lorenz_cum_share"),
         round((lit(2.0) * col("ts1") - (col("tn") + 1.0) * col("ts0")) /
           (col("tn") * col("ts0")), 6).as("gini"))
-      .orderBy("decile")
-    // 10 rows — materialize eagerly so the cached sort is released now
-    val rows = out.collect()
-    rdd.unpersist(blocking = false)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .orderBy("decile"))
   }
 
   /** DuckDB replay of [[giniLorenz]] — same total order, tile rule,
@@ -860,11 +843,10 @@ object Relational {
     // numeric column, no group string, no decimal cast in the rescan)
     // was within noise — recorded as measured NOs; only this call site
     // pays enough per-scan projection to win.
-    val base = Tables.lineitem(spark, dir)
+    val base = Materialize.lazily(Tables.lineitem(spark, dir)
       .select(col("l_returnflag").as("g"),
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("c"))
-      .localCheckpoint(eager = false)
+          .cast(LongType).as("c")))
     val cuts = base.groupBy("g")
       .agg(expr(s"percentile_exact(CAST(c AS DOUBLE), array($ps))").as("bs"))
     val cells = base.join(broadcast(cuts), "g")
@@ -946,10 +928,9 @@ object Relational {
     // without it the lineitem scan + median join re-execute on both plan
     // branches (3 fact scans instead of 2; the exchanges differ, so
     // ReuseExchange cannot dedupe them)
-    val dev = base.join(broadcast(med), "l_returnflag")
+    val dev = Materialize.eagerly(base.join(broadcast(med), "l_returnflag")
       .select(col("l_returnflag"), col("med"),
-        abs(col("x") - col("med")).as("dev"))
-      .localCheckpoint(eager = true)
+        abs(col("x") - col("med")).as("dev")))
     val stats = dev.groupBy("l_returnflag")
       .agg(first(col("med")).as("med"),
         expr("percentile_exact(CAST(dev AS DOUBLE), 0.5D)").as("mad"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (builder-brief first-class component).
@@ -315,8 +315,8 @@ object Similarity {
     // measured ~0.3 s WORSE lazy (its consumers fan out from the frame
     // concurrently, and unmaterialized lazy blocks race), so this is a
     // per-call-site decision, not a blanket one.
-    val e = signatures(withNorm(corpus, dim), dim, bits, ndBandsFor(bits))
-      .localCheckpoint(eager = false)
+    val e = Materialize.lazily(
+      signatures(withNorm(corpus, dim), dim, bits, ndBandsFor(bits)))
     val pairs = bucketPairs(e)
     val sa = e.select(col("vec_id").as("a"), col("embedding").as("q_emb"),
       col("norm").as("q_norm"))
@@ -523,7 +523,7 @@ object Similarity {
     // checkpoint blocks are GC-scoped — released once the result frame
     // is dropped (durable `checkpoint` on a real cluster)
     val base = Tables.embeddings(spark, dir)
-    val e = withNorm(base, dimOf(base)).localCheckpoint(true)
+    val e = Materialize.eagerly(withNorm(base, dimOf(base)))
     // corpus-derived parameterization (√n law, docs/SCALE.md §ANN) — a
     // metadata-cheap count over the checkpointed frame
     val numLists = listsForCount(e.count())
@@ -532,8 +532,7 @@ object Similarity {
       s"probes $numProbes out of [1, $numLists]")
     // the bounded sample is itself checkpointed: every Lloyd round
     // re-reads it, and sampleKFor(lists) rows is driver-trivial to pin
-    val samp = ivfTrainingSample(e, sampleKFor(numLists))
-      .localCheckpoint(eager = true)
+    val samp = Materialize.eagerly(ivfTrainingSample(e, sampleKFor(numLists)))
     val centroids = kmeansCentroids(samp, numLists, iters = 3)
     // centroids → one literal array<array<double>> column
     val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
@@ -600,13 +599,12 @@ object Similarity {
   def ivfTopKDistributed(spark: SparkSession, dir: String,
                          probesOverride: Option[Int] = None): DataFrame = {
     val base = Tables.embeddings(spark, dir)
-    val e = withNorm(base, dimOf(base)).localCheckpoint(true)
+    val e = Materialize.eagerly(withNorm(base, dimOf(base)))
     val numLists = listsForCount(e.count())
     val numProbes = probesOverride.getOrElse(probesForLists(numLists))
     require(numProbes >= 1 && numProbes <= numLists,
       s"probes $numProbes out of [1, $numLists]")
-    val samp = ivfTrainingSample(e, sampleKFor(numLists))
-      .localCheckpoint(eager = true)
+    val samp = Materialize.eagerly(ivfTrainingSample(e, sampleKFor(numLists)))
     import spark.implicits._
     val centDf = kmeansCentroidsDistributed(samp, numLists, iters = 3)
       .zipWithIndex
@@ -1236,9 +1234,8 @@ object Similarity {
                  rotate: Rotation = Rotation.Off): DataFrame = {
     val dim = dimOf(base)
     val rb = rotated(base, trainRotation(base, dim, codec, rotate))
-    val e = withNorm(rb, dim).localCheckpoint(true)
-    val samp = ivfTrainingSample(e, pqSampleK(1 << PqBits))
-      .localCheckpoint(eager = true)
+    val e = Materialize.eagerly(withNorm(rb, dim))
+    val samp = Materialize.eagerly(ivfTrainingSample(e, pqSampleK(1 << PqBits)))
     val vc = codec.train(samp, dim)
     val coded = vc.encode(e)
     val qs = queries(rb, dim)
@@ -1377,11 +1374,10 @@ object Similarity {
     val base0 = Tables.embeddings(spark, dir)
     val dim = dimOf(base0)
     val rot = trainRotation(base0, dim, codec, rotate)
-    val e = withNorm(rotated(base0, rot), dim).localCheckpoint(true)
+    val e = Materialize.eagerly(withNorm(rotated(base0, rot), dim))
     val numLists = listsForCount(e.count())
-    val samp = ivfTrainingSample(e,
-        math.max(sampleKFor(numLists), pqSampleK(1 << PqBits)))
-      .localCheckpoint(eager = true)
+    val samp = Materialize.eagerly(ivfTrainingSample(e,
+        math.max(sampleKFor(numLists), pqSampleK(1 << PqBits))))
     val centroids = kmeansCentroids(samp, numLists, iters = 3)
     val sampResid = assignToLists(samp, matrixLit(centroids))
       .select(col("vec_id"), residualEmbedding.as("embedding"))
@@ -1467,7 +1463,7 @@ object Similarity {
     // the bounded probe frame is materialized ONCE (QueryK·probes rows):
     // the static IN-list collect and the broadcast join side both read
     // the checkpoint instead of re-executing the query-side pipeline
-    val probedCk = probed.localCheckpoint(eager = true)
+    val probedCk = Materialize.eagerly(probed)
     val probedIds = probedCk.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
     // predicate pre-filter: semi-join the id frame onto the coded rows

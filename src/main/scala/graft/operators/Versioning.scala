@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Dataset-versioning primitives: applying a CDC change-set to a corpus
   * snapshot (the MERGE/upsert half of the story whose read-side diff lives
@@ -173,13 +173,11 @@ object Versioning {
     // profile — uncheckpointed, the customer scan ran 4x and orders 3x in
     // one job (the exchanges differ per consumer, ReuseExchange can't
     // dedupe); now each table scans at most twice (cascade + total count)
-    val custDel = Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 13 === 0).select(col("c_custkey"))
-      .localCheckpoint(eager = true)
-    val ordDel = Tables.orders(spark, dir)
+    val custDel = Materialize.eagerly(Tables.customer(spark, dir)
+      .filter(col("c_custkey") % 13 === 0).select(col("c_custkey")))
+    val ordDel = Materialize.eagerly(Tables.orders(spark, dir)
       .join(custDel, col("o_custkey") === col("c_custkey"), "left_semi")
-      .select(col("o_orderkey"))
-      .localCheckpoint(eager = true)
+      .select(col("o_orderkey")))
     val liDel = Tables.lineitem(spark, dir)
       .join(ordDel.select(col("o_orderkey").as("k")),
         col("l_orderkey") === col("k"), "left_semi")

@@ -410,13 +410,11 @@ object Streaming {
     stageSymlink(dir, "events.parquet", "graft_stream_src_")
 
   /** readStream over the staged events parquet with `ts` normalized via
-    * `Tables.withEventTs` (nanos-long or timestamp[us] physical type) —
-    * the ONE copy of the source wiring every streaming run shares (a
-    * change to the ts handling or the landing staging must happen here,
-    * nowhere else). */
+    * `Tables.withEventTs` — the ONE copy of the source wiring every
+    * streaming run shares (a change to the ts handling or the landing
+    * staging must happen here, nowhere else). */
   private def eventsStream(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
     graft.Tables.withEventTs(
       spark.readStream.schema(schema).parquet(stageLanding(dir)))
@@ -431,20 +429,15 @@ object Streaming {
   private def stageLandingSplit(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, n: Int): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    // Key the cached staging by the source's physical ts type AND its
-    // (size, mtime): a staged copy from a prior testdata generation —
-    // epoch-nanos long vs timestamp[us], or the same schema regenerated
-    // in place with different rows — can never be replayed against a
-    // mismatched source.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Key the cached staging by the source's path AND its (size, mtime):
+    // a staged copy of testdata regenerated in place with different rows
+    // can never be replayed against a mismatched source.
     val src = Paths.get(s"$dir/events.parquet")
-    val tsTag = graft.Tables.parquet(spark, src.toString)
-      .schema("ts").dataType.typeName.replaceAll("[^a-z]", "")
     val srcTag = s"${Files.size(src)}_${
       Files.getLastModifiedTime(src).toMillis}"
     val landing = Paths.get(
       System.getProperty("java.io.tmpdir"),
-      s"graft_stream_split${n}_${tsTag}_${srcTag}_" +
+      s"graft_stream_split${n}_${srcTag}_" +
         graft.sources.CsvIO.pathKey(dir))
     val done = landing.resolve("_SPLIT_DONE")
     if (!Files.exists(done)) {
@@ -456,7 +449,7 @@ object Streaming {
       val tmp = Paths.get(landing.toString + ".tmp." +
         java.lang.ProcessHandle.current().pid())
       graft.Tables.parquet(spark, src.toString)
-        .repartitionByRange(n, col("ts")) // physical ts: long or timestamp
+        .repartitionByRange(n, col("ts"))
         .write.mode("overwrite").parquet(tmp.toString)
       import scala.jdk.CollectionConverters._
       val listing = Files.list(tmp)
@@ -529,7 +522,6 @@ object Streaming {
     * per micro-batch. */
   private def eventsStreamSplit(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, n: Int): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
     graft.Tables.withEventTs(
       spark.readStream.schema(schema)

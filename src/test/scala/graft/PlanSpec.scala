@@ -63,10 +63,9 @@ class PlanSpec extends AnyFunSuite {
     // the r20 lazy localCheckpoints on toks/occFp hide the corpus pass
     // behind ExistingRDD scans in the production plan, so the
     // strings-free and full-shape pins read the UNmaterialized logical
-    // form through the seam (the trianglesOf discipline)
-    val pf = graft.operators.Dedup
-      .spanMaskOf(graft.operators.Dedup.corpus(spark, sf),
-        graft.operators.Dedup.SpanTokens, materialize = false)
+    // form of the production call under Materialize.planOnly
+    val pf = Materialize.planOnly(graft.operators.Dedup
+      .spanMaskOf(graft.operators.Dedup.corpus(spark, sf)))
       .queryExecution.explainString(FormattedMode)
     // the ONLY corpus-wide stage is the span_fps posexplode — the kernel
     // must survive into the physical plan (a rewrite back to the
@@ -92,11 +91,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("substring dedup: strings-free corpus pass (span_fps), no cartesian") {
-    // full logical shape through the materialize=false seam (see the span
-    // mask pin above for why)
-    val pf = graft.operators.Dedup
-      .substringDedupOf(graft.operators.Dedup.corpus(spark, sf),
-        graft.operators.Dedup.SpanTokens, materialize = false)
+    // full logical shape under Materialize.planOnly (see the span mask
+    // pin above for why)
+    val pf = Materialize.planOnly(graft.operators.Dedup
+      .substringDedupOf(graft.operators.Dedup.corpus(spark, sf)))
       .queryExecution.explainString(FormattedMode)
     // since the r13 retrofit the work-list shares the rewrite's
     // strings-free corpus-wide stage: span_fps posexplode, 8-byte fps on
@@ -123,12 +121,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("suffix dedup: strings-free corpus pass (span_fps), local islands, " +
     "no cartesian") {
-    // full logical shape through the materialize=false seam (the r20
-    // lazy checkpoints hide the corpus pass behind ExistingRDD scans in
-    // the production plan — the span/substring pin convention)
-    val pf = graft.operators.Dedup
-      .suffixDedupOf(graft.operators.Dedup.suffixCorpus(spark, sf),
-        graft.operators.Dedup.SpanTokens, materialize = false)
+    // full logical shape under Materialize.planOnly (the r20 lazy
+    // checkpoints hide the corpus pass behind ExistingRDD scans in the
+    // production plan — the span/substring pin convention)
+    val pf = Materialize.planOnly(graft.operators.Dedup
+      .suffixDedupOf(graft.operators.Dedup.suffixCorpus(spark, sf)))
       .queryExecution.explainString(FormattedMode)
     // same strings-free discipline as its span siblings: the only
     // corpus-wide stage is the span_fps posexplode
@@ -157,9 +154,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("suffix mask: shares the strings-free coverage stage, no cartesian, " +
     "no window") {
-    val pf = graft.operators.Dedup.suffixMaskOf(
-      graft.operators.Dedup.suffixCorpus(spark, sf),
-      graft.operators.Dedup.SpanTokens, materialize = false)
+    val pf = Materialize.planOnly(graft.operators.Dedup.suffixMaskOf(
+      graft.operators.Dedup.suffixCorpus(spark, sf)))
       .queryExecution.explainString(FormattedMode)
     assert(pf.contains("span_fps"), pf.take(1500))
     assert(nodeCount(pf, "CartesianProduct") === 0, pf.take(1500))
@@ -329,9 +325,8 @@ class PlanSpec extends AnyFunSuite {
     assert(nodeCount(pt, ".*HashJoin") + nodeCount(pt, "SortMergeJoin") >= 2,
       pt)
     // ...and the HIDDEN orientation subtrees stay equi-join shaped too:
-    // probe the full logical plan through the materialize=false seam
-    val pf = graft.operators.Graph
-      .trianglesOf(spark, sf, materialize = false)
+    // probe the full logical plan under Materialize.planOnly
+    val pf = Materialize.planOnly(graft.operators.Graph.triangles(spark, sf))
       .queryExecution.explainString(FormattedMode)
     assert(nodeCount(pf, "CartesianProduct") === 0, pf.take(1500))
     assert(nodeCount(pf, "BroadcastNestedLoopJoin") <= 2, pf.take(1500))

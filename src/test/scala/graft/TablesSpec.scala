@@ -48,6 +48,16 @@ class TablesSpec extends AnyFunSuite {
       s"$k: $got vs $want" }.mkString("\n"))
   }
 
+  test("events loads leave the session's nanosAsLong conf as they found it") {
+    withNanosAsLong(on = false) {
+      Tables.events(spark, sf).schema
+      assert(spark.conf.get(nanosAsLong) === "false", "after Tables.events")
+      assert(SparkEntry.queries("q_stream_tumbling")(spark, sf).count() > 0)
+      assert(spark.conf.get(nanosAsLong) === "false",
+        "after q_stream_tumbling")
+    }
+  }
+
   test("no job: planning a table load starts no Spark job") {
     val (_, inferred) = Work.measure(spark)(
       spark.read.parquet(s"$sf/orders.parquet").schema)

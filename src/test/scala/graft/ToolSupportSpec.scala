@@ -155,6 +155,12 @@ class ToolSupportSpec extends AnyFunSuite {
     }
   }
 
+  test("src/main checkpoints in one place: Materialize") {
+    // every lineage cut goes through Materialize.lazily/eagerly, so the
+    // plan tests' planOnly scope reaches all of them
+    assert(mainSites("localCheckpoint(").map(_._1) === Seq("Materialize.scala"))
+  }
+
   test("onlyFilter rejects unknown names instead of running a subset") {
     // the env var can't be set from here portably; exercise the validation
     // path by checking the full-map fallthrough and the require in
