@@ -699,15 +699,6 @@ object Dedup {
           .stripMargin))
       .select("doc_id", "shingles", "minhash")
 
-  /** Candidate pairs via banded LSH: explode (band, band-signature) keys,
-    * group each bucket, expand pairs INSIDE the bucket's member array.
-    * One groupBy shuffle + one distinct — versus the window + self-join
-    * form (4 shuffles, upstream evaluated twice through the join's two
-    * sides). Bucket membership is bounded by `MaxBucket` BEFORE pair
-    * expansion, so a degenerate bucket (boilerplate text at web scale)
-    * costs one dropped row, never a quadratic pair blowup; per-reducer
-    * memory is one bucket's id list, same as the window form's per-key
-    * partition. */
   /** (doc_id, band, sig) band rows of a signature frame — the shared
     * derivation of candidatePairs (within-set) and incrementalDedup
     * (cross-set). The band signature is the raw 4-value slice (an
@@ -725,6 +716,15 @@ object Dedup {
           .stripMargin)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
 
+  /** Candidate pairs via banded LSH: explode (band, band-signature) keys,
+    * group each bucket, expand pairs INSIDE the bucket's member array.
+    * One groupBy shuffle + one distinct — versus the window + self-join
+    * form (4 shuffles, upstream evaluated twice through the join's two
+    * sides). Bucket membership is bounded by `MaxBucket` BEFORE pair
+    * expansion, so a degenerate bucket (boilerplate text at web scale)
+    * costs one dropped row, never a quadratic pair blowup; per-reducer
+    * memory is one bucket's id list, same as the window form's per-key
+    * partition. */
   def candidatePairs(sigs: DataFrame): DataFrame =
     bandsOf(sigs)
       .groupBy(col("band"), col("sig"))

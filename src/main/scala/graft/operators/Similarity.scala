@@ -81,12 +81,14 @@ object Similarity {
   val MaxBitsAnn = 8 // ANN design point: cos 0.4, expected recall 1/2
   val MaxBitsNd = 12 // near-dup design point: cos 0.9, expected recall 0.9
 
-  /** Bucket-membership cap applied BEFORE pair expansion in the near-dup
-    * self-join — the same discipline as `Dedup.candidatePairs`: a
-    * degenerate bucket (e.g. a constant/boilerplate embedding repeated at
-    * web scale) costs one dropped bucket row, never a quadratic pair
-    * blow-up. Mean occupancy is held near TargetBucket by construction, so
-    * a 16×-mean bucket is pathological, not data. */
+  /** Bucket-membership cap of the near-dup pass, applied BEFORE any
+    * member is collected: a bucket's size is counted by a window over
+    * (band, key) and a bucket above the cap is filtered out there, so its
+    * rows (embeddings included) never reach the collect. A degenerate
+    * bucket (e.g. a constant/boilerplate embedding repeated at web scale)
+    * costs its dropped rows, never a quadratic pair blow-up nor an
+    * unbounded collect buffer. Mean occupancy is held near TargetBucket by
+    * construction, so a 16×-mean bucket is pathological, not data. */
   val MaxBucket = 1024
 
   /** Bits per band from the corpus count: bit-length of n/TargetBucket,
@@ -284,11 +286,10 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate detection (brief dedup variant):
     * ALL-vector SRP bucketing at the count-derived (bits, ndBands)
-    * parameterization, pairs expanded INSIDE each bucket's collected
-    * member array with the `MaxBucket` membership cap applied BEFORE
-    * expansion (the `Dedup.candidatePairs` discipline — one groupBy
-    * shuffle, Σ min(bucket, cap)² candidate volume, never n²), then exact
-    * cosine ≥ threshold on candidates only. At cos ≈ 0.9999 the per-pair
+    * parameterization, each bucket's members scored against each other
+    * where the bucket is formed ([[nearDupPairs]]: the `MaxBucket` cap
+    * applied BEFORE collection, one shuffle, only pairs with cosine ≥
+    * threshold leave the bucket, never n²). At cos ≈ 0.9999 the per-pair
     * SRP miss probability is ≈ (bits·ε)^bands with ε ≈ 0.01 per plane, so
     * the banded output equals the exhaustive ground truth
     * (oracle-verified). */
@@ -304,48 +305,55 @@ object Similarity {
     // is the exhaustive ground truth, not a banding replay)
     val n = Tables.embeddings(spark, dir).count()
     val bits = bitsForCount(n + n / 5, MaxBitsNd)
-    // localCheckpoint, not cache: the signature frame feeds the bucket
-    // pass and both scoring sides; checkpoint blocks are GC-scoped,
-    // a cache would pin in the CacheManager for the JVM's lifetime
-    // (durable `checkpoint` on a real cluster). LAZY since r20: the
-    // eager barrier serialized signature materialization ahead of the
-    // single consuming action (q_embed_survivors read 3.6 -> 2.95 s
-    // isolated warm medians with it lazy; q_embed_neardup a wash). The
-    // ANN-index paths KEEP their eager checkpoints: q_ann_recall
-    // measured ~0.3 s WORSE lazy (its consumers fan out from the frame
-    // concurrently, and unmaterialized lazy blocks race), so this is a
-    // per-call-site decision, not a blanket one.
+    // Lazy cut, kept on purpose. Its one consumer is the bucket window +
+    // collect of nearDupPairs; without the cut the union, cast, norm and
+    // planted-concat expressions are inlined into every per-plane
+    // vec_dot: the warm q_embed_neardup call read 0.64 -> 1.00 s (warmbench
+    // llm_curate, traced, seed 7, 4 vCPUs) and task CPU rose.
+    // Lazy, not eager: there is a single consuming action, and the eager
+    // barrier only serialized signature materialization ahead of it
+    // (r20: q_embed_survivors 3.6 -> 2.95 s isolated warm medians lazy).
+    // The ANN-index paths KEEP their eager checkpoints: their consumers
+    // fan out from the frame concurrently (q_ann_recall ~0.3 s worse
+    // lazy), so this is a per-call-site decision, not a blanket one.
     val e = Materialize.lazily(
       signatures(withNorm(corpus, dim), dim, bits, ndBandsFor(bits)))
-    val pairs = bucketPairs(e)
-    val sa = e.select(col("vec_id").as("a"), col("embedding").as("q_emb"),
-      col("norm").as("q_norm"))
-    val sb = e.select(col("vec_id").as("b"), col("embedding"), col("norm"))
-    score(pairs.join(sa, "a").join(sb, "b"))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), col("cos"))
-      .orderBy("a", "b")
+    nearDupPairs(e, threshold).orderBy("a", "b")
   }
 
-  /** Capped within-bucket pair expansion over a signature frame — the
-    * `Dedup.candidatePairs` discipline verbatim: one groupBy shuffle,
-    * membership bounded by `maxBucket` BEFORE expansion (a hot bucket is
-    * dropped whole, never expanded), pairs built inside each bucket's
-    * sorted member array, then distinct across bands. Candidate volume is
-    * Σ min(bucket, cap)² — never n². */
-  private[graft] def bucketPairs(e: DataFrame,
-                                 maxBucket: Int = MaxBucket): DataFrame =
-    e.select(col("vec_id"), explode(col("buckets")).as("bk"))
-      .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+  /** Near-dup pairs (a < b, cos) of a signature frame, scored INSIDE each
+    * band bucket. The bucket size is a window count over (band, key) and
+    * the `maxBucket` cap filters rows BEFORE the collect, so a hot bucket
+    * is dropped whole and none of its members (embeddings included) is
+    * collected; the aggregate reuses the window's exchange (one shuffle,
+    * each vector sent to its `bands` buckets). Each bucket's members are
+    * sorted by id and every pair (x before y) is scored as `score` does,
+    * the lower id's vector on the left and the product of the norms as
+    * the denominator, so each cos is bit-identical to `score`'s.
+    * The threshold filter runs inside each inner transform, so no
+    * per-bucket array exceeds `maxBucket` entries and only passing pairs
+    * leave the bucket; a pair sharing several buckets is kept once. */
+  private[graft] def nearDupPairs(e: DataFrame, threshold: Double,
+                                  maxBucket: Int = MaxBucket): DataFrame = {
+    val m = col("m")
+    e.select(col("vec_id"), col("embedding"), col("norm"),
+        explode(col("buckets")).as("bk"))
+      .select(col("vec_id"), col("embedding"), col("norm"),
+        col("bk.band").as("band"), col("bk.key").as("key"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("band", "key")))
+      .filter(col("n").between(2, maxBucket))
       .groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucket))
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)), y ->
-          |    struct(x AS a, y AS b))))""".stripMargin)).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(sort_array(collect_list(
+        struct(col("vec_id"), col("embedding"), col("norm")))).as("m"))
+      .select(explode(flatten(transform(m, (x, i) =>
+        filter(transform(slice(m, i + 2, size(m)), y =>
+          struct(x("vec_id").as("a"), y("vec_id").as("b"),
+            round(call_function("vec_dot", x("embedding"), y("embedding")) /
+              (x("norm") * y("norm")), 6).as("cos"))),
+          p => p("cos") >= lit(threshold))))).as("p"))
+      .select("p.*")
       .distinct()
+  }
 
   /** Survivor selection for the EMBEDDING dedup modality — the same
     * pipeline step q_dedup_survivors verifies for the text/MinHash path:

@@ -210,11 +210,12 @@ class SimilarityScaleSpec extends AnyFunSuite {
     val sigs = Similarity.signatures(
       Similarity.withNorm(corpus, dim), dim, bits = 4, bands = 4)
     // capped: the 40-member bucket exceeds maxBucket=16 and is dropped —
-    // only the planted outlier pair survives; uncapped it would be 782
-    val capped = Similarity.bucketPairs(sigs, maxBucket = 16)
+    // only the planted outlier pair survives; uncapped every hot pair
+    // (cos 1) passes the threshold too: 780 + 1
+    val capped = Similarity.nearDupPairs(sigs, 0.9, maxBucket = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(capped.toSeq === Seq((100L, 101L)))
-    val uncapped = Similarity.bucketPairs(sigs, maxBucket = 1000).count()
+    val uncapped = Similarity.nearDupPairs(sigs, 0.9, maxBucket = 1000).count()
     assert(uncapped === 40L * 39 / 2 + 1)
   }
 
@@ -234,9 +235,90 @@ class SimilarityScaleSpec extends AnyFunSuite {
       Similarity.withNorm(corpus, dim), dim, bits = 4, bands = 4)
     assert(sigs.select("buckets").head.getSeq[Any](0).size === 4)
     // near-identical pair (0,1) must share every band bucket
-    val pairs = Similarity.bucketPairs(sigs)
+    val pairs = Similarity.nearDupPairs(sigs, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
+  }
+
+  /** 8-dim signature frame (4 bands of 4 bits) of `(vec_id, embedding)`. */
+  private def sigsOf(rows: Seq[(Long, Array[Double])]) = {
+    import spark.implicits._
+    val corpus = rows.toDF("vec_id", "embedding")
+    val dim = Similarity.dimOf(corpus)
+    Similarity.signatures(Similarity.withNorm(corpus, dim), dim,
+      bits = 4, bands = 4)
+  }
+
+  test("near-dup cap is bounded by construction: a hot bucket is never collected") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // 2,000 identical vectors (one hot bucket per band) + one planted
+    // near-identical outlier pair in buckets of its own
+    val hot = (0 until 2000).map(i => (i.toLong, Array.fill(8)(1.0)))
+    val pair = Seq(
+      (5000L, Array(-1.0, -1, -1, -1, -1, -1, -1, -1)),
+      (5001L, Array(-1.02, -1, -1, -1, -1, -1, -1, -1)))
+    val pairs = Similarity.nearDupPairs(sigsOf(hot ++ pair), 0.9, maxBucket = 16)
+    val out = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(out.toSeq === Seq((5000L, 5001L)))
+    // the window-count filter sits below every collect_list aggregate, so
+    // the members of a dropped bucket are filtered out before collection
+    val plan = pairs.queryExecution.sparkPlan
+    val collects = plan.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions
+        .exists(_.aggregateFunction.isInstanceOf[CollectList]) => a
+    }
+    assert(collects.nonEmpty, plan)
+    collects.foreach { agg =>
+      val counted = agg.collect { case w: WindowExec => w }
+        .flatMap(_.windowExpression.map(_.toAttribute))
+      val capped = agg.collect {
+        case f: FilterExec if f.condition.references.exists(counted.contains) => f
+      }
+      assert(counted.nonEmpty, s"no bucket-count window below:\n$agg")
+      assert(capped.nonEmpty, s"no bucket-count filter below:\n$agg")
+    }
+  }
+
+  test("near-dup pair sharing every band bucket is reported once") {
+    val rows = Seq(
+      (0L, Array(1.0, 2, 3, 4, 5, 6, 7, 8)),
+      (1L, Array(1.01, 2, 3, 4, 5, 6, 7, 8)))
+    val sigs = sigsOf(rows)
+    val buckets = sigs.orderBy("vec_id").select("buckets").collect()
+      .map(_.getSeq[Any](0))
+    assert(buckets(0) === buckets(1)) // all 4 bands shared
+    val out = Similarity.nearDupPairs(sigs, 0.9).collect()
+    assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((0L, 1L)))
+  }
+
+  test("near-dup pairs equal the exhaustive all-pairs result, cos for cos") {
+    // seeded gaussians + a near copy of every 5th (first element +0.05,
+    // the nearDupCorpus plant): the exhaustive truth is the planted pairs
+    val rnd = new scala.util.Random(11)
+    val base = (0 until 120).map(i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian())))
+    val planted = base.filter(_._1 % 5 == 0).map { case (id, v) =>
+      (id + 1000, (v.head + 0.05) +: v.tail) }
+    val sigs = sigsOf(base ++ planted)
+    val got = Similarity.nearDupPairs(sigs, 0.9).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val x = sigs.select(col("vec_id").as("a"), col("embedding").as("xe"),
+      col("norm").as("xn"))
+    val y = sigs.select(col("vec_id").as("b"), col("embedding").as("ye"),
+      col("norm").as("yn"))
+    val truth = x.crossJoin(y).filter(col("a") < col("b"))
+      .select(col("a"), col("b"), expr("round(vec_dot(xe, ye) / (xn * yn), 6)")
+        .as("cos"))
+      .filter(col("cos") >= 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq
+    assert(truth.size === planted.size)
+    // equal doubles, not a tolerance: both sides score x · y / (|x||y|)
+    // with the lower id on the left
+    assert(got === truth)
   }
 
   test("embed survivors: components are real groups; planted copies merge") {
