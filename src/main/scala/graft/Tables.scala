@@ -31,7 +31,7 @@ object Tables {
     * hive-partitioned layout needs partition discovery) and a path with
     * no footer plan as plain `spark.read.parquet`, which keeps Spark's
     * partition columns and its own error. Nothing is cached: every call
-    * reads the footer again. */
+    * reads the footer again. `path` is a path, never a glob pattern. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -54,10 +54,16 @@ object Tables {
         }
       }
     footer.flatMap(Footer.schema(spark, _)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
+      case Some(schema) => spark.read.schema(schema).parquet(literal(path))
+      case None => spark.read.parquet(literal(path))
     }
   }
+
+  /** `path` with its Hadoop glob metacharacters escaped: Spark's file
+    * readers glob every path they are given, so a directory named
+    * `g[1]` would otherwise match `g1` or nothing. */
+  private[graft] def literal(path: String): String =
+    path.replaceAll("""([\\{}\[\]*?])""", """\\$1""")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -216,7 +216,7 @@ object Bpe {
     * byte-to-string cast would fold lone continuation bytes into the
     * replacement char and alias distinct bytes). Merged symbols become
     * concatenated hex ("E282" …), so the entire grain-agnostic merge
-    * machinery — trainOnWords, mergeFold, encodeWords, tokenProfile,
+    * machinery — trainOnWords, mergeFoldAt, encodeWords, tokenProfile,
     * learnedVocabCoverage — applies unchanged; `unhex` of a final
     * symbol string recovers its exact bytes. Byte grain needs no
     * unknown-symbol story at all: every input is coverable by the
@@ -322,36 +322,6 @@ object Bpe {
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum(col("freq")).as("n"))
 
-  /** Column rewriting `syms` with every (l, r) adjacency merged
-    * leftmost-first, non-overlapping, in one pass — an aggregate() fold
-    * with state (acc, pend): pend holds the one-symbol lookbehind; a
-    * (pend=l, s=r) hit emits the merged symbol and CLEARS pend, so the
-    * merged token never re-pairs with its own right context this round
-    * (count-then-merge-once-per-round semantics; the new pair is counted
-    * next round). Columns-API lambdas, no SQL-string literal splicing —
-    * corpus symbols may contain quotes. The when-chain is CASE, not OR:
-    * the null-pend probe is reached only on the first branch, so ANSI
-    * mode never evaluates pend = l against a null. */
-  private def mergeFold(l: String, r: String): Column = {
-    val init = struct(
-      array().cast("array<string>").as("acc"),
-      lit(null).cast("string").as("pend"))
-    aggregate(
-      col("syms"), init,
-      (st, s) =>
-        when(st.getField("pend").isNull,
-          struct(st.getField("acc").as("acc"), s.as("pend")))
-        .when(st.getField("pend") === lit(l) && s === lit(r),
-          struct(concat(st.getField("acc"), array(lit(l + r))).as("acc"),
-            lit(null).cast("string").as("pend")))
-        .otherwise(
-          struct(concat(st.getField("acc"), array(st.getField("pend"))).as("acc"),
-            s.as("pend"))),
-      st =>
-        when(st.getField("pend").isNull, st.getField("acc"))
-        .otherwise(concat(st.getField("acc"), array(st.getField("pend")))))
-  }
-
   /** Train `rounds` merges on a (word?, freq, syms) table. Stops early
     * when no adjacent pair remains (every word fully merged). The
     * returned vocabulary is the learned artifact — k rows, inherently
@@ -373,7 +343,8 @@ object Bpe {
         val (l, r, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += Merge(out.size + 1, l, r, l + r, n)
-        cur = Materialize.eagerly(cur.withColumn("syms", mergeFold(l, r)))
+        cur = Materialize.eagerly(
+          cur.withColumn("syms", mergeFoldAt(lit(l), lit(r))))
         round += 1
       }
     }
@@ -448,7 +419,7 @@ object Bpe {
     * vocabulary is exactly this replay. */
   def encodeWords(words: DataFrame, merges: Seq[Merge]): DataFrame =
     merges.zipWithIndex.foldLeft(words) { case (df, (m, i)) =>
-      val next = df.withColumn("syms", mergeFold(m.left, m.right))
+      val next = df.withColumn("syms", mergeFoldAt(lit(m.left), lit(m.right)))
       if ((i + 1) % 4 == 0) Materialize.eagerly(next) else next
     }
 
@@ -840,10 +811,19 @@ object Bpe {
     cur
   }
 
-  /** [[mergeFold]] with the pair as COLUMNS — the rank-priority step
-    * merges each row's own (l, r), which a literal fold cannot
-    * express. Same leftmost-first non-overlapping one-pass semantics,
-    * same CASE (not OR) null-pend discipline. */
+  /** Column rewriting `syms` with every (l, r) adjacency merged
+    * leftmost-first, non-overlapping, in one pass — an aggregate() fold
+    * with state (acc, pend): pend holds the one-symbol lookbehind; a
+    * (pend=l, s=r) hit emits the merged symbol and CLEARS pend, so the
+    * merged token never re-pairs with its own right context this round
+    * (count-then-merge-once-per-round semantics; the new pair is counted
+    * next round). The pair is COLUMNS: training and replay pass literals
+    * (`concat` of two literals folds to one), the rank-priority step
+    * merges each row's own (l, r). Columns-API lambdas, no SQL-string
+    * literal splicing — corpus symbols may contain quotes. The
+    * when-chain is CASE, not OR: the null-pend probe is reached only on
+    * the first branch, so ANSI mode never evaluates pend = l against a
+    * null. */
   private def mergeFoldAt(l: Column, r: Column): Column = {
     val init = struct(
       array().cast("array<string>").as("acc"),

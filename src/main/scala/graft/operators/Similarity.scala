@@ -566,17 +566,7 @@ object Similarity {
           .stripMargin)))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"), col("probe.i").cast(LongType).as("list_id"))
-    val pairs = assigned.join(broadcast(probed), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "q_emb", "q_norm", "vec_id", "embedding", "norm")
-      .distinct()
-    score(pairs)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank").cast(LongType).as("rank"),
-        col("vec_id").as("neighbor_id"), col("cos"))
-      .orderBy("q_id", "rank")
+    candidateTopK(assigned.join(broadcast(probed), Seq("list_id")))
   }
 
   /** IVF ANN with the DISTRIBUTED quantizer ([[kmeansCentroidsDistributed]])
@@ -638,17 +628,7 @@ object Similarity {
       .filter(col("rn") <= numProbes)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"), col("c_list_id").as("list_id"))
-    val pairs = assigned.join(broadcast(probed), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "q_emb", "q_norm", "vec_id", "embedding", "norm")
-      .distinct()
-    score(pairs)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank").cast(LongType).as("rank"),
-        col("vec_id").as("neighbor_id"), col("cos"))
-      .orderBy("q_id", "rank")
+    candidateTopK(assigned.join(broadcast(probed), Seq("list_id")))
   }
 
   /** LSH ANN: bucket-join queries to candidates at the count-derived
@@ -675,7 +655,15 @@ object Similarity {
         col("norm").as("q_norm"), explode(col("buckets")).as("bk"))
       .select(col("q_id"), col("q_emb"), col("q_norm"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-    val pairs = cand.join(broadcast(qs), Seq("band", "key"))
+    candidateTopK(cand.join(broadcast(qs), Seq("band", "key")))
+  }
+
+  /** The tail every candidate-generating ANN search shares: (query,
+    * vector) candidate rows minus self-pairs, de-duplicated (a vector
+    * reached through several probed lists or bands is one candidate),
+    * exact cosine, then the top-K per query by (cos desc, vec_id asc). */
+  private def candidateTopK(cand: DataFrame): DataFrame = {
+    val pairs = cand
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "q_emb", "q_norm", "vec_id", "embedding", "norm")
       .distinct()

@@ -180,12 +180,12 @@ object Streaming {
     * streaming-specific emission rule is part of the verified contract,
     * not an approximation.
     *
-    * The 0-second watermark is safe here because the landing dir is ONE
-    * file and the file-stream source processes whole files per
-    * micro-batch — one data batch, structurally (eventsStream stages
-    * exactly one symlink; a multi-file source would need a
-    * disorder-covering delay like streamRangeJoin's, and a different
-    * oracle, since the emission rule above is watermark-dependent). */
+    * The 0-second watermark is safe here because the source sets no
+    * per-trigger file cap, so the whole table — one file or a directory
+    * of parts — arrives as ONE data batch, structurally (a multi-batch
+    * source would need a disorder-covering delay like streamRangeJoin's,
+    * and a different oracle, since the emission rule above is
+    * watermark-dependent). */
   def streamSessions(spark: org.apache.spark.sql.SparkSession,
                      dir: String): DataFrame = {
     import spark.implicits._
@@ -205,7 +205,7 @@ object Streaming {
   val SplitFiles = 4
 
   /** The sessionizer under MULTI-BATCH arrival — the stress streamSessions
-    * structurally avoids (its landing dir is one file). The source is the
+    * structurally avoids (its source is one data batch). The source is the
     * events table split into `SplitFiles` chronological time-range files
     * (one micro-batch each), and the watermark is DISORDER-COVERING
     * (31 days ≥ the data's span), so no event is ever late regardless of
@@ -223,7 +223,7 @@ object Streaming {
   def streamSessionsMulti(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
     import spark.implicits._
-    val events = eventsStreamSplit(spark, dir, SplitFiles)
+    val events = eventsStream(spark, dir, SplitFiles)
       .select("ts", "user_id", "event_type", "value")
       .as[Event]
     runToMemory(
@@ -245,8 +245,8 @@ object Streaming {
     * CONSTANT size per user, the streaming analogue of the batch
     * operator's one-timestamp-per-step design. Each micro-batch sorts its
     * own group slice by event time (intra-batch disorder) and folds the
-    * greedy update; chronological micro-batches (the split landing) keep
-    * the fold equal to the batch greedy, which [[graft.PropertySpec]]
+    * greedy update; chronological micro-batches (the range-split source)
+    * keep the fold equal to the batch greedy, which [[graft.PropertySpec]]
     * proves equal to the exhaustive witness search. Update mode emits the
     * user's current step count each batch; the last emission per user is
     * the final funnel position (monotone — later batches can only extend). */
@@ -284,7 +284,7 @@ object Streaming {
                    dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType}
     import spark.implicits._
-    val events = eventsStreamSplit(spark, dir, SplitFiles)
+    val events = eventsStream(spark, dir, SplitFiles)
       .select("ts", "user_id", "event_type", "value")
       .as[Event]
     val sink = runToMemory(funnelStream(events).toDF(),
@@ -366,167 +366,66 @@ object Streaming {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Stage a table file into a landing directory (the file-stream source
-    * only accepts directories, as in production). Keyed by the full
-    * sanitized dataset path — not a hash, collisions would silently stream
-    * the wrong table — and the symlink target is verified on every call.
-    * Concurrency-safe: two JVMs (bench + verify run side by side in dev)
-    * can race past the NOFOLLOW existence check, so a concurrent
-    * creator's FileAlreadyExistsException is benign — re-verify and
-    * proceed. */
-  private def stageSymlink(dir: String, fileName: String,
-                           prefix: String): String = {
-    val target = java.nio.file.Paths.get(s"$dir/$fileName")
-    // the landing link stands for ONE file: a directory-form dataset
-    // (what a Spark write produces) would be one entry the file-stream
-    // source skips, streaming 0 rows with no error
-    require(java.nio.file.Files.isRegularFile(target),
-      s"graft: streaming source $target is not a single parquet file " +
-        "(a directory-form dataset would stream 0 rows)")
-    val landing = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      prefix + graft.sources.CsvIO.pathKey(dir))
-    java.nio.file.Files.createDirectories(landing)
-    val link = landing.resolve(fileName)
-    if (java.nio.file.Files.isSymbolicLink(link) &&
-        java.nio.file.Files.readSymbolicLink(link) != target)
-      java.nio.file.Files.delete(link)
-    if (!java.nio.file.Files.exists(link,
-        java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      try java.nio.file.Files.createSymbolicLink(link, target)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // a concurrent JVM won the race; its link must point where ours
-          // would have — anything else is a real corruption, fail loudly
-          require(java.nio.file.Files.isSymbolicLink(link) &&
-            java.nio.file.Files.readSymbolicLink(link) == target,
-            s"landing link $link exists but does not point at $target")
-      }
-    }
-    landing.toString
+  /** readStream over `table` of `dir` where it lies — the ONE copy of
+    * the source wiring every streaming run shares. The path is a
+    * one-entry Hadoop glob, `dir/{table.parquet}`: the file-stream source
+    * rejects a plain file path, and a directory path would stream every
+    * table beside this one. Through the glob a single parquet file and a
+    * Spark-written directory of part files both stream whole, in one
+    * micro-batch. The schema is read from the table's footer first, so a
+    * missing or empty table fails here, before the stream starts.
+    *
+    * `files > 1` streams a copy of the table range-split on `ts` into
+    * that many files with ascending mtimes, and the source (oldest mtime
+    * first, `maxFilesPerTrigger=1`) replays them as `files` chronological
+    * micro-batches — the multi-batch arrival a continuous deployment
+    * sees. */
+  private def fileStream(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, table: String,
+                         files: Int = 1): DataFrame = {
+    val schema = graft.Tables.parquet(spark, s"$dir/$table.parquet").schema
+    val root = if (files == 1) dir else splitCopy(spark, dir, table, files)
+    spark.readStream.schema(schema)
+      .options(if (files == 1) Map.empty[String, String]
+        else Map("maxFilesPerTrigger" -> "1"))
+      .parquet(s"${graft.Tables.literal(root)}/{$table.parquet}")
   }
 
-  private def stageLanding(dir: String): String =
-    stageSymlink(dir, "events.parquet", "graft_stream_src_")
-
-  /** readStream over the staged events parquet with `ts` normalized via
-    * `Tables.withEventTs` — the ONE copy of the source wiring every
-    * streaming run shares (a change to the ts handling or the landing
-    * staging must happen here, nowhere else). */
+  /** The events stream with `ts` normalized via `Tables.withEventTs`. */
   private def eventsStream(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): DataFrame = {
-    val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
-    graft.Tables.withEventTs(
-      spark.readStream.schema(schema).parquet(stageLanding(dir)))
-  }
+                           dir: String, files: Int = 1): DataFrame =
+    graft.Tables.withEventTs(fileStream(spark, dir, "events", files))
 
-  /** Stage the events table as `n` TIME-RANGE-SPLIT parquet files with
-    * strictly increasing modification times: `repartitionByRange(ts)`
-    * makes file k's max ts ≤ file k+1's min ts, and the file-stream
-    * source (oldest-mtime first, `maxFilesPerTrigger=1`) then replays
-    * them as n chronological micro-batches — the multi-batch arrival
-    * shape a continuous deployment actually sees. */
-  private def stageLandingSplit(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, n: Int): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // Key the cached staging by the source's path AND its (size, mtime):
-    // a staged copy of testdata regenerated in place with different rows
-    // can never be replayed against a mismatched source.
-    val src = Paths.get(s"$dir/events.parquet")
-    val srcTag = s"${Files.size(src)}_${
-      Files.getLastModifiedTime(src).toMillis}"
-    val landing = Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_stream_split${n}_${srcTag}_" +
-        graft.sources.CsvIO.pathKey(dir))
-    val done = landing.resolve("_SPLIT_DONE")
+  private val splitLock = new Object
+
+  /** Stage `table` as `n` TIME-RANGE-SPLIT parquet files with strictly
+    * increasing modification times: `repartitionByRange(ts)` makes file
+    * k's max ts ≤ file k+1's min ts. Staged once per process into its
+    * scratch space (removed at exit), under a lock so that concurrent
+    * streams of one process never write the same copy; the `_SPLIT_DONE`
+    * marker is made last, so a staging that failed part-way is redone. */
+  private def splitCopy(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, table: String, n: Int): String =
+      splitLock.synchronized {
+    import java.nio.file.{Files, Paths}
+    val root = graft.sources.CsvIO.scratch(s"stream_${table}_split$n", dir)
+    val done = Paths.get(root, "_SPLIT_DONE")
     if (!Files.exists(done)) {
-      // Stage into a JVM-unique temp dir, then publish with ONE atomic
-      // rename: two JVMs (bench + verify side by side) can both decide to
-      // stage, but neither can ever observe — or clobber — the other's
-      // half-written landing. The _SPLIT_DONE marker is created INSIDE
-      // the temp dir, so a published landing is complete by construction.
-      val tmp = Paths.get(landing.toString + ".tmp." +
-        java.lang.ProcessHandle.current().pid())
-      graft.Tables.parquet(spark, src.toString)
+      val out = s"$root/$table.parquet"
+      graft.Tables.parquet(spark, s"$dir/$table.parquet")
         .repartitionByRange(n, col("ts"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val listing = Files.list(tmp)
-      try {
-        val parts = listing.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-"))
-          .toSeq.sortBy(_.getFileName.toString) // part index = range index
-        parts.zipWithIndex.foreach { case (p, i) =>
+        .write.mode("overwrite").parquet(out)
+      new java.io.File(out).listFiles().map(_.toPath)
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .sortBy(_.getFileName.toString) // part index = range index
+        .zipWithIndex.foreach { case (p, i) =>
           Files.setLastModifiedTime(p,
             java.nio.file.attribute.FileTime.fromMillis(
               1600000000000L + i * 60000L))
         }
-      } finally listing.close()
-      Files.createFile(tmp.resolve("_SPLIT_DONE"))
-      // a marker-less landing can only be pre-fix-era or crash residue
-      // (published dirs always carry the marker) — clear it, then race
-      // for the rename; losing the race means a complete landing exists
-      if (Files.exists(landing) && !Files.exists(done))
-        deleteTree(landing)
-      try Files.move(tmp, landing, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          require(Files.exists(done),
-            s"landing $landing exists without its completion marker")
-          deleteTree(tmp)
-      }
+      Files.createFile(done)
     }
-    landing.toString
-  }
-
-  /** Depth-first recursive delete (children before parents), tolerant of
-    * a CONCURRENT deleter: two JVMs (bench + verify side by side) can both
-    * enter the marker-less-residue branch and delete the same tree, so
-    * entries may vanish between the walk and the delete —
-    * Files.walk/deleteIfExists then throw a FileSystemException
-    * (NoSuchFile, DirectoryNotEmpty, ...), either directly or wrapped in
-    * UncheckedIOException by the walk stream. Those races all mean
-    * "someone else is emptying this tree"; retry a bounded number of
-    * times (same rule wrapped or not) and stop once the root is gone. */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      try {
-        if (java.nio.file.Files.exists(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.sorted(java.util.Comparator.reverseOrder()).iterator()
-              .asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally walk.close()
-        }
-        done = true
-      } catch {
-        // One rule for both shapes (NoSuchFile/DirectoryNotEmpty are
-        // FileSystemException subclasses): a filesystem race retries
-        // bounded whether Files threw it directly or wrapped it in
-        // UncheckedIOException — then rethrows, so nothing is swallowed.
-        case e: java.nio.file.FileSystemException =>
-          if (attempt >= 5) throw e
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.FileSystemException] =>
-          if (attempt >= 5) throw e
-      }
-    }
-  }
-
-  /** The split-landing twin of `eventsStream`: n time-ordered files, one
-    * per micro-batch. */
-  private def eventsStreamSplit(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, n: Int): DataFrame = {
-    val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
-    graft.Tables.withEventTs(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageLandingSplit(spark, dir, n)))
+    root
   }
 
   /** State-store sizing knob: streaming state lives in ONE store instance
@@ -579,13 +478,6 @@ object Streaming {
       df.sparkSession.table(name)
     }
 
-  /** Stage the documents table into its own landing directory (separate
-    * from the events landing — a file-stream source reads every file in
-    * its directory, so mixing tables would cross-feed schemas). Same
-    * symlink + verification + race discipline as stageLanding. */
-  private def stageDocsLanding(dir: String): String =
-    stageSymlink(dir, "documents.parquet", "graft_stream_docsrc_")
-
   /** The ingest-side curation gate executed as a REAL streaming run:
     * documents arrive as a file stream and the curate-chain's first two
     * stages — language ID (token_profile) and the repetition filter
@@ -598,9 +490,7 @@ object Streaming {
     * predicate — streaming execution itself passes the hash gate. */
   def streamCurate(spark: org.apache.spark.sql.SparkSession,
                    dir: String): DataFrame = {
-    val schema = graft.Tables.parquet(spark, s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .parquet(stageDocsLanding(dir))
+    val docs = fileStream(spark, dir, "documents")
       .withColumn("nt", regexp_replace(lower(col("text")), "\\s+", " "))
     val gated = docs
       .withColumn("tp", expr(
@@ -750,9 +640,9 @@ object Streaming {
     * too large only costs state. */
   def streamRangeJoin(spark: org.apache.spark.sql.SparkSession,
                       dir: String, delay: String = "31 days"): DataFrame = {
-    // one source wiring (schema probe + landing staging), two branches.
+    // one source wiring (schema probe + file stream), two branches.
     // With a 0-second watermark, correctness would silently depend on the
-    // landing dir arriving as ONE micro-batch — if the source ever split,
+    // table arriving as ONE micro-batch — if the source ever split,
     // out-of-time-order events in later batches would fall behind the
     // watermark and matching pairs would be dropped. Trigger.AvailableNow
     // bounds the run, so the wide delay costs state (both sides
@@ -765,7 +655,7 @@ object Streaming {
   /** The join shape of [[streamRangeJoin]] over a caller-supplied event
     * source — the *Of delegation variant that lets specs drive
     * MemoryStream waves through the PRODUCTION plan (watermark-driven
-    * state eviction is unobservable on the single-batch file landing:
+    * state eviction is unobservable on the single-batch file source:
     * AvailableNow ends before any second watermark update). `src` needs
     * (ts, user_id, event_type, event_id). */
   def streamRangeJoinOf(src: DataFrame, delay: String): DataFrame = {

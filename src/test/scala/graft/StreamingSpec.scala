@@ -139,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("multi-batch sessionizer: split source really batches; finals withheld") {
-    // the spec that fails if someone silently reverts the split landing to
+    // the spec that fails if someone silently reverts the split source to
     // the one-file assumption: the run must execute >1 DATA micro-batch
     val (out, work) = Work.measure(spark)(
       SparkEntry.queries("q_stream_sessions_multi")(spark, sf).collect())
@@ -242,7 +242,7 @@ class StreamingSpec extends AnyFunSuite {
     // The 100 TB claim behind q_stream_range's 16 MB StateBytes row is
     // not "state is big but bounded" — it is that buffered rows are
     // REMOVED once the opposite watermark passes them, so state tracks
-    // rate × horizon, not stream length. The AvailableNow file landing
+    // rate × horizon, not stream length. The AvailableNow file source
     // can never show that (one batch, one watermark update), so this
     // drives MemoryStream waves through the production join shape
     // (streamRangeJoinOf) with a 1-hour delay and reads state rows from
@@ -477,23 +477,65 @@ class StreamingSpec extends AnyFunSuite {
     assert(work.runs.last.dataBatches >= 1)
   }
 
-  test("a directory-form documents.parquet fails the stream loudly, " +
-      "naming the path, instead of streaming 0 rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirform")
-    try {
-      // a Spark write makes documents.parquet a DIRECTORY of part files
-      spark.read.parquet(s"$sf/documents.parquet").limit(20)
-        .write.parquet(s"$dir/documents.parquet")
-      val e = intercept[IllegalArgumentException] {
-        Streaming.streamCurate(spark, dir.toString)
+  /** `f` over a fresh temp directory whose name ends in `suffix`,
+    * deleted afterwards. */
+  private def withTempDir[T](suffix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_" + suffix)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    try f(dir.toString) finally rm(dir.toFile)
+  }
+
+  private def rows(q: String, dir: String) =
+    SparkEntry.queries(q)(spark, dir).collect().toSeq
+
+  test("directory-form tables stream in place: the same rows as the " +
+      "single files in one data batch, and the split source still batches") {
+    withTempDir("dirform") { dir =>
+      // a Spark write makes each table a DIRECTORY of part files
+      Seq("events", "documents").foreach { t =>
+        Tables.parquet(spark, s"$sf/$t.parquet").repartition(3)
+          .write.parquet(s"$dir/$t.parquet")
+        assert(new java.io.File(s"$dir/$t.parquet").list()
+          .count(_.startsWith("part-")) === 3, t)
       }
-      assert(e.getMessage.contains("graft:") &&
-        e.getMessage.contains(s"$dir/documents.parquet"), e.getMessage)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir.toFile)
+      Seq("q_stream_tumbling", "q_stream_sessions", "q_stream_curate")
+        .foreach { q =>
+          val (got, work) = Work.measure(spark)(rows(q, dir))
+          assert(got.nonEmpty && got === rows(q, sf), q)
+          assert(work.runs.last.dataBatches === 1, q)
+        }
+      val (_, multi) = Work.measure(spark)(
+        rows("q_stream_sessions_multi", dir))
+      assert(multi.runs.last.dataBatches >= 2,
+        s"got ${multi.runs.last.dataBatches} data batches")
+    }
+  }
+
+  test("a directory name with glob metacharacters streams literally") {
+    withTempDir("g[1]{a,b}*?") { dir =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf/events.parquet"),
+        java.nio.file.Paths.get(s"$dir/events.parquet"))
+      val got = rows("q_stream_tumbling", dir)
+      assert(got.nonEmpty && got === rows("q_stream_tumbling", sf))
+    }
+  }
+
+  test("two threads stage one split source once: both multi-batch runs " +
+      "return their single-thread answers") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val qs = Seq("q_stream_sessions_multi", "q_stream_funnel")
+    val expect = qs.map(rows(_, sf))
+    withTempDir("split") { dir =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf/events.parquet"),
+        java.nio.file.Paths.get(s"$dir/events.parquet"))
+      val runs = qs.map(q => Future(rows(q, dir)))
+      assert(runs.map(Await.result(_, 5.minutes)) === expect)
     }
   }
 

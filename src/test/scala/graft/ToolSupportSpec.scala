@@ -161,6 +161,22 @@ class ToolSupportSpec extends AnyFunSuite {
     assert(mainSites("localCheckpoint(").map(_._1) === Seq("Materialize.scala"))
   }
 
+  test("src/main opens streams in one place: Streaming.fileStream") {
+    // one source: the glob escaping, the footer schema and the
+    // one-batch-per-table rule hold for every stream; a symlinked landing
+    // stands for one file, so a directory-form table streamed 0 rows
+    val sites = mainSites(".readStream")
+    assert(sites.nonEmpty)
+    sites.foreach { case (file, src, at) =>
+      val start = src.indexOf("private def fileStream(")
+      val end = src.indexOf("\n  }\n", start)
+      assert(file == "Streaming.scala" && start >= 0 && at > start &&
+        at < end, s".readStream outside Streaming.fileStream in $file " +
+        s"at offset $at")
+    }
+    assert(mainSites("createSymbolicLink").isEmpty)
+  }
+
   test("onlyFilter rejects unknown names instead of running a subset") {
     // the env var can't be set from here portably; exercise the validation
     // path by checking the full-map fallthrough and the require in
